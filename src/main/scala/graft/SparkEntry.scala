@@ -13,6 +13,7 @@ import graft.text.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the training-data-pipeline operators), each with an
@@ -49,13 +50,19 @@ object SparkEntry {
     *    no raw long twin is needed.
     * NTZ inference is disabled for the read so a µs column reads as
     * session-tz TimestampType either way; with the UTC session pin this is
-    * value-identical to DuckDB's naive read of the same file. */
+    * value-identical to DuckDB's naive read of the same file.
+    *
+    * Schema inference (a Spark job that reads parquet footers) runs once
+    * per session per file listing: [[tableSchema]] keeps the inferred
+    * schema in a per-session catalog, and every call reads with it as an
+    * explicit schema. The data files are still scanned by every query;
+    * only the footer job is skipped. */
   private[graft] def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val path = s"$dir/$name.parquet"
-    val df = s.read.parquet(path)
+    val df = s.read.schema(tableSchema(s, path)).parquet(path)
     if (name == "events") df.schema("ts").dataType match {
       case LongType =>
         df.withColumnRenamed("ts", "ts_ns_raw")
@@ -74,6 +81,31 @@ object SparkEntry {
       case other => throw new IllegalStateException(
         s"events.ts read as unsupported type $other — extend SparkEntry.tbl")
     } else df
+  }
+
+  /** Per-session schema catalog: table path → (listing fingerprint,
+    * inferred schema). Weak keys, so a session's entries go with it. */
+  private val schemaCatalog = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]]()
+
+  /** The schema `s.read.parquet(path)` infers, inferred once per session
+    * while the listing of `path` — its sorted (name, length, modification
+    * time) entries — stays the same. Rewriting the file or the table
+    * directory changes the listing, and the next call infers again. */
+  private[graft] def tableSchema(s: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fingerprint = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
+    val tables = schemaCatalog.synchronized {
+      schemaCatalog.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    Option(tables.get(path)).collect { case (fp, schema) if fp == fingerprint => schema }
+      .getOrElse {
+        val schema = s.read.parquet(path).schema
+        tables.put(path, (fingerprint, schema))
+        schema
+      }
   }
 
   /** events as a TimeseriesFrame: time = ts, tie-break = event_id; adds an
@@ -640,8 +672,7 @@ object SparkEntry {
     }),
     "q26_acf" -> ((s, dir) => {
       val t = ev(s, dir)
-      val n = t.df.count()
-      val vec = Correlation.acfVector(t, "value", maxLag = 48)
+      val (vec, n) = Correlation.acfVectorWithCount(t, "value", maxLag = 48)
       // Bartlett 95% confint columns (statsmodels acf(alpha=.05)); the
       // oracle replays the closed form over its own ACF CTE
       val ci = Correlation.acfConfint(vec, n, 0.05)

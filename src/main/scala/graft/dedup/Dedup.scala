@@ -675,8 +675,8 @@ object Dedup {
           // identical to the old distinct + inner using-join (sigs ids
           // are unique; a semi join cannot duplicate), but the refIds
           // distinct exchange, its checkpoint, and its count() are all
-          // gone. The broadcast stays id-only at the documented 8 B per
-          // CANDIDATE budget; the size-conditional attach guard now uses
+          // gone. The ref-id list is broadcast only under the budget
+          // (see pruneRefSigs); the size-conditional attach guard uses
           // the pair count (≥ distinct refs), which errs toward the
           // driver-safe shuffle join.
           val (pairsAll, nPairs) = org.apache.spark.sql.graftbridge.Bridge
@@ -685,10 +685,8 @@ object Dedup {
                 .join(index.banded.select(col("bucket"), col("id").as("id_ref")),
                   Seq("bucket"))
                 .select(col("id_new"), col("id_ref")).distinct())
-          val prunedRef = index.sigs.select(col("id").as("id_ref"),
-            col("sig").as("sig_r"))
-            .join(broadcast(pairsAll.select(col("id_ref"))),
-              Seq("id_ref"), "left_semi")
+          val prunedRef = pruneRefSigs(index, pairsAll, nPairs,
+            broadcastRefSigsMaxBytes)
           val refSigs =
             if (nPairs * (24L + 4L * index.numHashes) <= broadcastRefSigsMaxBytes)
               broadcast(prunedRef)
@@ -753,6 +751,18 @@ object Dedup {
     * toward the scratch-bounded barrier. */
   private val ScreenScratchBytesPerDoc = 8L << 10
 
+  /** The index sigs pruned to the candidate pairs' ref ids by a LEFT SEMI
+    * join (`id_ref`, `sig_r`). The id list (8 B per pair) is broadcast
+    * only while `nPairs` × 8 B fits `maxBytes`; past that it stays a plain
+    * semi join, so a flood of candidate pairs never has to fit the driver. */
+  private def pruneRefSigs(index: MinhashIndex, pairs: DataFrame,
+      nPairs: Long, maxBytes: Long): DataFrame = {
+    val ids = pairs.select(col("id_ref"))
+    index.sigs.select(col("id").as("id_ref"), col("sig").as("sig_r"))
+      .join(if (nPairs * 8L <= maxBytes) broadcast(ids) else ids,
+        Seq("id_ref"), "left_semi")
+  }
+
   /** One screen over already-signed batch docs — the body shared by the
     * unchunked path (flood cap computed here, over this frame's own
     * banding) and the chunked slices (cap precomputed over the FULL
@@ -808,13 +818,11 @@ object Dedup {
     // r16: LEFT SEMI against the raw candidate ref ids — identical rows
     // to the old distinct + inner using-join (sigs ids are unique; a
     // semi join cannot duplicate), with the refIds distinct exchange,
-    // its checkpoint, and its count() action all removed. The broadcast
-    // stays id-only at the documented 8 B/candidate budget; the attach
-    // guard below keys on the PAIR count (≥ distinct refs), erring
-    // toward the driver-safe shuffle join.
-    val prunedRef = index.sigs.select(col("id").as("id_ref"),
-      col("sig").as("sig_r"))
-      .join(broadcast(pairs.select(col("id_ref"))), Seq("id_ref"), "left_semi")
+    // its checkpoint, and its count() action all removed. The ref-id
+    // list is broadcast only under the budget (see pruneRefSigs); the
+    // attach guard below keys on the PAIR count (≥ distinct refs),
+    // erring toward the driver-safe shuffle join.
+    val prunedRef = pruneRefSigs(index, pairs, nPairs, broadcastRefSigsMaxBytes)
     val refSigs = {
       val refSigBytes = nPairs * (24L + 4L * index.numHashes)
       if (refSigBytes <= broadcastRefSigsMaxBytes) broadcast(prunedRef)

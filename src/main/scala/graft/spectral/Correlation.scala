@@ -29,10 +29,18 @@ object Correlation {
     * ([[acfVectorWindow]], kept as the differential-test twin), so results
     * are bit-identical, but without WindowExec's K separate lag frames
     * (~3× faster at 600k×48). */
-  def acfVector(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] = {
+  def acfVector(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] =
+    acfVectorWithCount(tsf, xCol, maxLag)._1
+
+  /** [[acfVector]] plus the frame's row count, nulls included (the `n` of
+    * [[acfConfint]]). The count rides the mean aggregate the ACF already
+    * runs, so it costs no job of its own. */
+  def acfVectorWithCount(tsf: TimeseriesFrame, xCol: String,
+      maxLag: Int): (Array[Double], Long) = {
     val sp = tsf.df.sparkSession
     import sp.implicits._
-    val mu = tsf.df.agg(avg(col(xCol).cast("double"))).head().getDouble(0)
+    val stats = tsf.df.agg(avg(col(xCol).cast("double")), count(lit(1))).head()
+    val mu = stats.getDouble(0)
     val sums = tsf.df
       .orderBy(tsf.orderCols: _*)
       .select(col(xCol).cast("double"))
@@ -67,7 +75,7 @@ object Correlation {
         acc
       }
     val denom = sums(0)
-    Array(1.0) ++ (1 to maxLag).map(k => sums(k) / denom)
+    (Array(1.0) ++ (1 to maxLag).map(k => sums(k) / denom), stats.getLong(1))
   }
 
   /** The K-lag-columns window formulation of [[acfVector]] — the original

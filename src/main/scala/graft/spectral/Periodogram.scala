@@ -127,7 +127,7 @@ object Periodogram {
     * expressions over the (small) spectrum frame. With `keys` nonempty the
     * windows partition per series, so every series scales and peak-picks
     * independently and in parallel. */
-  private def scaleAndPeaks(spec: DataFrame, order: Int,
+  private[spectral] def scaleAndPeaks(spec: DataFrame, order: Int,
       keys: Seq[String] = Nil): DataFrame = {
     val keyCols = keys.map(col)
     val wAll =
@@ -616,42 +616,52 @@ object Periodogram {
       while (i < m * 5) { tot(i) += p(i); i += 1 }
     }
     // tau-shifted power per ω — 200 values, computed on the driver
-    val specRows: IndexedSeq[(Double, Double)] = (0 until m).map { j =>
-      val o = j * 5
-      val (xc, xs, cc, ss, cs) = (tot(o), tot(o + 1), tot(o + 2), tot(o + 3), tot(o + 4))
-      val tau2 = math.atan2(2.0 * cs, cc - ss)
-      val (cT, sT) = (math.cos(tau2 / 2), math.sin(tau2 / 2))
-      val xcTau = cT * xc + sT * xs
-      val xsTau = cT * xs - sT * xc
-      val ccTau = cT * cT * cc + 2.0 * cT * sT * cs + sT * sT * ss
-      val ssTau = sT * sT * cc - 2.0 * cT * sT * cs + cT * cT * ss
-      val power = (xcTau * xcTau / ccTau + xsTau * xsTau / ssTau) / 2.0
-      Tuple2(2.0 * math.Pi / omegas(j), power * (2.0 / (n * variance)))
-    }
-    // r16: scale + 5-neighborhood peak-pick on the driver. The spectrum
-    // is a FIXED nPeriods-row frame that was already driver-resident
-    // (the fold's collect above), yet [[scaleAndPeaks]] re-shipped it
-    // through a LocalTableScan + SinglePartition exchange + two window
-    // passes — ~3 driver jobs per action at ~30 ms each, the dominant
-    // q30 cost class at gate scale. This loop evaluates the IDENTICAL
-    // expressions on the identical doubles: same (p−min)/(max−min)
-    // scaling per row, same strict > against the ≤5 lag/lead neighbors
-    // with out-of-range neighbors admitted (the window twin's isNull
-    // disjunct), same ascending-period order (stable sort ≡ the window
-    // sort's tie behavior). Degenerate all-NaN pgram (max == min) yields
-    // no peaks on both paths. Bounded driver work: nPeriods rows always.
+    val specRows = (0 until m).map(j => Tuple2(2.0 * math.Pi / omegas(j),
+      lombPower(tot.slice(j * 5, j * 5 + 5), n, variance)))
+    spark.createDataFrame(driverPeaks(specRows)).toDF("period", "pgram")
+  }
+
+  /** Normalized tau-shifted Lomb–Scargle power at one ω from its five sums
+    * (Σx·cos, Σx·sin, Σcos², Σsin², Σsin·cos): 0/0 = NaN when ccTau or
+    * ssTau is 0 with a zero numerator, or when the variance is 0. */
+  private[spectral] def lombPower(sums: Array[Double], n: Long,
+      variance: Double): Double = {
+    val Array(xc, xs, cc, ss, cs) = sums
+    val tau2 = math.atan2(2.0 * cs, cc - ss)
+    val (cT, sT) = (math.cos(tau2 / 2), math.sin(tau2 / 2))
+    val xcTau = cT * xc + sT * xs
+    val xsTau = cT * xs - sT * xc
+    val ccTau = cT * cT * cc + 2.0 * cT * sT * cs + sT * sT * ss
+    val ssTau = sT * sT * cc - 2.0 * cT * sT * cs + cT * cT * ss
+    val power = (xcTau * xcTau / ccTau + xsTau * xsTau / ssTau) / 2.0
+    power * (2.0 / (n * variance))
+  }
+
+  /** [[scaleAndPeaks]] (order 5) on a driver-resident (period, power)
+    * spectrum. r16: the spectrum is a FIXED nPeriods-row frame already on
+    * the driver, yet the window twin re-shipped it through a
+    * LocalTableScan + SinglePartition exchange + two window passes — ~3
+    * driver jobs per action at ~30 ms each, the dominant q30 cost class at
+    * gate scale. This loop evaluates the IDENTICAL expressions on the
+    * identical doubles: same (p−min)/(max−min) scaling per row, same
+    * strict > against the ≤5 lag/lead neighbors with out-of-range
+    * neighbors admitted (the window twin's isNull disjunct), same
+    * ascending-period order (stable sort ≡ the window sort's tie
+    * behavior). A NaN power makes max (and so every scaled value) NaN, as
+    * SQL max and numpy max do, so a partly or fully NaN spectrum yields no
+    * peaks on both paths. */
+  private[spectral] def driverPeaks(
+      specRows: Seq[(Double, Double)]): Seq[(Double, Double)] = {
     var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-    specRows.foreach { case (_, p) => if (p < mn) mn = p; if (p > mx) mx = p }
+    specRows.foreach { case (_, p) => mn = math.min(mn, p); mx = math.max(mx, p) }
     val asc = specRows.sortBy(_._1)
     val g = asc.map { case (_, p) => (p - mn) / (mx - mn) }.toArray
     val nR = g.length
-    val picked = (0 until nR).filter { i =>
+    (0 until nR).filter { i =>
       (1 to 5).forall { k =>
         (i - k < 0 || g(i) > g(i - k)) && (i + k >= nR || g(i) > g(i + k))
       } && i - 1 >= 0 && i + 1 < nR
-    }
-    spark.createDataFrame(picked.map(i => Tuple2(asc(i)._1, g(i))))
-      .toDF("period", "pgram")
+    }.map(i => (asc(i)._1, g(i)))
   }
 
 }

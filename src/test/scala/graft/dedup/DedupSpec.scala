@@ -1051,11 +1051,10 @@ class DedupSpec extends SparkSpec {
       .getAs[Int]("sig_format") == 2)
   }
 
-  test("minhashSearch rescore: pruned ref sigs broadcast below threshold (AQE on)") {
+  /** Small index + batch with guaranteed candidates for the rescore
+    * broadcast specs. */
+  private def screenFixture(): (Dedup.MinhashIndex, org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
-    // small index + batch with guaranteed candidates: the ref-sig attach
-    // join must plan as a broadcast join (no shuffle of the pruned ref
-    // sigs) when the candidate ref slice is under the size cap...
     val docs = (0L until 40L).map { i =>
       (i, s"family ${i % 4} shares this long sentence body with trailing " +
         s"words common to the group variant ${i % 7}")
@@ -1066,6 +1065,14 @@ class DedupSpec extends SparkSpec {
       (i, s"family ${i % 4} shares this long sentence body with trailing " +
         s"words common to the group variant ${i % 7} changed")
     }.toDF("doc_id", "text")
+    (idx, batch)
+  }
+
+  test("minhashSearch rescore: pruned ref sigs broadcast below threshold (AQE on)") {
+    // the ref-sig attach join must plan as a broadcast join (no shuffle of
+    // the pruned ref sigs) when the candidate ref slice is under the size
+    // cap...
+    val (idx, batch) = screenFixture()
     def joinKinds(res: org.apache.spark.sql.DataFrame): Seq[String] = {
       res.collect() // finalize THIS dataset's adaptive plan
       val nodes = org.apache.spark.sql.graftbridge.Bridge
@@ -1083,9 +1090,9 @@ class DedupSpec extends SparkSpec {
     }
     // disable AQE's own size-based BHJ conversion so the plan shape below
     // is OUR broadcast hint, not machine weather on tiny test data. The
-    // ref-id PRUNE join is an explicitly-hinted broadcast on both paths,
-    // so the size-conditional attach join shows up as ONE MORE bhj under
-    // the cap than over it.
+    // ref-id PRUNE join is hinted broadcast under the same cap, so the
+    // prune and the size-conditional attach join show up as TWO MORE bhj
+    // under the cap than over it.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val under = Dedup.minhashSearch(idx, batch, "doc_id", "text")
@@ -1096,7 +1103,7 @@ class DedupSpec extends SparkSpec {
       val over = Dedup.minhashSearch(idx, batch, "doc_id", "text",
         broadcastRefSigsMaxBytes = 0L)
       val kindsOver = joinKinds(over)
-      assert(kindsUnder.count(_ == "bhj") == kindsOver.count(_ == "bhj") + 1,
+      assert(kindsUnder.count(_ == "bhj") == kindsOver.count(_ == "bhj") + 2,
         s"attach join not size-conditionally broadcast: " +
           s"under=$kindsUnder over=$kindsOver")
       assert(kindsOver.exists(k => k == "smj" || k == "shj"),
@@ -1105,6 +1112,38 @@ class DedupSpec extends SparkSpec {
       assert(under.collect().map(_.toString).sorted.toSeq ==
         over.collect().map(_.toString).sorted.toSeq)
       assert(under.collect().nonEmpty)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("minhashSearch ref-id prune: a tiny budget keeps the semi join unbroadcast, same rows") {
+    val (idx, batch) = screenFixture()
+    /** Final-plan broadcasts whose payload is the bare `id_ref` list. */
+    def refIdBroadcasts(res: org.apache.spark.sql.DataFrame): Int = {
+      res.collect() // finalize THIS dataset's adaptive plan
+      org.apache.spark.sql.graftbridge.Bridge
+        .allExecutedNodes(res.queryExecution.executedPlan)
+        .count {
+          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+            b.output.map(_.name) == Seq("id_ref")
+          case _ => false
+        }
+    }
+    def rows(res: org.apache.spark.sql.DataFrame) =
+      res.collect().map(_.toString).sorted.toSeq
+    // only the engine's own hints may broadcast (see the test above)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      // the unchunked screen and the chunked lazy screen each prune once
+      for (chunks <- Seq(0, 2)) {
+        val roomy = Dedup.minhashSearch(idx, batch, "doc_id", "text",
+          targetScreenChunks = chunks)
+        val tiny = Dedup.minhashSearch(idx, batch, "doc_id", "text",
+          broadcastRefSigsMaxBytes = 8L, targetScreenChunks = chunks)
+        assert(refIdBroadcasts(roomy) > 0, s"chunks=$chunks: no id_ref broadcast")
+        assert(refIdBroadcasts(tiny) == 0, s"chunks=$chunks: id_ref broadcast over budget")
+        assert(rows(roomy).nonEmpty)
+        assert(rows(tiny) == rows(roomy), s"chunks=$chunks")
+      }
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }

@@ -103,6 +103,26 @@ class IngestLayoutMatrixSpec extends SparkSpec {
     }
   }
 
+  test("a layout rewritten at the same path in the same session loads as the new layout") {
+    // the schema catalog caches the first file listing's schema; the
+    // overwrite changes the listing, so tbl must infer the new layout
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout-rewrite").toString
+    val expected = (0 until n).map(i => baseUs + i * hourUs)
+    def instants(df: DataFrame) = df.select(unix_micros(col("ts")))
+      .orderBy(col("event_id")).collect().map(_.getLong(0)).toSeq
+    writeFixture("int64-nanos", dir)
+    val before = graft.SparkEntry.tbl(spark, dir, "events")
+    assert(before.columns.contains("ts_ns_raw"))
+    assert(instants(before) == expected)
+    for (l <- Seq("micros-ntz", "micros-utc")) {
+      writeFixture(l, dir)
+      val after = graft.SparkEntry.tbl(spark, dir, "events")
+      assert(after.schema("ts").dataType == TimestampType, s"$l: ${after.schema}")
+      assert(!after.columns.contains("ts_ns_raw"), l)
+      assert(instants(after) == expected, l)
+    }
+  }
+
   test("TimeSlice returns the same rows on every layout") {
     // half-open [base+2h, base+5h) in epoch seconds → events 2,3,4
     val lo = (baseUs + 2 * hourUs) / 1e6

@@ -129,6 +129,58 @@ class SpectralSpec extends SparkSpec {
     assert(math.abs(p.map(_.getDouble(1)).max - 1.0) < 1e-9)
   }
 
+  test("Lomb-Scargle peaks: ssTau = 0 at one ω gives a partly-NaN spectrum and no peaks, as the window twin") {
+    import spark.implicits._
+    // the five tau sums of an irregular series over a 40-ω grid
+    val ts = (0 until 60).map(i => i + 0.3 * math.sin(i * 1.7))
+    val xs = ts.map(t => math.sin(2 * math.Pi * t / 9.0) + 0.2 * math.cos(t))
+    val omegas = (1 to 40).map(j => 2 * math.Pi / (2.0 + 0.5 * j))
+    val sums = omegas.map { w =>
+      val cs = ts.map(t => (math.cos(w * t), math.sin(w * t)))
+      Array(xs.zip(cs).map { case (x, (c, _)) => x * c }.sum,
+        xs.zip(cs).map { case (x, (_, s)) => x * s }.sum,
+        cs.map { case (c, _) => c * c }.sum, cs.map { case (_, s) => s * s }.sum,
+        cs.map { case (c, s) => s * c }.sum)
+    }
+    val variance = { val m = xs.sum / xs.size; xs.map(x => (x - m) * (x - m)).sum / xs.size }
+    def spectrum(ss: Seq[Array[Double]]) = omegas.zip(ss).map { case (w, s) =>
+      (2 * math.Pi / w, Periodogram.lombPower(s, xs.size.toLong, variance))
+    }
+    def windowTwin(spec: Seq[(Double, Double)]) =
+      Periodogram.scaleAndPeaks(spec.toDF("period", "power"), order = 5)
+        .orderBy("period").as[(Double, Double)].collect().toSeq
+    val clean = spectrum(sums)
+    assert(clean.forall(!_._2.isNaN))
+    val cleanPeaks = Periodogram.driverPeaks(clean)
+    assert(cleanPeaks.nonEmpty)
+    assert(cleanPeaks == windowTwin(clean))
+    // every sin(ω(t−τ)) term zero at ω_20: ss = cs = 0 makes τ = 0, so
+    // ssTau = 0 and xsTau = 0 — a 0/0 power
+    val holed = sums.updated(20, Array(sums(20)(0), 0.0, sums(20)(2), 0.0, 0.0))
+    val partial = spectrum(holed)
+    assert(partial.count(_._2.isNaN) == 1)
+    assert(Periodogram.driverPeaks(partial).isEmpty)
+    assert(windowTwin(partial).isEmpty)
+  }
+
+  test("Lomb-Scargle peaks: a zero-variance series gives a NaN spectrum and no peaks") {
+    assert(Periodogram.lombPower(Array(0.0, 0.0, 3.0, 2.0, 0.5), 5L, 0.0).isNaN)
+    val df = spark.createDataFrame((0 until 40).map(i => (i + 0.25 * (i % 3), 5.0)))
+      .toDF("t", "x")
+    val tsf = TimeseriesFrame(df, Some("t"))
+    for (detrend <- Seq("constant", "linear"))
+      assert(Periodogram.lombScargle(tsf, "x", detrend = detrend).count() == 0, detrend)
+  }
+
+  test("acfVectorWithCount: n counts null rows too, the vector is acfVector's") {
+    val df = seriesDF(d(1, 3, 2) ++ Seq(NA) ++ d(5, 4, 6) ++ Seq(NA, NA) ++ d(7, 2))
+    val tsf = TimeseriesFrame(df, None, Seq("i"))
+    val (vec, n) = Correlation.acfVectorWithCount(tsf, "x", maxLag = 4)
+    assert(n == df.count())
+    assert(n == 11L)
+    assert(vec.toSeq == Correlation.acfVector(tsf, "x", maxLag = 4).toSeq)
+  }
+
   test("quadratic/cubic detrend matches numpy polyfit residuals on airpassengers") {
     // transcribed goldens: np.polyfit(arange(144), x, order) residuals
     val gold = Map(
