@@ -112,23 +112,20 @@ object TimeDelta {
     }
     val partials: Array[(Array[Double], Boolean, Boolean, Long)] =
       if (seriesKeys.isEmpty) {
-        // keyless fast path (r15): the managed range-window lag machinery
-        // cost a sampling pass, a pinned cache, a boundary-carry collect
-        // and a broadcast just to hand this aggregation consecutive
-        // diffs. One range sort + ONE mapPartitions pass now folds each
-        // partition's WITHIN-partition diffs into the same mergeable
-        // partial and ships the partition's first/last time alongside;
-        // the driver stitches the cross-partition boundary diffs into
-        // the partials with the identical fold. The delta MULTISET is
-        // exactly the old lag column's (global sort order, ties
-        // arbitrary either way), and every merged quantity is
-        // order-free (TreeSet of smallest, or-flags, associative gcd).
+        // keyless path: one range sort and the RangeScan SUMMARY job
+        // alone (no carry pass, cache or broadcast) fold each partition's
+        // WITHIN-partition diffs into the mergeable partial and ship its
+        // first/last time alongside; the driver stitches the boundary
+        // diffs in with the identical fold. The delta MULTISET is a
+        // global lag column's (ties arbitrary either way), and every
+        // merged quantity is order-free (TreeSet of smallest, or-flags,
+        // associative gcd).
         val np = math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
         val ranged = df.select(col(timeCol).cast("double").as("__t"))
           .filter(col("__t").isNotNull)
           .repartitionByRange(np, col("__t"))
           .sortWithinPartitions("__t")
-        val raw = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
+        val raw = RangeScan.summaries(ranged.rdd) { it =>
           val seen = scala.collection.mutable.TreeSet.empty[Double]
           val st = Array(false, false)
           var g = 0L
@@ -144,9 +141,8 @@ object TimeDelta {
             }
             last = t
           }
-          if (!any) Iterator.empty
-          else Iterator.single((pid, first, last, seen.toArray, st(0), st(1), g))
-        }.collect().sortBy(_._1)
+          Option.when(any)((first, last, seen.toArray, st(0), st(1), g))
+        }.flatten
         // stitch boundary diffs (last of partition i → first of partition
         // i+1) into the first non-empty partial with the same fold
         if (raw.isEmpty) Array.empty
@@ -156,14 +152,14 @@ object TimeDelta {
           var g = 0L
           var i = 1
           while (i < raw.length) {
-            val d = raw(i)._2 - raw(i - 1)._3
+            val d = raw(i)._1 - raw(i - 1)._2
             if (d != 0.0) g = foldDelta(seen, d, st, g)
             i += 1
           }
           val boundary =
             if (!st(0) && !st(1)) Array.empty[(Array[Double], Boolean, Boolean, Long)]
             else Array((seen.toArray, st(0), st(1), g))
-          raw.collect { case (_, _, _, s, hc, hn, pg) if hc || hn =>
+          raw.collect { case (_, _, s, hc, hn, pg) if hc || hn =>
             (s, hc, hn, pg)
           } ++ boundary
         }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.agg.AggRegistry
-import graft.core.TimeseriesFrame
+import graft.core.{RangeScan, TimeseriesFrame}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -250,7 +250,7 @@ object MovingTransform {
     *    sampled at window-end rows — `aggregate.py:86-92`) use a two-phase
     *    range-partitioned prefix scan: one narrow job for per-partition
     *    (sum, product) carries, then a partition-parallel fold emitting
-    *    only the sampled rows — the [[graft.ops.RangeWindow]] recipe.
+    *    only the sampled rows — a [[graft.core.RangeScan]].
     *
     * With cumulative specs the globally-indexed input backs TWO passes and
     * is persisted so both read one consistent sort (the lagColumnsManaged
@@ -337,10 +337,11 @@ object MovingTransform {
 
   /** `np.nancumsum`/`nancumprod` over the whole series, sampled at the
     * strided window-end rows (`aggregate.py:86-92`): two-phase prefix scan
-    * over the globally-indexed frame. Pass 1 collects one (sum, product)
-    * pair per (partition, column) — P·|cols| scalars; pass 2 folds each
-    * partition from its broadcast exclusive offset and emits only rows
-    * where `__gidx` lands on a window end. Identities match the NaN rules:
+    * over the globally-indexed frame ([[graft.core.RangeScan]]): the
+    * summary job collects one (sum, product) pair per (partition, column)
+    * — P·|cols| scalars; the carry pass folds each partition from its
+    * exclusive offset and emits only rows where `__gidx` lands on a
+    * window end. Identities match the NaN rules:
     * all-null prefix → 0 for sum (np.nancumsum), 1 for product. */
   private def cumulativeAtWindowEnds(
       indexed: DataFrame,
@@ -353,41 +354,30 @@ object MovingTransform {
     val proj = indexed.select(col("__gidx") +:
       cols.map(c => AggRegistry.nanToNull(col(c)).as(c)): _*)
     val nC = cols.size
-    val partials = proj.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val s = Array.fill(nC)(0.0); val p = Array.fill(nC)(1.0)
-      it.foreach { r =>
-        var k = 0
-        while (k < nC) {
-          if (!r.isNullAt(k + 1)) { val v = r.getDouble(k + 1); s(k) += v; p(k) *= v }
-          k += 1
-        }
-      }
-      Iterator.single(pid -> (s, p))
-    }.collect().toMap
-    val maxPid = if (partials.isEmpty) -1 else partials.keys.max
-    val offsets = scala.collection.mutable.Map[Int, (Array[Double], Array[Double])]()
-    var accS = Array.fill(nC)(0.0); var accP = Array.fill(nC)(1.0)
-    for (pid <- 0 to maxPid) {
-      offsets(pid) = (accS.clone(), accP.clone())
-      partials.get(pid).foreach { case (s, p) =>
-        accS = Array.tabulate(nC)(k => accS(k) + s(k))
-        accP = Array.tabulate(nC)(k => accP(k) * p(k))
+    // fold one row's non-null values into running (sum, product) arrays
+    val fold = (s: Array[Double], p: Array[Double], r: Row) => {
+      var k = 0
+      while (k < nC) {
+        if (!r.isNullAt(k + 1)) { val v = r.getDouble(k + 1); s(k) += v; p(k) *= v }
+        k += 1
       }
     }
-    val bc = proj.sparkSession.sparkContext.broadcast(offsets.toMap)
+    val rdd = proj.rdd
+    val offsets = RangeScan.summaries(rdd) { it =>
+      val s = Array.fill(nC)(0.0); val p = Array.fill(nC)(1.0)
+      it.foreach(fold(s, p, _))
+      (s, p)
+    }.scanLeft((Array.fill(nC)(0.0), Array.fill(nC)(1.0))) { case ((accS, accP), (s, p)) =>
+      (Array.tabulate(nC)(k => accS(k) + s(k)), Array.tabulate(nC)(k => accP(k) * p(k)))
+    }
     val colIdx = cols.zipWithIndex.toMap
     val outSchema = StructType(StructField("window_index", LongType) +:
       specs.map { case (c, k) => StructField(s"${c}_$k", DoubleType) })
     val w1 = width - 1L
-    val outRdd = proj.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val (s, p) = bc.value.getOrElse(pid, (Array.fill(nC)(0.0), Array.fill(nC)(1.0)))
+    val outRdd = RangeScan.withCarry(rdd, offsets) { case ((s, p), it) =>
       val runS = s.clone(); val runP = p.clone()
       it.flatMap { r =>
-        var k = 0
-        while (k < nC) {
-          if (!r.isNullAt(k + 1)) { val v = r.getDouble(k + 1); runS(k) += v; runP(k) *= v }
-          k += 1
-        }
+        fold(runS, runP, r)
         val gi = r.getLong(0)
         if (gi >= w1 && (gi - w1) % shift == 0)
           Some(Row.fromSeq(Long.box((gi - w1) / shift) +: specs.map { case (c, key) =>

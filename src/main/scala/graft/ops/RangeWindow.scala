@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.core.TimeseriesFrame
+import graft.core.{RangeScan, TimeseriesFrame}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,9 +18,12 @@ import org.apache.spark.sql.types._
   *     contiguous time slice, sorted within (`sortWithinPartitions`);
   *  2. collects each partition's LAST `width−1` rows (the boundary carry —
   *     P·(w−1) rows total, tiny by construction) in one narrow job;
-  *  3. `mapPartitions` computes the trailing-window aggregates with the
-  *     previous partition's carry rows prepended — every partition is
-  *     independent, so the whole pass is embarrassingly parallel.
+  *  3. computes the trailing-window aggregates with the previous
+  *     partitions' carry rows prepended — every partition is independent,
+  *     so the whole pass is embarrassingly parallel.
+  *
+  * Steps 2–3 are [[graft.core.RangeScan]] with the "last k rows" carry of
+  * [[trailingCarries]], shared with [[lagColumnsManaged]].
   *
   * This is the deliberate `(d) mapPartitions` case of the implementation
   * preference order: the semantics (cross-partition positional carry)
@@ -162,6 +166,22 @@ object RangeWindow {
     }
   }
 
+  /** Each partition's last `k` rows (a ring over the row references, so
+    * only those `k` are decoded), chained on the driver so partition `p`
+    * gets the last `k` decoded rows of EVERYTHING before it — short and
+    * empty partitions cannot starve the carry. */
+  private def trailingCarries[A: scala.reflect.ClassTag](rdd: RDD[Row], k: Int)(
+      decode: Row => A): Array[Array[A]] = {
+    val tails = RangeScan.summaries(rdd) { it =>
+      val ring = new Array[Row](math.max(k, 1))
+      var n = 0L
+      it.foreach { r => ring((n % ring.length).toInt) = r; n += 1 }
+      val m = math.min(n, k.toLong).toInt
+      Array.tabulate(m)(i => decode(ring(((n - m + i) % ring.length).toInt)))
+    }
+    tails.scanLeft(Array.empty[A])((acc, t) => (acc ++ t).takeRight(k))
+  }
+
   /** Range-partitioned LAG columns — the scale path for building a lag
     * design matrix over one globally ordered series (the
     * [[graft.models.Var.fitDistributed]] regression columns): appends
@@ -205,39 +225,19 @@ object RangeWindow {
     }.toArray
     val nV = getters.length
 
-    // pass 1: per-partition last `lags` row-vectors (the carry)
-    val tails: Map[Int, Array[Array[Double]]] = ranged.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val ring = Array.ofDim[Array[Double]](lags)
-        var n = 0L
-        it.foreach { r =>
-          ring((n % lags).toInt) = Array.tabulate(nV)(v => getters(v)(r))
-          n += 1
-        }
-        val k = math.min(n, lags.toLong).toInt
-        val out = Array.tabulate(k)(i => ring(((n - k + i) % lags).toInt))
-        Iterator.single(pid -> out)
-      }.collect().toMap
-    val maxPid = if (tails.isEmpty) -1 else tails.keys.max
-    val chained = scala.collection.mutable.Map[Int, Array[Array[Double]]]()
-    var acc = Array.empty[Array[Double]]
-    for (p <- 0 to maxPid) {
-      chained(p) = acc
-      acc = (acc ++ tails.getOrElse(p, Array.empty)).takeRight(lags)
-    }
-    val carry = spark.sparkContext.broadcast(chained.toMap)
+    val rdd = ranged.rdd
+    val carries = trailingCarries(rdd, lags)(r => Array.tabulate(nV)(v => getters(v)(r)))
 
-    // pass 2: ring of the previous `lags` row-vectors, carry prepended.
+    // ring of the previous `lags` row-vectors, carry prepended.
     // The carry length IS the availability signal: it holds
     // min(precedingRows, lags) rows, so `pushed >= l` after prepending it
     // is exactly "this row has >= l global predecessors" — no absolute
     // row numbering needed (ring offsets are relative).
     val outSchema = StructType(schema.fields ++ (for (l <- 1 to lags; c <- valueCols)
       yield StructField(s"__l${l}_$c", DoubleType)))
-    val outRdd = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val outRdd = RangeScan.withCarry(rdd, carries) { (pre, it) =>
       val ring = Array.ofDim[Array[Double]](lags)
       var pushed = 0L
-      val pre = carry.value.getOrElse(pid, Array.empty[Array[Double]])
       pre.foreach { v => ring((pushed % lags).toInt) = v; pushed += 1 }
       it.map { r =>
         val out = new Array[Any](r.length + lags * nV)
@@ -264,6 +264,7 @@ object RangeWindow {
       width: Int,
       numPartitions: Int): DataFrame = {
     require(aggs.forall(SupportedAggs), s"supported: $SupportedAggs")
+    require(width >= 1, s"width must be positive: $width")
     val df = tsf.df
     val orderCols = tsf.orderCols
     // NO checkpoint on the sorted frame (r16, VERDICT r15 task 7): the
@@ -282,33 +283,12 @@ object RangeWindow {
       .repartitionByRange(numPartitions, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
 
-    val spark = df.sparkSession
     val schema = ranged.schema
     val valueIdx = schema.fieldIndex(valueCol)
     val getV = typedGetter(schema(valueIdx).dataType, valueIdx)
 
-    // pass 1: per-partition tails (the carry) — P·(w−1) rows
-    val tails: Map[Int, Array[Double]] = ranged.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        val tail = new Array[Double](math.max(width - 1, 1))
-        var n = 0L
-        it.foreach { r => tail((n % (width - 1).max(1)).toInt) = getV(r); n += 1 }
-        val k = math.min(n, (width - 1).toLong).toInt
-        val out = Array.tabulate(k)(i => tail(((n - k + i) % (width - 1).max(1)).toInt))
-        Iterator.single(pid -> out)
-      }
-      .collect().toMap
-    // chain the carries on the driver so short/empty partitions still see
-    // the full width−1 preceding rows (carry(p) = last w−1 of everything
-    // before partition p)
-    val maxPid = if (tails.isEmpty) -1 else tails.keys.max
-    val chained = scala.collection.mutable.Map[Int, Array[Double]]()
-    var acc = Array.empty[Double]
-    for (p <- 0 to maxPid) {
-      chained(p) = acc
-      acc = (acc ++ tails.getOrElse(p, Array.empty)).takeRight(width - 1)
-    }
-    val carry = spark.sparkContext.broadcast(chained.toMap)
+    val rdd = ranged.rdd
+    val carries = trailingCarries(rdd, width - 1)(getV)
 
     val needMin = aggs.exists(Set("min", "span"))
     val needMax = aggs.exists(Set("max", "span"))
@@ -317,12 +297,12 @@ object RangeWindow {
     val needLog = aggs.contains("geometric")
     val aggsArr = aggs.toArray
 
-    // pass 2: per-partition sliding aggregates with prepended carry
+    // per-partition sliding aggregates with the carry pushed first
     val outSchema = StructType(schema.fields ++
       aggs.map(a => StructField(s"${valueCol}_$a", DoubleType)))
-    val outRdd = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val outRdd = RangeScan.withCarry(rdd, carries) { (pre, it) =>
       val st = new SlideState(width, needMin, needMax, needSq, needInv, needLog)
-      carry.value.getOrElse(pid, Array.empty[Double]).foreach(st.push)
+      pre.foreach(st.push)
       it.map { r =>
         st.push(getV(r))
         val out = new Array[Any](r.length + aggsArr.length)
@@ -337,6 +317,6 @@ object RangeWindow {
         Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
       }
     }
-    spark.createDataFrame(outRdd, outSchema)
+    df.sparkSession.createDataFrame(outRdd, outSchema)
   }
 }

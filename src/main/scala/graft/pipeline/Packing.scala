@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.RangeScan
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,8 +24,8 @@ import org.apache.spark.sql.types._
   * engine-portable — the DuckDB oracle replays the same floor divisions.
   *
   * Scale shape: the only global computation is the exclusive prefix sum
-  * of token counts in id order. [[packSequences]] computes it the same
-  * way `zipWithIndex` numbers rows — a parallel range sort, one tiny
+  * of token counts in id order. [[packSequences]] computes it as a
+  * [[graft.core.RangeScan]] — a parallel range sort, one tiny
   * per-partition-totals job (P scalars to the driver; the sort's shuffle
   * files are reused, data moves once), then an embarrassingly parallel
   * per-partition scan that emits ≤ ⌈tok/budget⌉+1 span rows per doc. No
@@ -73,16 +74,12 @@ object Packing {
       .select(col(idCol).cast("long"), col(tokCol).cast("long"))
       .orderBy(col(idCol))                        // parallel range sort
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    // per-partition token totals → exclusive per-partition offsets; this
-    // extra job re-reads the sort's shuffle output, not the source
-    val partTotals = base
-      .mapPartitionsWithIndex { (p, it) =>
-        Iterator.single(p -> it.foldLeft(0L)(_ + _._2))
-      }.collect().sortBy(_._1).map(_._2)
-    val offsets = partTotals.scanLeft(0L)(_ + _)
+    // per-partition token totals → exclusive per-partition offsets; the
+    // summary job re-reads the sort's shuffle output, not the source
+    val offsets = RangeScan.summaries(base)(_.foldLeft(0L)(_ + _._2)).scanLeft(0L)(_ + _)
     val b = budget // local so the closure captures a scalar, not `this`
-    val rows = base.mapPartitionsWithIndex { (p, it) =>
-      var run = offsets(p)
+    val rows = RangeScan.withCarry(base, offsets) { (offset, it) =>
+      var run = offset
       it.flatMap { case (id, tok) =>
         val start = run
         run += tok

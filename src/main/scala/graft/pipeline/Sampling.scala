@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.RangeScan
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,26 +82,6 @@ object Sampling {
       .drop("__cid", "__component")
   }
 
-  /** Deterministic global shuffle + balanced shard striping — the final
-    * layout step of a training-data build: order the corpus by
-    * `md5(id)` (a reproducible permutation, independent of input
-    * partitioning), then stripe it round-robin into `numShards` shards —
-    * `shard = rank % numShards`, `pos = rank div numShards`. Every shard
-    * gets within ±1 the same row count AND is itself a uniform sample of
-    * the corpus (it takes every numShards-th doc of the shuffled order),
-    * the property epoch-subset training relies on. Appends two columns
-    * `(shard, pos)`; rows keep all input columns. Ids must be unique
-    * (they define the permutation). Unlike the hash-carve samplers above
-    * this is NOT append-stable — ranks are global — which is why it is
-    * the last step, run once per frozen dataset.
-    *
-    * Scale shape: one parallel range sort of the corpus by the md5 key
-    * (the only shuffle), a per-partition-counts job returning P scalars
-    * to the driver (re-reading the sort's shuffle files, not the
-    * source), then an embarrassingly parallel per-partition scan that
-    * stamps ranks from the partition's exclusive offset — the
-    * `zipWithIndex` recipe of [[Packing.packSequences]]. No window
-    * function, no single-partition stage. */
   /** Budgeted best-first corpus selection — "take the highest-scoring
     * documents until the token budget fills", the quality-pruned cut of
     * a pre-training data build: rank docs by `(scoreCol DESC, idCol)`
@@ -112,13 +93,12 @@ object Sampling {
     * `cum_before` (exclusive prefix token sum); rows keep all input
     * columns.
     *
-    * Scale shape: the [[Packing.packSequences]] recipe pointed at a
-    * score order — one parallel range sort, a per-partition (rows,
-    * tokens) totals job (P pairs to the driver, re-reading the sort's
-    * shuffle files), then a per-partition scan. Partitions whose token
-    * offset already exceeds the budget emit NOTHING without scanning —
-    * the tail of the corpus beyond the cut costs only its share of the
-    * sort. */
+    * Scale shape: a [[graft.core.RangeScan]] over a score order — one
+    * parallel range sort, a per-partition (rows, tokens) totals job (P
+    * pairs to the driver, re-reading the sort's shuffle files), then a
+    * per-partition scan. Partitions whose token offset already exceeds
+    * the budget emit NOTHING without scanning — the tail of the corpus
+    * beyond the cut costs only its share of the sort. */
   def selectByBudget(df: DataFrame, idCol: String, tokCol: String,
       scoreCol: String, budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be >= 0: $budget")
@@ -129,18 +109,18 @@ object Sampling {
       .withColumn("__tok", col(tokCol).cast("long"))
       .orderBy(col(scoreCol).desc, col(idCol)) // parallel range sort
     val tokIdx = sorted.schema.fieldIndex("__tok")
-    val totals = sorted.rdd.mapPartitionsWithIndex { (p, it) =>
+    val rdd = sorted.rdd
+    // exclusive (rank, token) offset of each partition
+    val offsets = RangeScan.summaries(rdd) { it =>
       var n = 0L; var t = 0L
       while (it.hasNext) { n += 1; t += it.next().getLong(tokIdx) }
-      Iterator.single(p -> (n, t))
-    }.collect().sortBy(_._1).map(_._2)
-    val rankOff = totals.map(_._1).scanLeft(0L)(_ + _)
-    val tokOff = totals.map(_._2).scanLeft(0L)(_ + _)
+      (n, t)
+    }.scanLeft((0L, 0L)) { case ((n0, t0), (n, t)) => (n0 + n, t0 + t) }
     val b = budget
-    val rows = sorted.rdd.mapPartitionsWithIndex { (p, it) =>
-      if (tokOff(p) >= b) Iterator.empty
+    val rows = RangeScan.withCarry(rdd, offsets) { case ((rank0, tok0), it) =>
+      if (tok0 >= b) Iterator.empty
       else {
-        var rank = rankOff(p); var cum = tokOff(p)
+        var rank = rank0; var cum = tok0
         it.flatMap { r =>
           val keep = cum < b
           val out =
@@ -157,6 +137,25 @@ object Sampling {
     spark.createDataFrame(rows, schema).drop("__tok")
   }
 
+  /** Deterministic global shuffle + balanced shard striping — the final
+    * layout step of a training-data build: order the corpus by
+    * `md5(id)` (a reproducible permutation, independent of input
+    * partitioning), then stripe it round-robin into `numShards` shards —
+    * `shard = rank % numShards`, `pos = rank div numShards`. Every shard
+    * gets within ±1 the same row count AND is itself a uniform sample of
+    * the corpus (it takes every numShards-th doc of the shuffled order),
+    * the property epoch-subset training relies on. Appends two columns
+    * `(shard, pos)`; rows keep all input columns. Ids must be unique
+    * (they define the permutation). Unlike the hash-carve samplers above
+    * this is NOT append-stable — ranks are global — which is why it is
+    * the last step, run once per frozen dataset.
+    *
+    * Scale shape: a [[graft.core.RangeScan]] — one parallel range sort
+    * of the corpus by the md5 key (the only shuffle), a per-partition-
+    * counts job returning P scalars to the driver (re-reading the sort's
+    * shuffle files, not the source), then an embarrassingly parallel
+    * per-partition scan that stamps ranks from the partition's exclusive
+    * offset. No window function, no single-partition stage. */
   def shuffleShards(df: DataFrame, idCol: String, numShards: Int): DataFrame = {
     require(numShards >= 1, s"numShards must be positive: $numShards")
     val spark = df.sparkSession
@@ -164,14 +163,10 @@ object Sampling {
       .withColumn("__k", md5(col(idCol).cast("string").cast("binary")))
       .orderBy(col("__k"), col(idCol)) // parallel range sort
     val rdd = sorted.rdd
-    val counts = rdd.mapPartitionsWithIndex { (p, it) =>
-      var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-      Iterator.single(p -> n)
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
+    val offsets = RangeScan.summaries(rdd)(_.size.toLong).scanLeft(0L)(_ + _)
     val n = numShards.toLong
-    val outRows = rdd.mapPartitionsWithIndex { (p, it) =>
-      var rank = offsets(p)
+    val outRows = RangeScan.withCarry(rdd, offsets) { (offset, it) =>
+      var rank = offset
       it.map { r =>
         val out = Row.fromSeq(r.toSeq :+ (rank % n) :+ (rank / n))
         rank += 1

@@ -1,6 +1,6 @@
 package graft.spectral
 
-import graft.core.TimeseriesFrame
+import graft.core.{RangeScan, TimeseriesFrame}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -102,72 +102,53 @@ object Correlation {
   /** Horizontally-scalable ACF: instead of K lag columns over a
     * single-partition global window, range-sort in parallel, then fold
     * each partition once with a maxLag-deep ring buffer; products that
-    * straddle a partition boundary are completed by appending the NEXT
-    * partition's first maxLag values (collected to the driver — P·K
-    * doubles — and broadcast back, the [[graft.ops.RangeWindow]] carry
-    * pattern). One sort shuffle, one O(n) pass, no exploded join —
-    * every stage partition-parallel: the 100 TB path. Numerically
-    * identical to [[acfVector]] up to summation order. */
+    * straddle a partition boundary are completed by appending the
+    * FOLLOWING partitions' first maxLag values — a [[graft.core.RangeScan]]
+    * whose summary is each partition's head (P·K doubles) and whose
+    * carry chains the heads backward (`scanRight`). One sort shuffle, one
+    * O(n) pass, no exploded join — every stage partition-parallel: the
+    * 100 TB path. Null and NaN values are NaN slots whose products are
+    * skipped, as in [[acfVector]], to which it is numerically identical
+    * up to summation order. */
   def acfVectorDistributed(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] = {
-    val spark = tsf.df.sparkSession
     val mu = tsf.df.agg(avg(col(xCol).cast("double"))).head().getDouble(0)
     val sorted = tsf.df
       .orderBy(tsf.orderCols: _*)                 // range-partitioned parallel sort
       .select(col(xCol).cast("double"))
-      .rdd.map(_.getDouble(0) - mu)
+      .rdd.map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0) - mu)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // heads(p) = first maxLag centered values of partition p — the carry
-    // each partition needs to finish its tail rows' lag products
-    val heads = sorted
-      .mapPartitionsWithIndex { (p, it) =>
-        Iterator.single(p -> it.take(maxLag).toArray)
-      }.collect().toMap
-    val bHeads = spark.sparkContext.broadcast(heads)
-    val nParts = sorted.getNumPartitions
-    // next non-empty partition's head, concatenated as far as needed so a
-    // short (or empty) neighbor cannot starve the carry
-    def carryAfter(p: Int): Array[Double] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var q = p + 1
-      while (out.length < maxLag && q < nParts) {
-        bHeads.value.get(q).foreach(a => out ++= a)
-        q += 1
-      }
-      out.take(maxLag).toArray
-    }
-    val partials = sorted.mapPartitionsWithIndex { (p, it) =>
+    // carry(p) = the first maxLag centered values AFTER partition p,
+    // concatenated across as many following partitions as needed so a
+    // short (or empty) neighbor cannot starve it
+    val carries = RangeScan.summaries(sorted)(_.take(maxLag).toArray)
+      .scanRight(Array.empty[Double])((head, after) => (head ++ after).take(maxLag))
+      .tail
+    val ringLen = math.max(maxLag, 1)
+    val partials = RangeScan.withCarry(sorted, carries) { (after, it) =>
       val sums = Array.ofDim[Double](maxLag + 1) // [0] = denom Σxc²
-      val ring = Array.ofDim[Double](maxLag)
+      val ring = Array.ofDim[Double](ringLen)
       var n = 0L
-      it.foreach { x =>
-        sums(0) += x * x
-        val upto = math.min(n, maxLag.toLong).toInt
-        var k = 1
-        while (k <= upto) {
-          sums(k) += x * ring(((n - k) % maxLag).toInt)
-          k += 1
+      // add x's products with the ring's values at lags from..maxLag
+      def push(x: Double, from: Int): Unit = {
+        if (!x.isNaN) {
+          var k = from
+          while (k <= math.min(n, maxLag.toLong)) {
+            val prev = ring(((n - k) % ringLen).toInt)
+            if (!prev.isNaN) sums(k) += x * prev
+            k += 1
+          }
         }
-        ring((n % maxLag).toInt) = x
+        ring((n % ringLen).toInt) = x
         n += 1
       }
+      it.foreach { x => if (!x.isNaN) sums(0) += x * x; push(x, 1) }
       // complete straddling products: carried value j (the j-th row of
       // the following partitions) multiplies ONLY this partition's tail
       // rows — lags k ≥ j+1 reach past the other carried values, so each
       // cross product is counted exactly once, by the partition owning
       // its earlier element; carry-carry products belong to the
       // neighbor's own pass. No denom contribution from carries.
-      var j = 0
-      carryAfter(p).foreach { x =>
-        val nTot = n + j
-        val upto = math.min(nTot, maxLag.toLong).toInt
-        var k = j + 1
-        while (k <= upto) {
-          sums(k) += x * ring(((nTot - k) % maxLag).toInt)
-          k += 1
-        }
-        ring((nTot % maxLag).toInt) = x
-        j += 1
-      }
+      after.iterator.zipWithIndex.foreach { case (x, j) => push(x, j + 1) }
       Iterator.single(sums)
     }.collect()
     sorted.unpersist()

@@ -40,6 +40,15 @@ class RangeWindowSpec extends SparkSpec {
     assertSeqAlmost(col1(out, "x_sum"), d(1, 3, 6, 9, 12))
   }
 
+  test("width < 1 is rejected at the call, not inside an executor task") {
+    val tsf = TimeseriesFrame(seriesDF(d(1, 2, 3)), None, Seq("i"))
+    for (w <- Seq(0, -2)) {
+      val e = intercept[IllegalArgumentException](
+        RangeWindow.slidingWindow(tsf, "x", Seq("sum"), w, numPartitions = 2))
+      assert(e.getMessage.contains(s"width must be positive: $w"))
+    }
+  }
+
   test("widened agg set == AggRegistry.windowed differentially (NaN rules included)") {
     // positive-only values so harmonic/geometric have defined goldens;
     // planted NaN gaps and a zero exercise the registry edge rules

@@ -181,6 +181,22 @@ class SpectralSpec extends SparkSpec {
     assert(vec.toSeq == Correlation.acfVector(tsf, "x", maxLag = 4).toSeq)
   }
 
+  test("distributed ACF matches acfVector on a null row and at maxLag = 0") {
+    // 40-row sine over 4 shuffle partitions; row 7 null is a NaN slot
+    // whose products both formulations skip
+    val xs = (0 until 40).map(i => if (i == 7) NA else Some(math.sin(i * 0.5) * 10))
+    val tsf = TimeseriesFrame(seriesDF(xs), None, Seq("i"))
+    for (maxLag <- Seq(0, 1, 9)) {
+      val dist = Correlation.acfVectorDistributed(tsf, "x", maxLag)
+      val ref = Correlation.acfVector(tsf, "x", maxLag)
+      assert(dist.length == maxLag + 1 && ref.length == maxLag + 1)
+      dist.zip(ref).zipWithIndex.foreach { case ((a, e), k) =>
+        assert(math.abs(a - e) < 1e-10, s"maxLag $maxLag lag $k: $a vs $e")
+      }
+    }
+    assert(Correlation.acfVectorDistributed(tsf, "x", 0).toSeq == Seq(1.0))
+  }
+
   test("quadratic/cubic detrend matches numpy polyfit residuals on airpassengers") {
     // transcribed goldens: np.polyfit(arange(144), x, order) residuals
     val gold = Map(
