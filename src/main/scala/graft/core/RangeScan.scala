@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.graftbridge.Bridge.RDD
 
 import scala.reflect.ClassTag
 
@@ -26,7 +26,16 @@ import scala.reflect.ClassTag
   * the sort's shuffle files instead of re-sorting the source. Nothing here
   * caches or pins its input: a caller whose ties could re-order between
   * the two jobs pins its own, as [[graft.ops.RangeWindow.lagColumnsManaged]]
-  * does. */
+  * does.
+  *
+  * Callers scan the frame's own Catalyst rows
+  * ([[org.apache.spark.sql.graftbridge.Bridge.catalystRows]]) and hand
+  * their output back with `Bridge.fromCatalystRows`, so no pass decodes
+  * an external `Row`. The row contract that comes with it: a partition's
+  * iterator reuses one row object, so `summarize` and `scan` decode what
+  * they keep or `copy()` a row before they buffer it; the primitive
+  * getters read a null slot as 0 (check `isNullAt`); strings are
+  * `UTF8String`. */
 object RangeScan {
 
   /** Step 1: one job, exactly one `summarize(partition)` per partition,

@@ -1,8 +1,12 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.Bridge.RDD
+import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
 
 /** The shared per-series gather shell behind the executor-side
   * "millions of models" family (PerSeries forecasts, gathered-FFT
@@ -12,13 +16,25 @@ import org.apache.spark.sql.types.StructType
   * partials, ONE shuffle of the grouped values — and a narrow flatMap
   * consumes the primitive arrays. At 100 TB each series is small even
   * when the table is not; this object is that assumption made reusable
-  * (it replaced five hand-rolled copies of the same shell). */
+  * (it replaced five hand-rolled copies of the same shell).
+  *
+  * The kernels run on the gather's own Catalyst rows ([[rows]]) and hand
+  * `InternalRow`s back through `Bridge.fromCatalystRows`; [[values]],
+  * [[valueRows]] and [[keyVals]] read a gathered row in place. Row
+  * contract: the rows are reused by their iterator, so decode them (these
+  * readers do) or `copy()` them before buffering; the primitive getters
+  * read a null slot as 0, so check `isNullAt`; strings are `UTF8String`,
+  * and output rows must carry values in that internal form. */
 object SeriesGather {
 
-  /** `df` has the key columns plus one sorted `__series` struct array;
-    * `xField` is the slot of the FIRST value column inside the struct
-    * (order columns occupy slots 0 until xField). */
-  final case class Gathered(df: DataFrame, keySchema: StructType, xField: Int)
+  /** How to read one gathered row — capture this in closures, not the
+    * Gathered frame: the key types in key order, `xField` the slot of the
+    * FIRST value column inside the `__series` struct (order columns occupy
+    * slots 0 until xField) and `width` the struct's field count. */
+  final case class Layout(keyTypes: Seq[DataType], xField: Int, width: Int)
+
+  /** `df` has the key columns plus one sorted `__series` struct array. */
+  final case class Gathered(df: DataFrame, keySchema: StructType, layout: Layout)
 
   /** @param dropNulls filter rows whose FIRST value column is null before
     *   the gather (the spectral/ACF convention); the model shells keep
@@ -36,10 +52,12 @@ object SeriesGather {
       if (dropNulls) tsf.df.filter(col(valueCols.head).isNotNull) else tsf.df
     val gathered = base.groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(orderStruct)).as("__series"))
-    Gathered(gathered, StructType(keys.map(k => gathered.schema(k))), ordNames.size)
+    val keySchema = StructType(keys.map(k => gathered.schema(k)))
+    Gathered(gathered, keySchema, Layout(keySchema.fields.map(_.dataType).toSeq,
+      ordNames.size, ordNames.size + valueCols.size))
   }
 
-  /** The gathered rows as an RDD with at least core-count partitions.
+  /** The gathered Catalyst rows as an RDD with at least core-count partitions.
     *
     * Every consumer of this shell follows the gather with CPU-heavy
     * per-series work (model fits, FFTs, triangulations), but AQE sizes
@@ -71,21 +89,18 @@ object SeriesGather {
     * of gathered series can hide minutes of CPU, and an
     * under-parallelized model fleet is the failure mode that matters at
     * 100 TB. */
-  def rows(g: Gathered, heavyPerSeries: Boolean = true): org.apache.spark.rdd.RDD[Row] =
+  def rows(g: Gathered, heavyPerSeries: Boolean = true): RDD[InternalRow] =
     rows(g.df, heavyPerSeries)
 
   /** [[rows]] for gathers not built through [[gather]] (e.g. the
-    * multivariate-interpolation matrix gathers). */
-  def rows(gathered: DataFrame,
-      heavyPerSeries: Boolean): org.apache.spark.rdd.RDD[Row] = {
-    val rdd = gathered.rdd
+    * multivariate-interpolation matrix gathers). The rebalance is an RDD
+    * shuffle of row objects, so the reused rows are copied into it. */
+  def rows(gathered: DataFrame, heavyPerSeries: Boolean): RDD[InternalRow] = {
+    val rdd = Bridge.catalystRows(gathered)
     val par = gathered.sparkSession.sparkContext.defaultParallelism
-    if (heavyPerSeries && rdd.getNumPartitions < par) rdd.repartition(par)
+    if (heavyPerSeries && rdd.getNumPartitions < par) rdd.map(_.copy()).repartition(par)
     else rdd
   }
-
-  def rows(gathered: DataFrame): org.apache.spark.rdd.RDD[Row] =
-    rows(gathered, heavyPerSeries = true)
 
   /** One-shuffle per-series fill-in-place: gathers each series' FULL rows
     * in series order, hands the per-series value matrix (+ time axis) to
@@ -145,7 +160,7 @@ object SeriesGather {
       .agg(collect_list(struct(cellFields: _*)).as("__series"))
     val outSchema = StructType(schema.fields.map { f =>
       if (valueIdx.contains(f.name))
-        f.copy(dataType = org.apache.spark.sql.types.DoubleType, nullable = true)
+        f.copy(dataType = DoubleType, nullable = true)
       else f
     })
     val nKeys = keys.size
@@ -157,15 +172,17 @@ object SeriesGather {
     // struct slot of each value column (precomputed — not per row)
     val valSlot: Array[Int] =
       valueCols.map(c => baseSlot + schema.fieldIndex(c)).toArray
-    val outRdd = rows(gathered).flatMap { row =>
-      val unsorted = row.getSeq[Row](nKeys)
-      val n = unsorted.length
+    val width = o + nF
+    val types = schema.fields.map(_.dataType)
+    val outRdd = rows(gathered, heavyPerSeries = true).flatMap { row =>
+      val cells = row.getArray(nKeys)
+      val n = cells.numElements()
       require(n * kSafe <= maxCellsPerSeries,
         s"one series has ${n * kSafe} cells > maxCellsPerSeries=$maxCellsPerSeries ($opName)")
       // series order: the double prefix, nulls first (asc nulls-first)
-      val series = unsorted.toArray
-      java.util.Arrays.sort(series, new java.util.Comparator[Row] {
-        override def compare(a: Row, b: Row): Int = {
+      val series = Array.tabulate[InternalRow](n)(cells.getStruct(_, width))
+      java.util.Arrays.sort(series, new java.util.Comparator[InternalRow] {
+        override def compare(a: InternalRow, b: InternalRow): Int = {
           var s = 0
           var c = 0
           while (s < o && c == 0) {
@@ -204,31 +221,50 @@ object SeriesGather {
               if (repl != null && !repl.isNaN) repl
               else if (vals(i)(j).isNaN) null
               else Double.box(vals(i)(j))
-          } else out(fi) = series(i).get(baseSlot + fi)
+          } else out(fi) = series(i).get(baseSlot + fi, types(fi))
           fi += 1
         }
-        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+        new GenericInternalRow(out)
       }
     }
-    df.sparkSession.createDataFrame(outRdd, outSchema)
+    Bridge.fromCatalystRows(df.sparkSession, outRdd, outSchema)
   }
 
-  /** The j-th value column of a gathered row as a primitive array
-    * (capture only `xField` in closures — not the Gathered frame). */
-  def values(row: Row, xField: Int, j: Int = 0): Array[Double] = {
-    val seq = row.getSeq[Row](row.length - 1)
-    val arr = new Array[Double](seq.length)
+  /** The j-th value column of a gathered row as a primitive array, read
+    * straight off the gathered array. A null value fails the read (the
+    * primitive getter would return 0): the model shells call it inside
+    * their per-series `try`, so such a series takes their skip path. */
+  def values(row: InternalRow, layout: Layout, j: Int = 0): Array[Double] = {
+    val cells = row.getArray(row.numFields - 1)
+    val slot = layout.xField + j
+    val arr = new Array[Double](cells.numElements())
     var i = 0
-    seq.foreach { s => arr(i) = s.getDouble(xField + j); i += 1 }
+    while (i < arr.length) {
+      val s = cells.getStruct(i, layout.width)
+      require(!s.isNullAt(slot), "null value in a gathered series")
+      arr(i) = s.getDouble(slot)
+      i += 1
+    }
     arr
   }
 
-  /** All `nv` value columns of a gathered row as row-major
-    * Array(time)(column) — the multivariate-model layout. */
-  def valueRows(row: Row, xField: Int, nv: Int): Array[Array[Double]] =
-    row.getSeq[Row](row.length - 1)
-      .map(s => Array.tabulate(nv)(j => s.getDouble(xField + j))).toArray
+  /** All value columns of a gathered row as row-major
+    * Array(time)(column) — the multivariate-model layout. Nulls fail the
+    * read as in [[values]]. */
+  def valueRows(row: InternalRow, layout: Layout): Array[Array[Double]] = {
+    val cells = row.getArray(row.numFields - 1)
+    val nv = layout.width - layout.xField
+    Array.tabulate(cells.numElements()) { i =>
+      val s = cells.getStruct(i, layout.width)
+      Array.tabulate(nv) { j =>
+        require(!s.isNullAt(layout.xField + j), "null value in a gathered series")
+        s.getDouble(layout.xField + j)
+      }
+    }
+  }
 
-  /** The key column values of a gathered row, in key order. */
-  def keyVals(row: Row): Seq[Any] = (0 until row.length - 1).map(row.get)
+  /** The key column values of a gathered row, in key order and internal
+    * form, copied out of the (reused) row. */
+  def keyVals(row: InternalRow, layout: Layout): Seq[Any] =
+    layout.keyTypes.indices.map(i => InternalRow.copyValue(row.get(i, layout.keyTypes(i))))
 }

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Inferred spacing metadata of a timeseries — the Spark re-expression of
   * the reference's `TimeDelta` (`orangecontrib/timeseries/timeseries.py:17-91`):
@@ -125,7 +126,7 @@ object TimeDelta {
           .filter(col("__t").isNotNull)
           .repartitionByRange(np, col("__t"))
           .sortWithinPartitions("__t")
-        val raw = RangeScan.summaries(ranged.rdd) { it =>
+        val raw = RangeScan.summaries(Bridge.catalystRows(ranged)) { it =>
           val seen = scala.collection.mutable.TreeSet.empty[Double]
           val st = Array(false, false)
           var g = 0L
@@ -165,9 +166,9 @@ object TimeDelta {
         }
       } else {
         val (deltas, release) = deltaFrame(df, timeCol, seriesKeys)
-        val out = deltas
-          .filter(col("__d").isNotNull && col("__d") =!= 0.0)
-          .rdd.mapPartitions { it =>
+        val out = Bridge.catalystRows(deltas
+          .filter(col("__d").isNotNull && col("__d") =!= 0.0))
+          .mapPartitions { it =>
             val seen = scala.collection.mutable.TreeSet.empty[Double]
             val st = Array(false, false)
             var g = 0L

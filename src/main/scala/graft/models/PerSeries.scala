@@ -1,8 +1,9 @@
 package graft.models
 
-import graft.core.TimeseriesFrame
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.core.{SeriesGather, TimeseriesFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Per-series model fitting at cluster scale: one forecast model per
@@ -33,29 +34,30 @@ object PerSeries {
       predictOf: Array[Double] => (Array[Double], Array[Double], Array[Double]))
       : DataFrame = {
     val spark = tsf.df.sparkSession
-    val g = graft.core.SeriesGather.gather(tsf, Seq(valueCol),
+    val g = SeriesGather.gather(tsf, Seq(valueCol),
       "per-series forecasting")
     val outSchema = StructType(g.keySchema.fields ++ Seq(
       StructField("step", LongType, nullable = false),
       StructField("forecast", DoubleType),
       StructField("ci_low", DoubleType),
       StructField("ci_high", DoubleType)))
-    val xField = g.xField
-    val outRdd = graft.core.SeriesGather.rows(g, heavyPerSeries).flatMap { row =>
-      val series = graft.core.SeriesGather.values(row, xField)
-      if (series.length < minRows) Iterator.empty
-      else {
-        val keyVals = graft.core.SeriesGather.keyVals(row)
-        try {
+    val layout = g.layout
+    val outRdd = SeriesGather.rows(g, heavyPerSeries).flatMap { row =>
+      // a null value fails the read: that series is skipped like a failed fit
+      try {
+        val series = SeriesGather.values(row, layout)
+        if (series.length < minRows) Iterator.empty
+        else {
+          val keyVals = SeriesGather.keyVals(row, layout)
           val (fo, lo, hi) = predictOf(series)
           (0 until steps).iterator.map(h =>
             // Seq[Any]: a plain Seq(...) would numeric-widen the Long step
-            // to Double via LUB inference and break the row encoder
-            Row.fromSeq(keyVals ++ Seq[Any](h + 1L, fo(h), lo(h), hi(h))))
-        } catch { case _: Exception => Iterator.empty }
-      }
+            // to Double via LUB inference and break the row layout
+            InternalRow.fromSeq(keyVals ++ Seq[Any](h + 1L, fo(h), lo(h), hi(h))))
+        }
+      } catch { case _: Exception => Iterator.empty }
     }
-    spark.createDataFrame(outRdd, outSchema)
+    Bridge.fromCatalystRows(spark, outRdd, outSchema)
   }
 
   /** Fit ARIMA(p,d,q) per series and forecast `steps` ahead.
@@ -119,7 +121,7 @@ object PerSeries {
     require(valueCols.size == a1.rows && valueCols.size == trendConst.length,
       "valueCols, A1 and trendConst dimensions must agree")
     val spark = tsf.df.sparkSession
-    val g = graft.core.SeriesGather.gather(tsf, valueCols,
+    val g = SeriesGather.gather(tsf, valueCols,
       "varForecastFixedByKey")
     val outSchema = StructType(g.keySchema.fields ++
       (StructField("step", LongType, nullable = false) +:
@@ -127,29 +129,28 @@ object PerSeries {
           StructField(s"${c}_forecast", DoubleType),
           StructField(s"${c}_lo", DoubleType),
           StructField(s"${c}_hi", DoubleType)))))
-    val base = g.xField
+    val layout = g.layout
     val nv = valueCols.size
     // heavyPerSeries=false: fixed-parameter VAR predict is one linear
     // pass per series (bytes-proportional — see arimaxTimeRegForecast
     // FixedByKey's note).
-    val outRdd = graft.core.SeriesGather.rows(g, heavyPerSeries = false)
-        .flatMap { row =>
-      val series = graft.core.SeriesGather.valueRows(row, base, nv)
-      if (series.length < minRows) Iterator.empty
-      else {
-        val keyVals = graft.core.SeriesGather.keyVals(row)
-        try {
+    val outRdd = SeriesGather.rows(g, heavyPerSeries = false).flatMap { row =>
+      try {
+        val series = SeriesGather.valueRows(row, layout)
+        if (series.length < minRows) Iterator.empty
+        else {
+          val keyVals = SeriesGather.keyVals(row, layout)
           val fit = new Var().fitFixed(series, Array(a1), trendConst)
           val (fo, lo, hi) = fit.predict(steps, alpha)
           (0 until steps).iterator.map { h =>
             val vals = (0 until nv).flatMap(j =>
               Seq[Any](fo(h)(j), lo(h)(j), hi(h)(j)))
-            Row.fromSeq(keyVals ++ (Seq[Any]((h + 1).toLong) ++ vals))
+            InternalRow.fromSeq(keyVals ++ (Seq[Any]((h + 1).toLong) ++ vals))
           }
-        } catch { case _: Exception => Iterator.empty }
-      }
+        }
+      } catch { case _: Exception => Iterator.empty }
     }
-    spark.createDataFrame(outRdd, outSchema)
+    Bridge.fromCatalystRows(spark, outRdd, outSchema)
   }
 
   /** Per-series ARMA forecast at FIXED (φ, θ, μ) — the fan-out path at

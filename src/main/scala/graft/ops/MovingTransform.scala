@@ -3,7 +3,9 @@ package graft.ops
 import graft.agg.AggRegistry
 import graft.core.{RangeScan, TimeseriesFrame}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The three aggregation shells of the reference's Moving Transform widget
   * (`orangecontrib/timeseries/widgets/owmovingtransform.py`), re-expressed
@@ -182,9 +184,10 @@ object MovingTransform {
     * codegen but cannot share the exchange (the branches legitimately
     * prune to different scan schemas, so `ReuseExchange` never fires) and
     * scans + shuffles twice: 4.3s vs 2.7s here at 20M rows, and slower at
-    * 100k too. The RDD row conversion is the cheaper tax. */
+    * 100k too. The index pass reads the sort's own Catalyst rows and
+    * appends `__gidx` with a `JoinedRow`, so no row is decoded. */
   private def globallyIndexed(df: DataFrame, orderCols: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     // NO checkpoint on the sorted frame (r16, VERDICT r15 task 7): the
     // r15 lazy localCheckpoint was reverted after a K=10 bench A/B
@@ -197,10 +200,12 @@ object MovingTransform {
     val sorted = df.orderBy(orderCols: _*)
     val schema = StructType(sorted.schema.fields :+
       StructField("__gidx", LongType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ i)
+    val rdd = Bridge.catalystRows(sorted).zipWithIndex().mapPartitions { it =>
+      val idx = new SpecificInternalRow(Seq(LongType))
+      val out = new JoinedRow(null, idx)
+      it.map { case (r, i) => idx.setLong(0, i); out.withLeft(r) }
     }
-    df.sparkSession.createDataFrame(rdd, schema)
+    Bridge.fromCatalystRows(df.sparkSession, rdd, schema)
   }
 
   def sequentialBlocksRangePart(
@@ -348,21 +353,20 @@ object MovingTransform {
       specs: Seq[(String, String)],
       width: Int,
       shift: Int): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val cols = specs.map(_._1).distinct
     val proj = indexed.select(col("__gidx") +:
       cols.map(c => AggRegistry.nanToNull(col(c)).as(c)): _*)
     val nC = cols.size
     // fold one row's non-null values into running (sum, product) arrays
-    val fold = (s: Array[Double], p: Array[Double], r: Row) => {
+    val fold = (s: Array[Double], p: Array[Double], r: InternalRow) => {
       var k = 0
       while (k < nC) {
         if (!r.isNullAt(k + 1)) { val v = r.getDouble(k + 1); s(k) += v; p(k) *= v }
         k += 1
       }
     }
-    val rdd = proj.rdd
+    val rdd = Bridge.catalystRows(proj)
     val offsets = RangeScan.summaries(rdd) { it =>
       val s = Array.fill(nC)(0.0); val p = Array.fill(nC)(1.0)
       it.foreach(fold(s, p, _))
@@ -380,14 +384,14 @@ object MovingTransform {
         fold(runS, runP, r)
         val gi = r.getLong(0)
         if (gi >= w1 && (gi - w1) % shift == 0)
-          Some(Row.fromSeq(Long.box((gi - w1) / shift) +: specs.map { case (c, key) =>
+          Some(InternalRow.fromSeq(Long.box((gi - w1) / shift) +: specs.map { case (c, key) =>
             val ki = colIdx(c)
             Double.box(if (key == "cumsum") runS(ki) else runP(ki))
           }))
         else None
       }
     }
-    proj.sparkSession.createDataFrame(outRdd, outSchema)
+    Bridge.fromCatalystRows(proj.sparkSession, outRdd, outSchema)
   }
 
   /** Calendar period keys — the reference's `PeriodOptions` registry

@@ -1,9 +1,11 @@
 package graft.ops
 
 import graft.core.{RangeScan, TimeseriesFrame}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.Bridge.RDD
 import org.apache.spark.sql.types._
 
 /** Range-partitioned sliding-window execution — the scale-out path for
@@ -30,14 +32,16 @@ import org.apache.spark.sql.types._
   * cannot be expressed with per-partition declarative windows, and the
   * alternative — a global sort — does not scale.
   *
-  * The inner loop is O(1) amortized per row: values are decoded once with
-  * a typed primitive getter chosen from the schema, sum/count/sumsq and
-  * friends are maintained incrementally (add incoming, subtract the slot
-  * falling out of the ring), and min/max use the classic monotonic-deque
-  * sliding minimum. Incremental subtraction is EXACT for integer-valued
-  * doubles below 2^53 (the cents-encoded gate fixtures) and drifts by at
-  * most one rounding step per window width for general floats — same
-  * contract as any O(1) sliding sum.
+  * The inner loop is O(1) amortized per row: both passes read the sorted
+  * frame's own Catalyst rows, values are decoded once with a typed
+  * primitive getter chosen from the schema, the output columns are
+  * appended to the input row with a `JoinedRow` (no per-column copy),
+  * sum/count/sumsq and friends are maintained incrementally (add
+  * incoming, subtract the slot falling out of the ring), and min/max use
+  * the classic monotonic-deque sliding minimum. Incremental subtraction
+  * is EXACT for integer-valued doubles below 2^53 (the cents-encoded gate
+  * fixtures) and drifts by at most one rounding step per window width for
+  * general floats — same contract as any O(1) sliding sum.
   *
   * Supported aggregations are the [[graft.agg.AggRegistry]] keys with an
   * incremental fold: mean/sum/min/max/span/std/var/nonzero/defined/
@@ -77,17 +81,22 @@ object RangeWindow {
       if (size == 0) Double.NaN else vs(head % (capacity + 1))
   }
 
-  private def typedGetter(dt: DataType, i: Int): Row => Double = dt match {
+  private def typedGetter(dt: DataType, i: Int): InternalRow => Double = dt match {
     case DoubleType => r => if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
     case FloatType => r => if (r.isNullAt(i)) Double.NaN else r.getFloat(i).toDouble
     case LongType => r => if (r.isNullAt(i)) Double.NaN else r.getLong(i).toDouble
     case IntegerType => r => if (r.isNullAt(i)) Double.NaN else r.getInt(i).toDouble
     case ShortType => r => if (r.isNullAt(i)) Double.NaN else r.getShort(i).toDouble
     case ByteType => r => if (r.isNullAt(i)) Double.NaN else r.getByte(i).toDouble
-    case _: DecimalType => r => if (r.isNullAt(i)) Double.NaN else r.getDecimal(i).doubleValue
+    case d: DecimalType => r =>
+      if (r.isNullAt(i)) Double.NaN else r.getDecimal(i, d.precision, d.scale).toDouble
     case other => throw new IllegalArgumentException(
       s"RangeWindow needs a numeric value column, got $other")
   }
+
+  /** A reusable row of `n` nullable doubles — the appended columns. */
+  private def doubleRow(n: Int): SpecificInternalRow =
+    new SpecificInternalRow(Seq.fill(n)(DoubleType))
 
   /** Incremental per-window state shared by all requested aggregates. */
   private final class SlideState(width: Int, needMin: Boolean, needMax: Boolean,
@@ -166,18 +175,19 @@ object RangeWindow {
     }
   }
 
-  /** Each partition's last `k` rows (a ring over the row references, so
-    * only those `k` are decoded), chained on the driver so partition `p`
-    * gets the last `k` decoded rows of EVERYTHING before it — short and
-    * empty partitions cannot starve the carry. */
-  private def trailingCarries[A: scala.reflect.ClassTag](rdd: RDD[Row], k: Int)(
-      decode: Row => A): Array[Array[A]] = {
+  /** Each partition's last `k` decoded values, chained on the driver so
+    * partition `p` gets the last `k` values of EVERYTHING before it —
+    * short and empty partitions cannot starve the carry. Every row is
+    * decoded into the ring as it streams by: the rows are reused, so the
+    * ring cannot hold the rows themselves. */
+  private def trailingCarries[A: scala.reflect.ClassTag](rdd: RDD[InternalRow],
+      k: Int)(decode: InternalRow => A): Array[Array[A]] = {
     val tails = RangeScan.summaries(rdd) { it =>
-      val ring = new Array[Row](math.max(k, 1))
+      val ring = new Array[A](math.max(k, 1))
       var n = 0L
-      it.foreach { r => ring((n % ring.length).toInt) = r; n += 1 }
+      it.foreach { r => ring((n % ring.length).toInt) = decode(r); n += 1 }
       val m = math.min(n, k.toLong).toInt
-      Array.tabulate(m)(i => decode(ring(((n - m + i) % ring.length).toInt)))
+      Array.tabulate(m)(i => ring(((n - m + i) % ring.length).toInt))
     }
     tails.scanLeft(Array.empty[A])((acc, t) => (acc ++ t).takeRight(k))
   }
@@ -225,7 +235,7 @@ object RangeWindow {
     }.toArray
     val nV = getters.length
 
-    val rdd = ranged.rdd
+    val rdd = Bridge.catalystRows(ranged)
     val carries = trailingCarries(rdd, lags)(r => Array.tabulate(nV)(v => getters(v)(r)))
 
     // ring of the previous `lags` row-vectors, carry prepended.
@@ -239,22 +249,21 @@ object RangeWindow {
       val ring = Array.ofDim[Array[Double]](lags)
       var pushed = 0L
       pre.foreach { v => ring((pushed % lags).toInt) = v; pushed += 1 }
+      val lagRow = doubleRow(lags * nV)
+      val out = new JoinedRow(null, lagRow)
       it.map { r =>
-        val out = new Array[Any](r.length + lags * nV)
-        var i = 0
-        while (i < r.length) { out(i) = r.get(i); i += 1 }
         for (l <- 1 to lags; v <- 0 until nV) {
           val avail = pushed >= l
           val value = if (avail) ring(((pushed - l) % lags).toInt)(v) else Double.NaN
-          out(r.length + (l - 1) * nV + v) =
-            if (!avail || value.isNaN) null else Double.box(value)
+          val slot = (l - 1) * nV + v
+          if (!avail || value.isNaN) lagRow.setNullAt(slot) else lagRow.setDouble(slot, value)
         }
         ring((pushed % lags).toInt) = Array.tabulate(nV)(v => getters(v)(r))
         pushed += 1
-        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+        out.withLeft(r)
       }
     }
-    (spark.createDataFrame(outRdd, outSchema), () => { ranged.unpersist(); () })
+    (Bridge.fromCatalystRows(spark, outRdd, outSchema), () => { ranged.unpersist(); () })
   }
 
   def slidingWindow(
@@ -287,7 +296,7 @@ object RangeWindow {
     val valueIdx = schema.fieldIndex(valueCol)
     val getV = typedGetter(schema(valueIdx).dataType, valueIdx)
 
-    val rdd = ranged.rdd
+    val rdd = Bridge.catalystRows(ranged)
     val carries = trailingCarries(rdd, width - 1)(getV)
 
     val needMin = aggs.exists(Set("min", "span"))
@@ -303,20 +312,19 @@ object RangeWindow {
     val outRdd = RangeScan.withCarry(rdd, carries) { (pre, it) =>
       val st = new SlideState(width, needMin, needMax, needSq, needInv, needLog)
       pre.foreach(st.push)
+      val aggRow = doubleRow(aggsArr.length)
+      val out = new JoinedRow(null, aggRow)
       it.map { r =>
         st.push(getV(r))
-        val out = new Array[Any](r.length + aggsArr.length)
-        var i = 0
-        while (i < r.length) { out(i) = r.get(i); i += 1 }
         var j = 0
         while (j < aggsArr.length) {
           val res = st.eval(aggsArr(j), width)
-          out(r.length + j) = if (res.isNaN) null else Double.box(res)
+          if (res.isNaN) aggRow.setNullAt(j) else aggRow.setDouble(j, res)
           j += 1
         }
-        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+        out.withLeft(r)
       }
     }
-    df.sparkSession.createDataFrame(outRdd, outSchema)
+    Bridge.fromCatalystRows(df.sparkSession, outRdd, outSchema)
   }
 }

@@ -1,9 +1,11 @@
 package graft.pipeline
 
 import graft.core.RangeScan
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Sequence packing — concatenate a document stream into fixed-size
@@ -58,9 +60,9 @@ object Packing {
   }
 
   /** Span rows for one document given its exclusive prefix `start`. */
-  private def spans(id: Long, tok: Long, start: Long, budget: Long): Iterator[Row] =
+  private def spans(id: Long, tok: Long, start: Long, budget: Long): Iterator[InternalRow] =
     spanTuples(tok, start, budget).map { case (s, dOff, sOff, n) =>
-      Row(id, s, dOff, sOff, n)
+      InternalRow(id, s, dOff, sOff, n)
     }
 
   /** Range-partitioned packing — the scale path. Document ids must be
@@ -70,10 +72,13 @@ object Packing {
       budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val spark = df.sparkSession
-    val base = df.filter(col(tokCol) > 0)
+    val base = Bridge.catalystRows(df.filter(col(tokCol) > 0)
       .select(col(idCol).cast("long"), col(tokCol).cast("long"))
-      .orderBy(col(idCol))                        // parallel range sort
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+      .orderBy(col(idCol)))                       // parallel range sort
+      .map { r =>
+        require(!r.isNullAt(0), s"packSequences: null $idCol")
+        (r.getLong(0), r.getLong(1))
+      }
     // per-partition token totals → exclusive per-partition offsets; the
     // summary job re-reads the sort's shuffle output, not the source
     val offsets = RangeScan.summaries(base)(_.foldLeft(0L)(_ + _._2)).scanLeft(0L)(_ + _)
@@ -86,7 +91,7 @@ object Packing {
         spans(id, tok, start, b)
       }
     }
-    spark.createDataFrame(rows, outSchema)
+    Bridge.fromCatalystRows(spark, rows, outSchema)
   }
 
   /** Per-shard packing — the batch twin of

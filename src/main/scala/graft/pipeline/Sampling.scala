@@ -1,9 +1,11 @@
 package graft.pipeline
 
 import graft.core.RangeScan
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deterministic splitting and sampling for training-data pipelines.
@@ -109,7 +111,7 @@ object Sampling {
       .withColumn("__tok", col(tokCol).cast("long"))
       .orderBy(col(scoreCol).desc, col(idCol)) // parallel range sort
     val tokIdx = sorted.schema.fieldIndex("__tok")
-    val rdd = sorted.rdd
+    val rdd = Bridge.catalystRows(sorted)
     // exclusive (rank, token) offset of each partition
     val offsets = RangeScan.summaries(rdd) { it =>
       var n = 0L; var t = 0L
@@ -121,20 +123,20 @@ object Sampling {
       if (tok0 >= b) Iterator.empty
       else {
         var rank = rank0; var cum = tok0
+        val stamp = new SpecificInternalRow(Seq(LongType, LongType))
+        val out = new JoinedRow(null, stamp)
         it.flatMap { r =>
           val keep = cum < b
-          val out =
-            if (keep) Iterator.single(Row.fromSeq(r.toSeq :+ rank :+ cum))
-            else Iterator.empty
+          if (keep) { stamp.setLong(0, rank); stamp.setLong(1, cum) }
           cum += r.getLong(tokIdx); rank += 1
-          out
+          if (keep) Iterator.single(out.withLeft(r)) else Iterator.empty
         }
       }
     }
     val schema = StructType(sorted.schema.fields :+
       StructField("rank", LongType, nullable = false) :+
       StructField("cum_before", LongType, nullable = false))
-    spark.createDataFrame(rows, schema).drop("__tok")
+    Bridge.fromCatalystRows(spark, rows, schema).drop("__tok")
   }
 
   /** Deterministic global shuffle + balanced shard striping — the final
@@ -162,21 +164,23 @@ object Sampling {
     val sorted = df
       .withColumn("__k", md5(col(idCol).cast("string").cast("binary")))
       .orderBy(col("__k"), col(idCol)) // parallel range sort
-    val rdd = sorted.rdd
+    val rdd = Bridge.catalystRows(sorted)
     val offsets = RangeScan.summaries(rdd)(_.size.toLong).scanLeft(0L)(_ + _)
     val n = numShards.toLong
     val outRows = RangeScan.withCarry(rdd, offsets) { (offset, it) =>
       var rank = offset
+      val stamp = new SpecificInternalRow(Seq(LongType, LongType))
+      val out = new JoinedRow(null, stamp)
       it.map { r =>
-        val out = Row.fromSeq(r.toSeq :+ (rank % n) :+ (rank / n))
+        stamp.setLong(0, rank % n); stamp.setLong(1, rank / n)
         rank += 1
-        out
+        out.withLeft(r)
       }
     }
     val schema = StructType(sorted.schema.fields :+
       StructField("shard", LongType, nullable = false) :+
       StructField("pos", LongType, nullable = false))
-    spark.createDataFrame(outRows, schema).drop("__k")
+    Bridge.fromCatalystRows(spark, outRows, schema).drop("__k")
   }
 
   /** Per-domain mixing table — the knob sheet for weighting training

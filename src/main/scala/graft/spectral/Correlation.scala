@@ -2,8 +2,10 @@ package graft.spectral
 
 import graft.core.{RangeScan, TimeseriesFrame}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Autocorrelation analytics — the Spark re-expression of the reference's
@@ -112,10 +114,10 @@ object Correlation {
     * up to summation order. */
   def acfVectorDistributed(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] = {
     val mu = tsf.df.agg(avg(col(xCol).cast("double"))).head().getDouble(0)
-    val sorted = tsf.df
+    val sorted = Bridge.catalystRows(tsf.df
       .orderBy(tsf.orderCols: _*)                 // range-partitioned parallel sort
-      .select(col(xCol).cast("double"))
-      .rdd.map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0) - mu)
+      .select(col(xCol).cast("double")))
+      .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0) - mu)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // carry(p) = the first maxLag centered values AFTER partition p,
     // concatenated across as many following partitions as needed so a
@@ -278,12 +280,12 @@ object Correlation {
       dropNulls = true)
     val outSchema = StructType(g.keySchema.fields ++
       (StructField("lag", LongType, nullable = false) +: outFields))
-    val xField = g.xField
+    val layout = g.layout
     // heavyPerSeries = false: ACF/PACF via FFT is CPU ∝ gathered bytes —
     // AQE's byte sizing already balances it; see SeriesGather.rows
     val outRdd = graft.core.SeriesGather.rows(g, heavyPerSeries = false)
       .flatMap { row =>
-      val x = graft.core.SeriesGather.values(row, xField)
+      val x = graft.core.SeriesGather.values(row, layout)
       val m = x.length
       if (m < 2) Iterator.empty
       else {
@@ -296,13 +298,13 @@ object Correlation {
           val r = acovSumsFft(xc, nl)
           val acf = Array.tabulate(nl + 1)(k => if (k == 0) 1.0 else r(k) / s0)
           val out = transform(acf, m)
-          val keyVals = graft.core.SeriesGather.keyVals(row)
+          val keyVals = graft.core.SeriesGather.keyVals(row, layout)
           (1 to nl).iterator.map(k =>
-            Row.fromSeq(keyVals ++ (k.toLong +: out(k))))
+            InternalRow.fromSeq(keyVals ++ (k.toLong +: out(k))))
         }
       }
     }
-    spark.createDataFrame(outRdd, outSchema)
+    Bridge.fromCatalystRows(spark, outRdd, outSchema)
   }
 
   /** Local maxima of |values| with `order`-neighborhood strict dominance —

@@ -2,8 +2,10 @@ package graft.spectral
 
 import graft.core.TimeseriesFrame
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Spectral density — the Spark re-expression of the reference's
   * `periodogram` / `periodogram_nonequispaced`
@@ -102,10 +104,13 @@ object Periodogram {
       keys.map(kn => moments.schema(kn)) ++ (0 to order).map(k =>
         org.apache.spark.sql.types.StructField(s"__b$k",
           org.apache.spark.sql.types.DoubleType)))
-    val coefRdd = moments.rdd.map { r =>
+    val keyTypes = coefSchema.fields.take(nk).map(_.dataType)
+    val coefRdd = Bridge.catalystRows(moments).map { r =>
       val zeros = Array.fill[Any](order + 1)(0.0)
       val bs =
-        if (r.getDouble(nk) <= order) zeros // m0 = row count ≤ order
+        // m0 = row count ≤ order; a null moment (every x of the key null)
+        // is degenerate too
+        if ((nk until r.numFields).exists(r.isNullAt) || r.getDouble(nk) <= order) zeros
         else try {
           val a = breeze.linalg.DenseMatrix.tabulate(order + 1, order + 1)(
             (j, k) => r.getDouble(nk + j + k))
@@ -113,9 +118,9 @@ object Periodogram {
             j => r.getDouble(nk + 2 * order + 1 + j))
           (a \ c).toArray.map(x => x: Any)
         } catch { case _: breeze.linalg.MatrixSingularException => zeros }
-      org.apache.spark.sql.Row.fromSeq((0 until nk).map(r.get) ++ bs)
+      InternalRow.fromSeq((0 until nk).map(i => r.get(i, keyTypes(i))) ++ bs)
     }
-    val coefs = df.sparkSession.createDataFrame(coefRdd, coefSchema)
+    val coefs = Bridge.fromCatalystRows(df.sparkSession, coefRdd, coefSchema)
     withS.join(coefs, keys)
       .withColumn("__resid", col("x") -
         (0 to order).map(k => pow(col("__s"), k) * col(s"__b$k")).reduce(_ + _))
@@ -334,7 +339,6 @@ object Periodogram {
     * it against the DuckDB DFT oracle — cross-engine AND cross-algorithm. */
   def spectrumByKeyFft(tsf: TimeseriesFrame, xCol: String,
       detrend: String = "diff"): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     val spark = tsf.df.sparkSession
     // null x rows are dropped BEFORE the gather (a gap series belongs to
@@ -344,20 +348,20 @@ object Periodogram {
       dropNulls = true)
     val outSchema = StructType(g.keySchema.fields ++ Seq(
       StructField("period", DoubleType), StructField("power", DoubleType)))
-    val xField = g.xField
+    val layout = g.layout
     // heavyPerSeries = false: the FFT spectrum is a streaming O(n log n)
     // pass, CPU ∝ gathered bytes — AQE's byte sizing is the right
     // balancer and the guard stage would be pure gate-scale overhead
     val outRdd = graft.core.SeriesGather.rows(g, heavyPerSeries = false)
       .flatMap { row =>
-      val raw = graft.core.SeriesGather.values(row, xField)
+      val raw = graft.core.SeriesGather.values(row, layout)
       val xd = detrendLocal(raw, detrend)
       val m = xd.length
       val lo = math.max(m / 1000, 1)
       val hi = m / 2
       if (hi < lo) Iterator.empty
       else {
-        val keyVals = graft.core.SeriesGather.keyVals(row)
+        val keyVals = graft.core.SeriesGather.keyVals(row, layout)
         // realForwardFull: full complex spectrum in-place over 2m slots —
         // Re[k] = buf(2k), Im[k] = buf(2k+1); power uses Re²+Im², so
         // JTransforms' e^{-iθ} sign convention is immaterial
@@ -366,12 +370,12 @@ object Periodogram {
         (lo to hi).iterator.map { k =>
           val re = buf(2 * k); val im = buf(2 * k + 1)
           val dbl = if (m % 2 == 0 && k == hi) 1.0 else 2.0
-          Row.fromSeq(keyVals ++ Seq[Any](m.toDouble / k,
+          InternalRow.fromSeq(keyVals ++ Seq[Any](m.toDouble / k,
             (re * re + im * im) / m * dbl))
         }
       }
     }
-    spark.createDataFrame(outRdd, outSchema)
+    Bridge.fromCatalystRows(spark, outRdd, outSchema)
   }
 
   /** Single-series FFT spectrum — [[spectrumByKeyFft]] under a constant

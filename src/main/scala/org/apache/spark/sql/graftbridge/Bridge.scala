@@ -1,11 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for the `private[sql]` Column↔Expression bridge —
   * needed to expose custom Catalyst expressions (e.g. graft.functions.
@@ -13,6 +15,38 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Spark's RDD type, named here so that this file is the only one in the
+    * engine that mentions the `rdd` package: every engine RDD of frame rows
+    * enters and leaves Catalyst through [[catalystRows]] and
+    * [[fromCatalystRows]] (the `deadCodeSweep` rule in build.sbt). */
+  type RDD[T] = org.apache.spark.rdd.RDD[T]
+
+  /** The frame's own executed rows: its `queryExecution.toRdd`. Unlike
+    * `df.rdd` this plans no second QueryExecution with a
+    * `DeserializeToObject` (and its generated deserializer) on the
+    * driver, and builds no external `Row` per row on the executors.
+    *
+    * Row contract: the iterator of a partition may hand out ONE row object
+    * that it overwrites on every `next()`, so decode what you need or
+    * `copy()` the row before you buffer, persist, collect or RDD-shuffle
+    * it. Values are in Catalyst's internal form (`UTF8String`, `Decimal`,
+    * microsecond longs for timestamps, `ArrayData`…) and the primitive
+    * getters read a null slot as 0 — check `isNullAt` first. */
+  def catalystRows(df: DataFrame): RDD[InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.toRdd
+
+  /** A frame over rows in Catalyst's internal form: a `LogicalRDD`, with
+    * none of the per-row RowEncoder pass of `createDataFrame(RDD[Row],
+    * schema)`. Every row must match `schema` field by field in internal
+    * form (nothing checks it, not even non-nullable fields); the scan
+    * projects each row to an `UnsafeRow` as it reads it, so a kernel may
+    * hand out reused rows, `JoinedRow`s or rows that point into its input
+    * row. */
+  def fromCatalystRows(spark: SparkSession, rows: RDD[_ <: InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows.asInstanceOf[RDD[InternalRow]], schema)
 
   /** Every node of an EXECUTED physical plan, descending through the
     * wrappers that `TreeNode.collect` cannot see past — the AQE nodes

@@ -44,6 +44,29 @@ class PerSeriesSpec extends SparkSpec {
     assert(math.abs(grouped(("a", 1L))._1 - grouped(("b", 1L))._1) > 10)
   }
 
+  test("a null value skips its series through the skip path; the others are unchanged") {
+    val df = twoArSeries
+    val withNull = df.withColumn("x",
+      when(col("k") === "a" && col("t") === 7L, lit(null)).otherwise(col("x")))
+    def arima(d: org.apache.spark.sql.DataFrame) = PerSeries.arimaForecastByKey(
+        TimeseriesFrame(d, Some("t"), Nil, Seq("k")), "x", 1, 0, 0, steps = 5)
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1)) ->
+        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
+    val clean = arima(df)
+    val got = arima(withNull)
+    assert(got.keySet.map(_._1) == Set("b"))
+    assert(got == clean.filter(_._1._1 == "b"))
+    // the multivariate shell takes the same path
+    def varKeys(d: org.apache.spark.sql.DataFrame) = PerSeries.varForecastFixedByKey(
+        TimeseriesFrame(d.withColumn("y", col("x") * 0.5), Some("t"), Nil, Seq("k")),
+        Seq("x", "y"), breeze.linalg.DenseMatrix((0.4, 0.02), (0.05, 0.35)),
+        Array(6.0, 3.0), steps = 2)
+      .collect().map(_.getString(0)).toSet
+    assert(varKeys(df) == Set("a", "b"))
+    assert(varKeys(withNull) == Set("b"))
+  }
+
   test("series shorter than minRows are skipped, not failed") {
     import spark.implicits._
     val df = (0 until 5).map(i => ("tiny", i.toLong, i * 1.0)).toDF("k", "t", "x")
