@@ -1,23 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same pin as Verify: q78's calendar binning asserts a UTC session
-      // timezone (loudly, by design) — without this, a non-UTC driver JVM
-      // would poison the bench artifact instead of measuring
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
     // dev knobs (the driver sets none): SPARK_GRAFT_ONLY=q30,q22 runs a
     // subset; SPARK_GRAFT_REPEAT=3 times each query thrice and keeps the min
     // (steady-state); SPARK_GRAFT_EXPLAIN=1 prints each physical plan
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // min-of-3 by default so per-query regressions are separable from JIT
     // noise (round-2 judge: q34/q37/q09/q31/q32/q16 moved 2x between rounds
     // with n=1 timings)
@@ -30,7 +19,7 @@ object Bench {
     // recorded spread reached 1.67x from warm-up alone (VERDICT r8 task
     // 5); the throwaway moves that cost out of the min-of-N.
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.selected.map(g => g.name -> g.run).toMap
 
     // Warmup pass on the smallest scale factor: triggers Janino codegen
     // compilation and JIT of every query's generated classes, so the timed
@@ -76,7 +65,7 @@ object Bench {
     // raw per-core arithmetic, the same resources query execution uses,
     // at ~15-25 ms idle so 126 samples cost ~3 s per full run
     val sentinelRdd = spark.sparkContext
-      .range(0, 4L * 1000 * 1000, numSlices = cpus.toInt)
+      .range(0, 4L * 1000 * 1000, numSlices = cpus)
     def sentinel(): Double = {
       val t0 = System.nanoTime()
       spark.sparkContext.runJob(sentinelRdd, (it: Iterator[Long]) => {
@@ -262,7 +251,7 @@ object Bench {
     // as a regression.
     val heapGb = Runtime.getRuntime.maxMemory / 1e9
     if (heapGb < 7.0 || heapGb > 10.0)
-      println(f"[bench] WARNING heap_max_gb=$heapGb%.1f deviates from the " +
+      System.err.println(f"[bench] WARNING heap_max_gb=$heapGb%.1f deviates from the " +
         "floor-era config (-Xmx8g, measured optimal r12/r13) — totals are " +
         "not comparable to bench_floors.json or committed close-outs")
     val line =

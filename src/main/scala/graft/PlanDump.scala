@@ -1,32 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` per query to `<outDir>/<query><suffix>.txt`
   * — the optimization rounds' plan-evidence capture (guide §1: keep the
   * before/after physical plans next to the numbers). Query selection via
   * `SPARK_GRAFT_ONLY` (comma list; unset = all), SF dir via
   * `SPARK_GRAFT_SF_DIR`, suffix as the second arg (default "_after").
-  * Uses the bench's session shape so plans match what the driver runs. */
+  * Uses the bench's session ([[LocalSession]]) so plans match what the
+  * driver runs. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r15")
     val suffix = if (args.length > 1) args(1) else "_after"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    selected.keys.toSeq.sorted.foreach { n =>
+    SparkEntry.selected.sortBy(_.name).foreach { case SparkEntry.GateQuery(n, run, _) =>
       try {
-        val txt = selected(n)(spark, sfDir).queryExecution.explainString(
+        val txt = run(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"$n$suffix.txt"),

@@ -113,13 +113,9 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("spanskew")
     val n = args.lift(1).map(_.toLong).getOrElse(2000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = LocalSession.builder()
       .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // probe-harness only: a single-JVM local run at the node's memory
       // edge can stall >120 s in one GC/IO squall, and the heartbeat
       // "executor removal" that follows kills an otherwise-finishing

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement-only scale-up generator (r16, VERDICT r15 task 5): builds a
@@ -27,14 +26,7 @@ object ScaleGen {
     require(args.length == 3, "usage: ScaleGen <srcSfDir> <dstSfDir> <K>")
     val (src, dst, k) = (args(0), args(1), args(2).toInt)
     require(k >= 1, s"K must be >= 1: $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
 
     val off = (i: Int) => lit(i.toLong * 10000000L)
@@ -44,7 +36,7 @@ object ScaleGen {
         (col("user_id") + off(i)).as("user_id"), col("event_type"),
         col("value"), col("props"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(LocalSession.cpus)
       .write.mode("overwrite").parquet(s"$dst/events.parquet")
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
@@ -56,7 +48,7 @@ object ScaleGen {
           rotBy(i) + rotBy(i).toUpperCase).as("text"),
         col("lang"), col("source"), col("n_chars"))
     }.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(LocalSession.cpus)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
 
     val others = Seq("region", "nation", "customer", "supplier", "part",

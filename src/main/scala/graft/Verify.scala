@@ -1,37 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate registry result → parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
-    // dev knob (the driver sets none): restrict to a comma-separated query
-    // subset for fast local gate iteration with tools/compare.py
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // dev knob (the driver sets none): SPARK_GRAFT_ONLY restricts to a
+    // comma-separated query subset for fast local gate iteration with
+    // tools/compare.py
+    val selected = SparkEntry.selected
     // An errored query leaves no parquet dir, so it must leave a
     // machine-readable record instead: round 7's CORRECTNESS artifact
     // silently shrank from 80 to 33 rows because failures went only to
     // stderr. errors.json (query -> message) is written even when empty,
     // so its absence/presence is itself meaningful to the driver.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { g =>
+      try g.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${g.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed(name) = s"${e.getClass.getSimpleName}: " +
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
+        failed(g.name) = s"${e.getClass.getSimpleName}: " +
           Option(e.getMessage).getOrElse("").take(500)
       }
     }
@@ -47,8 +38,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // in the oracleSql map's order, so the file is stable byte for byte
+    val names = selected.map(_.name).toSet
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = failed

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extension hook registering graft's custom Catalyst functions for
   * SQL use (`spark.sql("SELECT nan_product(x) ...")`). Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * a session builder's `withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   *
   * Int parameters (shingle width, bit count, plane geometry) must be

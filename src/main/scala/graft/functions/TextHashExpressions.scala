@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback and interpret their lambda per element, which made the
   * minhash pipeline ~10⁸ interpreted expression evaluations per corpus
   * scan. The hash recurrences themselves are pure integer arithmetic, so
-  * the DuckDB oracle reproduces them bit-for-bit (SparkEntry §minhashSql).
+  * the DuckDB oracle reproduces them bit-for-bit (SparkEntry, q18's oracle).
   *
   * Every expression here implements real `doGenCode` (a static call into
   * the shared kernel — a top-level Scala object compiles to static

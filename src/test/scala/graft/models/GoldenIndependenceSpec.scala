@@ -159,7 +159,7 @@ class GoldenIndependenceSpec extends SparkSpec {
   // ------------------------------------- pinned goldens (= SparkEntry's)
 
   /** q31 golden (sf → (forecast, ci_low, ci_high) for steps 1..7) — the
-    * SAME numbers as SparkEntry.arimaForecastGoldenSql, restated so a
+    * SAME numbers as q31's oracle SQL in SparkEntry, restated so a
     * golden edit without a matching spec edit fails. */
   private val arimaGold: Map[Int, Seq[(Double, Double, Double)]] = Map(
     1 -> Seq((49.5486, 42.9291, 56.1681), (50.2096, 43.5101, 56.9091),
@@ -172,7 +172,7 @@ class GoldenIndependenceSpec extends SparkSpec {
       (50.1886, 47.6679, 52.7093)))
 
   /** q32 golden (sf → (v_f, v_lo, v_hi, c_f, c_lo, c_hi) steps 1..7) —
-    * restated from SparkEntry.varForecastGoldenSql. */
+    * restated from q32's oracle SQL in SparkEntry. */
   private val varGold: Map[Int, Seq[(Double, Double, Double, Double, Double, Double)]] = Map(
     1 -> Seq(
       (50.0927, 44.1545, 56.0309, 340.4694, 312.9349, 368.004),
