@@ -3,10 +3,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = LocalSession.cpus
-    val spark = LocalSession()
-    // dev knobs (the driver sets none): SPARK_GRAFT_ONLY=q30,q22 runs a
-    // subset; SPARK_GRAFT_REPEAT=3 times each query thrice and keeps the min
-    // (steady-state); SPARK_GRAFT_EXPLAIN=1 prints each physical plan
+    // dev knobs, all unset by default: SPARK_GRAFT_ONLY=q30_lomb_scargle,
+    // q22_lsh_topk runs a subset; SPARK_GRAFT_REPEAT=3 times each query
+    // thrice and keeps the min (steady-state); SPARK_GRAFT_EXPLAIN=1 prints
+    // each physical plan
     // min-of-3 by default so per-query regressions are separable from JIT
     // noise (round-2 judge: q34/q37/q09/q31/q32/q16 moved 2x between rounds
     // with n=1 timings)
@@ -19,7 +19,8 @@ object Bench {
     // recorded spread reached 1.67x from warm-up alone (VERDICT r8 task
     // 5); the throwaway moves that cost out of the min-of-N.
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    val selected = SparkEntry.selected.map(g => g.name -> g.run).toMap
+    val selected = SparkEntry.selected().map(g => g.name -> g.run).toMap
+    val spark = LocalSession()
 
     // Warmup pass on the smallest scale factor: triggers Janino codegen
     // compilation and JIT of every query's generated classes, so the timed

@@ -15,7 +15,7 @@ object PlanDump {
     val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    SparkEntry.selected.sortBy(_.name).foreach { case SparkEntry.GateQuery(n, run, _) =>
+    SparkEntry.selected().sortBy(_.name).foreach { case SparkEntry.GateQuery(n, run, _) =>
       try {
         val txt = run(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -4802,12 +4802,20 @@ object SparkEntry {
     registry.map(g => g.name -> g.run).toMap
   lazy val oracleSql: Map[String, String] = registry.map(g => g.name -> g.oracleSql).toMap
 
-  /** The registry restricted to `SPARK_GRAFT_ONLY` (a comma-separated name
-    * list; unset = all): the dev knob of Verify, Bench and PlanDump. */
-  def selected: Seq[GateQuery] = {
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    registry.filter(g => only.forall(_.contains(g.name)))
-  }
+  /** The registry restricted to `only`, a comma-separated list of full
+    * names (default `SPARK_GRAFT_ONLY`; unset = all): the dev knob of
+    * Verify, Bench and PlanDump. Items are trimmed and empty ones skipped,
+    * so a trailing comma is harmless; a list naming no query, or any name
+    * outside the registry, fails instead of running an empty selection. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[GateQuery] =
+    only.fold(registry) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- registry.map(_.name)
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY='$list' names no gate query")
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY: unknown gate query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+      registry.filter(g => names(g.name))
+    }
 
   // ==================================================================== //
 

@@ -5,12 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = LocalSession()
-    new java.io.File(outDir).mkdirs()
     // dev knob (the driver sets none): SPARK_GRAFT_ONLY restricts to a
     // comma-separated query subset for fast local gate iteration with
-    // tools/compare.py
-    val selected = SparkEntry.selected
+    // tools/compare.py; an unknown name fails here, before the session starts
+    val selected = SparkEntry.selected()
+    val spark = LocalSession()
+    new java.io.File(outDir).mkdirs()
     // An errored query leaves no parquet dir, so it must leave a
     // machine-readable record instead: round 7's CORRECTNESS artifact
     // silently shrank from 80 to 33 rows because failures went only to

@@ -191,10 +191,7 @@ object TextHash {
     val counts = new java.util.LinkedHashMap[String, Long]()
     var i = 0
     while (i < raw.length) {
-      if (raw(i).nonEmpty) {
-        val c = counts.get(raw(i))
-        counts.put(raw(i), if (c == null) 1L else c + 1L)
-      }
+      if (raw(i).nonEmpty) counts.put(raw(i), counts.getOrDefault(raw(i), 0L) + 1L)
       i += 1
     }
     val out = new Array[Any](counts.size)

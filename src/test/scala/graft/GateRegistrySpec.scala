@@ -29,6 +29,16 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(blank.isEmpty, s"blank oracle SQL: ${blank.mkString(", ")}")
   }
 
+  test("selected: a known subset, a loud unknown name, unset = all") {
+    val sub = SparkEntry.selected(Some(" q04_difference,q26_acf, ,"))
+    assert(sub.map(_.name).toSet == Set("q04_difference", "q26_acf"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("q04_difference,q04_diff")))
+    assert(e.getMessage.contains("q04_diff") && !e.getMessage.contains("q04_difference"))
+    intercept[IllegalArgumentException](SparkEntry.selected(Some(" , ")))
+    assert(SparkEntry.selected(None).size == 135)
+  }
+
   test("queries and oracleSql views cover the same names") {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
     assert(SparkEntry.queries.keySet == names.toSet)
