@@ -1,6 +1,6 @@
 package graft.models
 
-import breeze.linalg.{DenseMatrix, DenseVector, inv}
+import breeze.linalg.DenseVector
 import breeze.optimize.{DiffFunction, LBFGS}
 
 /** ARIMA(p,d,q) with exact Gaussian MLE — the Spark-side counterpart of the
@@ -12,12 +12,18 @@ import breeze.optimize.{DiffFunction, LBFGS}
   *
   *  - Harvey state-space form of ARMA(p,q), m = max(p, q+1), with the
   *    stationary initial covariance solved from the discrete Lyapunov
-  *    equation;
+  *    equation ([[ArmaKalman]], the one filter);
   *  - concentrated Gaussian log-likelihood via the Kalman filter;
   *  - stationarity/invertibility enforced through the Monahan (1984)
   *    PACF-space parameter transform (the same one statsmodels uses);
-  *  - forecast CI from the ψ-weight MA(∞) expansion, integrated d times
-  *    (`get_forecast` + `conf_int` semantics, `models.py:312-316`).
+  *  - forecast CI (`get_forecast` + `conf_int` semantics,
+  *    `models.py:312-316`): for d ≤ 1 the exact Kalman SE from the
+  *    end-of-sample state covariance, for d ≥ 2 the ψ-weight MA(∞)
+  *    expansion integrated d times.
+  *
+  * The filter runs once per installed parameter set ([[fit]]'s final pass
+  * or [[fitFixed]]); [[predict]] and [[fittedValues]] reuse its
+  * innovations and end-of-sample covariance.
   *
   * Fitting is driver-side by design: a forecast model consumes one
   * (collected) series — SURVEY §3.3/§4 — while Spark parallelizes across
@@ -28,27 +34,27 @@ final class Arima(val p: Int, val d: Int, val q: Int) {
   private var phi: Array[Double] = Array.empty
   private var theta: Array[Double] = Array.empty
   private var mu: Double = 0.0 // constant mean (only when d == 0)
-  private var sigma2: Double = Double.NaN
   private var w: Array[Double] = Array.empty // differenced series
   private var yRaw: Array[Double] = Array.empty
-  private var logLik: Double = Double.NaN
+  private var space: ArmaKalman = _
+  private var pass: ArmaKalman.Pass = _ // the filter pass at the installed parameters
   def nParams: Int = p + q + (if (d == 0) 1 else 0) + 1 // + sigma2
 
   def fittedPhi: Array[Double] = phi
   def fittedTheta: Array[Double] = theta
-  def fittedSigma2: Double = sigma2
+  def fittedSigma2: Double = pass.sigma2
   def fittedMu: Double = mu
   /** The (differenced, mean-centered) series the filter ran on. */
   def centeredSeries: Array[Double] = if (d == 0) w.map(_ - mu) else w
-  def aic: Double = -2 * logLik + 2 * nParams
-  def bic: Double = -2 * logLik + math.log(w.length) * nParams
+  def aic: Double = -2 * pass.logLik + 2 * nParams
+  def bic: Double = -2 * pass.logLik + math.log(w.length) * nParams
 
   // ---------------------------------------------------------------- fit
 
   def fit(y: Array[Double]): Arima = {
     require(y.length > p + d + q + 1, "series too short")
     yRaw = y
-    w = diff(y, d)
+    w = Arima.diff(y, d)
     val useMean = d == 0
     val wMean = if (useMean) w.sum / w.length else 0.0
 
@@ -68,19 +74,7 @@ final class Arima(val p: Int, val d: Int, val q: Int) {
       if (ll.isNaN || ll.isInfinite) 1e10 else -ll
     }
 
-    val objective = new DiffFunction[DenseVector[Double]] {
-      def calculate(v: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val f0 = negLogLik(v)
-        val g = DenseVector.zeros[Double](v.length)
-        val h = 1e-6
-        for (i <- 0 until v.length) {
-          val vp = v.copy; vp(i) += h
-          val vm = v.copy; vm(i) -= h
-          g(i) = (negLogLik(vp) - negLogLik(vm)) / (2 * h)
-        }
-        (f0, g)
-      }
-    }
+    val objective = Arima.centralDifferences(negLogLik)
 
     val start = DenseVector.zeros[Double](nFree)
     if (useMean) start(p + q) = wMean
@@ -91,11 +85,7 @@ final class Arima(val p: Int, val d: Int, val q: Int) {
     val opt = lbfgs.minimize(objective, opt1)
 
     val (ph, th, m) = unpack(opt)
-    phi = ph; theta = th; mu = m
-    val centered = if (useMean) w.map(_ - mu) else w
-    val (ll, s2) = Arima.logLikAndSigma2(centered, phi, theta)
-    logLik = ll; sigma2 = s2
-    this
+    install(ph, th, m)
   }
 
   /** Install fixed (externally-chosen) parameters instead of fitting —
@@ -110,61 +100,43 @@ final class Arima(val p: Int, val d: Int, val q: Int) {
     setFitted(y, ph, th, m)
   }
 
-  private def diff(y: Array[Double], times: Int): Array[Double] =
-    (1 to times).foldLeft(y)((a, _) => a.indices.drop(1).map(i => a(i) - a(i - 1)).toArray)
-
   /** Install externally-estimated parameters (used by [[Arimax]]'s joint
     * refinement, which optimizes the ARMA and regression parts together
     * and hands the ARMA piece back here for prediction/likelihood). */
   private[models] def setFitted(
       y: Array[Double], ph: Array[Double], th: Array[Double], m: Double): Arima = {
     yRaw = y
-    w = diff(y, d)
+    w = Arima.diff(y, d)
+    install(ph, th, m)
+  }
+
+  /** Set (φ, θ, μ) and run the one filter pass everything after reads. */
+  private def install(ph: Array[Double], th: Array[Double], m: Double): Arima = {
     phi = ph; theta = th; mu = m
-    val centered = if (d == 0) w.map(_ - mu) else w
-    val (ll, s2) = Arima.logLikAndSigma2(centered, phi, theta)
-    logLik = ll; sigma2 = s2
+    space = new ArmaKalman(phi, theta)
+    pass = space.run(centeredSeries)
     this
   }
+
+  /** Kalman forecast SE 1..steps ahead, integrated `times` ≤ 1 times, from
+    * the end-of-sample state covariance of the installed pass. */
+  private[models] def kalmanSe(steps: Int, times: Int): Array[Double] =
+    space.forecastSe(pass.pEnd, pass.sigma2, steps, times)
 
   // ------------------------------------------------------------- predict
 
   /** (forecast, ciLow, ciHigh) for 1..steps ahead at (1-alpha) confidence. */
   def predict(steps: Int, alpha: Double = 0.05): (Array[Double], Array[Double], Array[Double]) = {
-    val centered = if (d == 0) w.map(_ - mu) else w
     // forecast the ARMA process by iterating the difference equation on
     // filtered innovations (exact KF innovations at the end of sample)
-    val innov = Arima.innovations(centered, phi, theta)
-    val n = centered.length
-    val histW = centered.toBuffer
-    val histE = innov.toBuffer
-    val fw = new Array[Double](steps)
-    for (h <- 0 until steps) {
-      var v = 0.0
-      for (i <- 1 to p) {
-        val idx = n + h - i
-        v += phi(i - 1) * (if (idx >= 0) histW(idx) else 0.0)
-      }
-      for (j <- 1 to q) {
-        val idx = n + h - j
-        v += theta(j - 1) * (if (idx >= 0 && idx < n) histE(idx) else 0.0)
-      }
-      fw(h) = v
-      histW.append(v); histE.append(0.0)
-    }
-    val fwMean = fw.map(_ + mu)
+    val fwMean = ArmaKalman.forecast(phi, theta, centeredSeries, pass.innovations, steps)
+      .map(_ + mu)
 
-    // integrate d times onto the last observed levels
-    var level = fwMean
-    for (k <- 1 to d) {
-      val lastVals = diff(yRaw, d - k) // series at integration level k
-      var acc = lastVals.last
-      level = level.map { v => acc += v; acc }
-    }
+    val level = Arima.integrate(fwMean, yRaw, d)
 
     val se: Array[Double] =
-      if (d <= 1) Arima.forecastSe(centered, phi, theta, sigma2, steps, d)
-      else Arima.integratedPsiSe(phi, theta, sigma2, steps, d)
+      if (d <= 1) kalmanSe(steps, d)
+      else Arima.integratedPsiSe(phi, theta, pass.sigma2, steps, d)
     val z = Arima.zQuantile(alpha)
     (level, level.zip(se).map { case (f, s) => f - z * s },
       level.zip(se).map { case (f, s) => f + z * s })
@@ -172,23 +144,20 @@ final class Arima(val p: Int, val d: Int, val q: Int) {
 
   /** In-sample one-step predictions on the level scale (typ='levels'). */
   def fittedValues(): Array[Double] = {
-    val centered = if (d == 0) w.map(_ - mu) else w
-    val innov = Arima.innovations(centered, phi, theta)
-    val oneStepW = centered.zip(innov).map { case (x, e) => x - e + 0.0 }
+    val oneStepW = centeredSeries.zip(pass.innovations).map { case (x, e) => x - e + 0.0 }
       .map(_ + mu)
     if (d == 0) oneStepW
     else {
-      // level_hat_t = y_{t-1} + ŵ_t (d=1); first d values pinned to actuals
-      val fitted = new Array[Double](yRaw.length)
-      for (t <- 0 until yRaw.length) {
-        fitted(t) =
-          if (t < d) yRaw(t)
-          else yRaw(t - 1) + (if (d == 1) oneStepW(t - 1) else {
-            // d>1: reconstruct from the d-times-differenced prediction
-            yRaw(t - 1) - yRaw(t - 2) + oneStepW(t - d)
-          })
+      // y_t = Δᵈy_t + Σ_{j<d} Δʲy_{t-1}: level_hat_t = y_{t-1} + (ŵ + Σ_{0<j<d}
+      // Δʲy_{t-1}), ŵ the one-step prediction of Δᵈy_t = w_{t-d}; the
+      // first d values are pinned to actuals
+      val lower = (1 until d).map(j => Arima.diff(yRaw, j))
+      Array.tabulate(yRaw.length) { t =>
+        if (t < d) yRaw(t)
+        else yRaw(t - 1) + lower.indices.foldLeft(oneStepW(t - d)) { (acc, i) =>
+          acc + lower(i)(t - 2 - i)
+        }
       }
-      fitted
     }
   }
 
@@ -221,6 +190,34 @@ object Arima {
     zCache.computeIfAbsent(alpha, a =>
       new org.apache.commons.math3.distribution.NormalDistribution(0, 1)
         .inverseCumulativeProbability(1 - a.doubleValue / 2)).doubleValue
+
+  /** `times`-fold first differences of `y`. */
+  private[models] def diff(y: Array[Double], times: Int): Array[Double] =
+    (1 to times).foldLeft(y)((a, _) => a.indices.drop(1).map(i => a(i) - a(i - 1)).toArray)
+
+  /** Integrate differenced forecasts d times onto the last observed
+    * levels of `y` (typ='levels'). */
+  private[models] def integrate(fw: Array[Double], y: Array[Double], d: Int): Array[Double] =
+    (1 to d).foldLeft(fw) { (level, k) =>
+      var acc = diff(y, d - k).last // series at integration level k
+      level.map { v => acc += v; acc }
+    }
+
+  /** The MLE objective with a central-difference gradient (step 1e-6). */
+  private[models] def centralDifferences(negLogLik: DenseVector[Double] => Double)
+      : DiffFunction[DenseVector[Double]] = new DiffFunction[DenseVector[Double]] {
+    def calculate(v: DenseVector[Double]): (Double, DenseVector[Double]) = {
+      val f0 = negLogLik(v)
+      val g = DenseVector.zeros[Double](v.length)
+      val h = 1e-6
+      for (i <- 0 until v.length) {
+        val vp = v.copy; vp(i) += h
+        val vm = v.copy; vm(i) -= h
+        g(i) = (negLogLik(vp) - negLogLik(vm)) / (2 * h)
+      }
+      (f0, g)
+    }
+  }
 
   /** Monahan (1984) transform: unconstrained reals → stationary AR region
     * via partial autocorrelations (same as statsmodels
@@ -289,221 +286,6 @@ object Arima {
     out
   }
 
-  /** Kalman filter over the Harvey ARMA state space; returns
-    * (concentrated loglik, sigma2hat). */
-  def logLikAndSigma2(x: Array[Double], phi: Array[Double], theta: Array[Double])
-      : (Double, Double) = {
-    val n = x.length
-    val p = phi.length; val q = theta.length
-    val m = math.max(p, q + 1)
-    if (m == 1) {
-      // Scalar AR(1)/white-noise fast path: the Breeze path below spends
-      // its time allocating 1×1 matrices per filter step (measured 245 µs
-      // per 67-point fixed fit — the whole per-series cost of the q88
-      // fan-out). Every arithmetic op mirrors the matrix path in order
-      // and association, so results are bit-identical: P0 = (1/(1-φ²))·1
-      // replays inv(lhs)·vec(RR), and the update replays
-      // ((T·P·Tᵀ)+RR)−((K·Kᵀ)·F) left-to-right.
-      val ph = if (p == 1) phi(0) else 0.0
-      var P = (1.0 / (1.0 - ph * ph)) * 1.0
-      var a = 0.0
-      var sumLogF = 0.0
-      var sumV2F = 0.0
-      var t = 0
-      while (t < n) {
-        val v = x(t) - a
-        val F = P
-        if (F <= 0 || F.isNaN) return (Double.NaN, Double.NaN)
-        sumLogF += math.log(F)
-        sumV2F += v * v / F
-        val K = (ph * P) / F
-        a = ph * a + K * v
-        P = (ph * P) * ph + 1.0 - (K * K) * F
-        t += 1
-      }
-      val s2 = sumV2F / n
-      val ll = -0.5 * n * (math.log(2 * math.Pi) + 1 + math.log(s2)) - 0.5 * sumLogF
-      return (ll, s2)
-    }
-    val T = DenseMatrix.zeros[Double](m, m)
-    for (i <- 0 until p) T(i, 0) = phi(i)
-    for (i <- 0 until m - 1) T(i, i + 1) = 1.0
-    val R = DenseVector.zeros[Double](m)
-    R(0) = 1.0
-    for (j <- 0 until q) R(j + 1) = theta(j)
-    val RR = R * R.t
-
-    // stationary P0: vec(P) = (I - T⊗T)^-1 vec(RR')
-    val m2 = m * m
-    val kron = DenseMatrix.zeros[Double](m2, m2)
-    for (i <- 0 until m; j <- 0 until m; k <- 0 until m; l <- 0 until m)
-      kron(i * m + k, j * m + l) = T(i, j) * T(k, l)
-    val lhs = DenseMatrix.eye[Double](m2) - kron
-    val vecP = inv(lhs) * DenseVector(RR.t.toArray) // column-major vec
-    var P = new DenseMatrix(m, m, vecP.toArray)
-    var a = DenseVector.zeros[Double](m)
-
-    var sumLogF = 0.0
-    var sumV2F = 0.0
-    var t = 0
-    while (t < n) {
-      val v = x(t) - a(0)
-      val F = P(0, 0)
-      if (F <= 0 || F.isNaN) return (Double.NaN, Double.NaN)
-      sumLogF += math.log(F)
-      sumV2F += v * v / F
-      // K = T P Z' / F (Z = e1)
-      val PZ = P(::, 0)
-      val K = (T * PZ) / F
-      a = T * a + K * v
-      P = T * P * T.t + RR - (K * K.t) * F
-      t += 1
-    }
-    val s2 = sumV2F / n
-    val ll = -0.5 * n * (math.log(2 * math.Pi) + 1 + math.log(s2)) - 0.5 * sumLogF
-    (ll, s2)
-  }
-
   def concentratedLogLik(x: Array[Double], phi: Array[Double], theta: Array[Double]): Double =
-    logLikAndSigma2(x, phi, theta)._1
-
-  /** Exact forecast standard errors from the Kalman recursion: run the
-    * filter over the sample, then propagate the predicted state covariance
-    * forward with no updates. For d=1 the level sum is tracked by an
-    * augmented accumulator state (integration states carry no uncertainty
-    * at the end of the sample since past levels are observed). Matches
-    * statsmodels `get_forecast().conf_int()` including the not-yet-
-    * converged end-of-sample state covariance. */
-  def forecastSe(x: Array[Double], phi: Array[Double], theta: Array[Double],
-      sigma2: Double, steps: Int, d: Int): Array[Double] = {
-    val p = phi.length; val q = theta.length
-    val m = math.max(p, q + 1)
-    if (m == 1 && d == 0) {
-      // Scalar fast path (see logLikAndSigma2): op-for-op mirror of the
-      // m=1 matrix recursion — bit-identical, no per-step allocation.
-      val ph = if (p == 1) phi(0) else 0.0
-      var P = (1.0 / (1.0 - ph * ph)) * 1.0
-      var a = 0.0
-      var t = 0
-      while (t < x.length) {
-        val v = x(t) - a
-        val F = P
-        val K = (ph * P) / F
-        a = ph * a + K * v
-        P = (ph * P) * ph + 1.0 - (K * K) * F
-        t += 1
-      }
-      val se = new Array[Double](steps)
-      var Ph = P
-      var h = 0
-      while (h < steps) {
-        se(h) = math.sqrt(sigma2 * Ph)
-        Ph = (ph * Ph) * ph + 1.0
-        h += 1
-      }
-      return se
-    }
-    val T = DenseMatrix.zeros[Double](m, m)
-    for (i <- 0 until p) T(i, 0) = phi(i)
-    for (i <- 0 until m - 1) T(i, i + 1) = 1.0
-    val R = DenseVector.zeros[Double](m)
-    R(0) = 1.0
-    for (j <- 0 until q) R(j + 1) = theta(j)
-    val RR = R * R.t
-    val m2 = m * m
-    val kron = DenseMatrix.zeros[Double](m2, m2)
-    for (i <- 0 until m; j <- 0 until m; k <- 0 until m; l <- 0 until m)
-      kron(i * m + k, j * m + l) = T(i, j) * T(k, l)
-    val vecP = inv(DenseMatrix.eye[Double](m2) - kron) * DenseVector(RR.t.toArray)
-    var P = new DenseMatrix(m, m, vecP.toArray)
-    var a = DenseVector.zeros[Double](m)
-    var t = 0
-    while (t < x.length) {
-      val v = x(t) - a(0)
-      val F = P(0, 0)
-      val K = (T * P(::, 0)) / F
-      a = T * a + K * v
-      P = T * P * T.t + RR - (K * K.t) * F
-      t += 1
-    }
-    // P is now Var(α_{n+1} | data) (scaled by σ²=1 ⇒ multiply at the end)
-    val se = new Array[Double](steps)
-    if (d == 0) {
-      var Ph = P
-      for (h <- 0 until steps) {
-        se(h) = math.sqrt(sigma2 * Ph(0, 0))
-        Ph = T * Ph * T.t + RR
-      }
-    } else {
-      // augmented [α; s]: s accumulates future w's (the level offset)
-      val Ta = DenseMatrix.zeros[Double](m + 1, m + 1)
-      for (i <- 0 until m; j <- 0 until m) Ta(i, j) = T(i, j)
-      for (j <- 0 until m) Ta(m, j) = T(0, j) // Z·T row (Z = e1)
-      Ta(m, m) = 1.0
-      val Ra = DenseVector.zeros[Double](m + 1)
-      for (i <- 0 until m) Ra(i) = R(i)
-      Ra(m) = R(0)
-      val RRa = Ra * Ra.t
-      var Pa = DenseMatrix.zeros[Double](m + 1, m + 1)
-      for (i <- 0 until m; j <- 0 until m) Pa(i, j) = P(i, j)
-      for (i <- 0 until m) { Pa(i, m) = P(i, 0); Pa(m, i) = P(0, i) }
-      Pa(m, m) = P(0, 0)
-      for (h <- 0 until steps) {
-        se(h) = math.sqrt(sigma2 * Pa(m, m))
-        Pa = Ta * Pa * Ta.t + RRa
-      }
-    }
-    se
-  }
-
-  /** One-step-ahead innovations (filtered) for the fitted ARMA. */
-  def innovations(x: Array[Double], phi: Array[Double], theta: Array[Double]): Array[Double] = {
-    val n = x.length
-    val p = phi.length; val q = theta.length
-    val m = math.max(p, q + 1)
-    if (m == 1) {
-      // Scalar fast path (see logLikAndSigma2): bit-identical m=1 filter.
-      val ph = if (p == 1) phi(0) else 0.0
-      var P = (1.0 / (1.0 - ph * ph)) * 1.0
-      var a = 0.0
-      val out = new Array[Double](n)
-      var t = 0
-      while (t < n) {
-        val v = x(t) - a
-        out(t) = v
-        val F = P
-        val K = (ph * P) / F
-        a = ph * a + K * v
-        P = (ph * P) * ph + 1.0 - (K * K) * F
-        t += 1
-      }
-      return out
-    }
-    val T = DenseMatrix.zeros[Double](m, m)
-    for (i <- 0 until p) T(i, 0) = phi(i)
-    for (i <- 0 until m - 1) T(i, i + 1) = 1.0
-    val R = DenseVector.zeros[Double](m)
-    R(0) = 1.0
-    for (j <- 0 until q) R(j + 1) = theta(j)
-    val RR = R * R.t
-    val m2 = m * m
-    val kron = DenseMatrix.zeros[Double](m2, m2)
-    for (i <- 0 until m; j <- 0 until m; k <- 0 until m; l <- 0 until m)
-      kron(i * m + k, j * m + l) = T(i, j) * T(k, l)
-    val vecP = inv(DenseMatrix.eye[Double](m2) - kron) * DenseVector(RR.t.toArray)
-    var P = new DenseMatrix(m, m, vecP.toArray)
-    var a = DenseVector.zeros[Double](m)
-    val out = new Array[Double](n)
-    var t = 0
-    while (t < n) {
-      val v = x(t) - a(0)
-      out(t) = v
-      val F = P(0, 0)
-      val K = (T * P(::, 0)) / F
-      a = T * a + K * v
-      P = T * P * T.t + RR - (K * K.t) * F
-      t += 1
-    }
-    out
-  }
+    new ArmaKalman(phi, theta).run(x).logLik
 }

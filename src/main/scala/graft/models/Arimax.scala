@@ -28,16 +28,12 @@ final class Arimax(val p: Int, val d: Int, val q: Int) {
   def fittedBeta: Array[Double] = beta.toArray
   def arimaPart: Arima = arima
 
-  private def diffV(v: Array[Double], times: Int): Array[Double] =
-    (1 to times).foldLeft(v)((a, _) =>
-      a.indices.drop(1).map(i => a(i) - a(i - 1)).toArray)
-
   def fit(y: Array[Double], exog: Array[Array[Double]]): Arimax = {
     require(y.length == exog.length, "endog/exog length mismatch")
     yRaw = y; xRaw = exog
     val k = exog.head.length
-    val yd = diffV(y, d)
-    val xd = (0 until k).map(j => diffV(exog.map(_(j)), d)).toArray
+    val yd = Arima.diff(y, d)
+    val xd = (0 until k).map(j => Arima.diff(exog.map(_(j)), d)).toArray
     val n = yd.length
 
     val X = DenseMatrix.tabulate[Double](n, k)((i, j) => xd(j)(i))
@@ -83,19 +79,7 @@ final class Arimax(val p: Int, val d: Int, val q: Int) {
       val ll = Arima.concentratedLogLik(resid, ph, th)
       if (ll.isNaN || ll.isInfinite) 1e10 else -ll
     }
-    val objective = new breeze.optimize.DiffFunction[DenseVector[Double]] {
-      def calculate(v: DenseVector[Double]): (Double, DenseVector[Double]) = {
-        val f0 = negLL(v)
-        val g = DenseVector.zeros[Double](v.length)
-        val h = 1e-6
-        for (i <- 0 until v.length) {
-          val vp = v.copy; vp(i) += h
-          val vm = v.copy; vm(i) -= h
-          g(i) = (negLL(vp) - negLL(vm)) / (2 * h)
-        }
-        (f0, g)
-      }
-    }
+    val objective = Arima.centralDifferences(negLL)
     val start = DenseVector.zeros[Double](nFree)
     for (j <- 0 until k) start(p + q + j) = b(j)
     if (useMean) {
@@ -126,8 +110,8 @@ final class Arimax(val p: Int, val d: Int, val q: Int) {
     require(b.length == exog.head.length, "one beta per exog column")
     yRaw = y; xRaw = exog
     val k = exog.head.length
-    val yd = diffV(y, d)
-    val xd = (0 until k).map(j => diffV(exog.map(_(j)), d)).toArray
+    val yd = Arima.diff(y, d)
+    val xd = (0 until k).map(j => Arima.diff(exog.map(_(j)), d)).toArray
     val n = yd.length
     val X = DenseMatrix.tabulate[Double](n, k)((i, j) => xd(j)(i))
     beta = DenseVector(b)
@@ -145,19 +129,14 @@ final class Arimax(val p: Int, val d: Int, val q: Int) {
     // regression contribution on the differenced scale, then integrate
     val xd = (0 until k).map { j =>
       val full = xRaw.map(_(j)) ++ futureExog.map(_(j))
-      diffV(full, d).takeRight(steps)
+      Arima.diff(full, d).takeRight(steps)
     }
     val regDiff = (0 until steps).map(h =>
       (0 until k).map(j => beta(j) * xd(j)(h)).sum).toArray
     // u-forecast is on the differenced-residual scale; integrate the
     // combined differenced forecast back onto the level
     val combinedDiff = regDiff.zip(uF).map { case (a, b) => a + b }
-    var level = combinedDiff
-    for (kk <- 1 to d) {
-      val lastVals = diffV(yRaw, d - kk)
-      var acc = lastVals.last
-      level = level.map { v => acc += v; acc }
-    }
+    val level = Arima.integrate(combinedDiff, yRaw, d)
     // CI width comes from the ARMA error process (β treated as known).
     // For d ≥ 1 the forecast-error variance must accumulate through the
     // integration — run the Kalman SE recursion with the d-fold level
@@ -167,9 +146,7 @@ final class Arimax(val p: Int, val d: Int, val q: Int) {
       if (d == 0) {
         val z0 = Arima.zQuantile(alpha)
         uF.zip(uHi).map { case (f, h) => (h - f) / z0 }
-      } else if (d == 1)
-        Arima.forecastSe(arima.centeredSeries, arima.fittedPhi,
-          arima.fittedTheta, arima.fittedSigma2, steps, d)
+      } else if (d == 1) arima.kalmanSe(steps, d)
       else
         Arima.integratedPsiSe(arima.fittedPhi, arima.fittedTheta,
           arima.fittedSigma2, steps, d)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.models.ArmaKalman
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -474,16 +475,18 @@ object StreamingOps {
 
   /** Per-key incremental fixed-parameter ARMA forecasting — the streaming
     * twin of [[graft.models.PerSeries.armaForecastFixedByKey]] (the q52
-    * fan-out): the scalar Kalman filter behind `Arima.fitFixed` has O(m²)
-    * state per key — (a, P, Σv²/F, n) plus the last p observations and
-    * the last q innovations — so it folds across micro-batches via
-    * `flatMapGroupsWithState` with NO refit per batch. After each batch
-    * every touched key emits its `steps`-ahead forecast/CI from the
-    * post-batch state, matching a from-scratch batch `fitFixed` on the
-    * accumulated prefix (differential spec, 1e-9). The stationary P₀ is
-    * computed once on the driver (it depends only on (φ, θ)); all
-    * executor-side updates are plain scalar loops (no BLAS — the q87 FMA
-    * determinism rule). d = 0, the q52 surface. */
+    * fan-out). It folds the one ARMA Kalman filter behind
+    * `Arima.fitFixed`, [[graft.models.ArmaKalman]], across micro-batches
+    * via `flatMapGroupsWithState` with NO refit per batch: the per-key
+    * state is O(m²) — (a, P, Σv²/F, n) plus the last p observations and
+    * the last q innovations. The state space (T, R·Rᵀ, the stationary P₀)
+    * is built once on the driver; executors run only the filter's plain
+    * scalar loops (no BLAS — the q87 FMA determinism rule). An observation
+    * whose F is not positive is skipped. After each batch every touched
+    * key emits its `steps`-ahead forecast/CI from the post-batch state by
+    * `ArmaKalman.forecast` and `forecastSe`, as `Arima.predict` does,
+    * matching a from-scratch batch `fitFixed` on the accumulated prefix
+    * (differential spec, 1e-9). d = 0, the q52 surface. */
   final case class ArmaKfState(a: Array[Double], pMat: Array[Double],
       sumV2F: Double, n: Long, lastW: Array[Double], lastE: Array[Double])
   final case class ArmaForecastRow(key: Long, n: Long, step: Int,
@@ -495,43 +498,14 @@ object StreamingOps {
       phi: Array[Double], theta: Array[Double], mu: Double,
       steps: Int, alpha: Double = 0.05): Dataset[ArmaForecastRow] = {
     val p = phi.length; val q = theta.length
-    val m = math.max(p, q + 1)
-    // row-major state-space matrices; P0 from (I − T⊗T)⁻¹vec(RR) exactly
-    // as Arima.logLikAndSigma2 builds it (RR symmetric → layout-agnostic)
-    val tMat = Array.ofDim[Double](m * m)
-    for (i <- 0 until p) tMat(i * m) = phi(i)
-    for (i <- 0 until m - 1) tMat(i * m + i + 1) = 1.0
-    val rVec = Array.ofDim[Double](m)
-    rVec(0) = 1.0
-    for (j <- 0 until q) rVec(j + 1) = theta(j)
-    val rr = Array.tabulate(m * m)(ix => rVec(ix / m) * rVec(ix % m))
-    val p0: Array[Double] = {
-      val m2 = m * m
-      val kron = breeze.linalg.DenseMatrix.zeros[Double](m2, m2)
-      for (i <- 0 until m; j <- 0 until m; k <- 0 until m; l <- 0 until m)
-        kron(i * m + k, j * m + l) = tMat(i * m + j) * tMat(k * m + l)
-      val lhs = breeze.linalg.DenseMatrix.eye[Double](m2) - kron
-      val vecP = breeze.linalg.inv(lhs) * breeze.linalg.DenseVector(rr.clone())
-      val pm = new breeze.linalg.DenseMatrix(m, m, vecP.toArray)
-      Array.tabulate(m * m)(ix => pm(ix / m, ix % m))
-    }
+    val space = new ArmaKalman(phi, theta)
     val z = new org.apache.commons.math3.distribution.NormalDistribution(0, 1)
       .inverseCumulativeProbability(1 - alpha / 2)
-
-    def matMulRM(a: Array[Double], b: Array[Double]): Array[Double] =
-      Array.tabulate(m * m) { ix =>
-        val i = ix / m; val j = ix % m
-        var s = 0.0; var l = 0
-        while (l < m) { s += a(i * m + l) * b(l * m + j); l += 1 }
-        s
-      }
-    def matMulRMt(a: Array[Double], b: Array[Double]): Array[Double] =
-      Array.tabulate(m * m) { ix =>
-        val i = ix / m; val j = ix % m
-        var s = 0.0; var l = 0
-        while (l < m) { s += a(i * m + l) * b(j * m + l); l += 1 }
-        s
-      }
+    // newest-first ring of the last k values
+    def push(ring: Array[Double], k: Int, x: Double): Unit = if (k > 0) {
+      System.arraycopy(ring, 0, ring, 1, k - 1)
+      ring(0) = x
+    }
 
     val typed = stream.select(
       col(keyCol).cast("long").as("key"),
@@ -544,71 +518,37 @@ object StreamingOps {
         OutputMode.Update(), GroupStateTimeout.NoTimeout)(
         (key: Long, rows: Iterator[(Long, Double, Double)],
          state: GroupState[ArmaKfState]) => {
-          var st = state.getOption.getOrElse(ArmaKfState(
-            new Array[Double](m), p0.clone(), 0.0, 0L,
-            new Array[Double](math.max(p, 1)), new Array[Double](math.max(q, 1))))
+          val old = state.getOption.getOrElse {
+            val kf = space.start()
+            ArmaKfState(kf.a, kf.pMat, 0.0, 0L,
+              new Array[Double](math.max(p, 1)), new Array[Double](math.max(q, 1)))
+          }
+          val kf = space.resume(old.a.clone(), old.pMat.clone())
+          val (lastW, lastE) = (old.lastW.clone(), old.lastE.clone())
+          var sumV2F = old.sumV2F
+          var n = old.n
           rows.toSeq.sortBy(_._2).foreach { case (_, _, raw) =>
             val x = raw - mu
-            val a = st.a; val pm = st.pMat
-            val v = x - a(0)
-            val bigF = pm(0)
-            if (bigF > 0 && !bigF.isNaN) {
-              val kVec = Array.tabulate(m) { i =>
-                var s = 0.0; var j = 0
-                while (j < m) { s += tMat(i * m + j) * pm(j * m); j += 1 }
-                s / bigF
-              }
-              val a2 = Array.tabulate(m) { i =>
-                var s = 0.0; var j = 0
-                while (j < m) { s += tMat(i * m + j) * a(j); j += 1 }
-                s + kVec(i) * v
-              }
-              val tpt = matMulRMt(matMulRM(tMat, pm), tMat)
-              val p2 = Array.tabulate(m * m)(ix =>
-                tpt(ix) + rr(ix) - kVec(ix / m) * kVec(ix % m) * bigF)
-              // newest-first rings of the last p observations / q innovations
-              val lw =
-                if (p == 0) st.lastW
-                else (x +: st.lastW.toSeq.take(p - 1)).toArray
-              val le =
-                if (q == 0) st.lastE
-                else (v +: st.lastE.toSeq.take(q - 1)).toArray
-              st = ArmaKfState(a2, p2, st.sumV2F + v * v / bigF, st.n + 1, lw, le)
+            val f = kf.f
+            if (f > 0 && !f.isNaN) {
+              val v = kf.step(x)
+              push(lastW, p, x)
+              push(lastE, q, v)
+              sumV2F += v * v / f
+              n += 1
             }
           }
-          state.update(st)
-          if (st.n == 0) Iterator.empty
+          state.update(ArmaKfState(kf.a, kf.pMat, sumV2F, n, lastW, lastE))
+          if (n == 0) Iterator.empty
           else {
-            // h-step difference equation on the rings (Arima.predict's
-            // recursion: absent history and future innovations are 0)
-            val fw = new Array[Double](steps)
-            for (h <- 0 until steps) {
-              var v = 0.0
-              for (i <- 1 to p) {
-                val back = i - h // back-th most recent observation (1-based)
-                v += phi(i - 1) * (
-                  if (back <= 0) fw(h - i)
-                  else if (back <= math.min(st.n, p.toLong)) st.lastW(back - 1)
-                  else 0.0)
-              }
-              for (j <- 1 to q) {
-                val back = j - h
-                v += theta(j - 1) * (
-                  if (back >= 1 && back <= math.min(st.n, q.toLong)) st.lastE(back - 1)
-                  else 0.0)
-              }
-              fw(h) = v
-            }
-            val sigma2 = st.sumV2F / st.n
-            var ph = st.pMat
-            val out = (0 until steps).map { h =>
-              val se = math.sqrt(sigma2 * ph(0))
-              val next = matMulRMt(matMulRM(tMat, ph), tMat)
-              ph = Array.tabulate(m * m)(ix => next(ix) + rr(ix))
+            def history(ring: Array[Double], k: Int) =
+              ring.take(math.min(n, k.toLong).toInt).reverse
+            val fw = ArmaKalman.forecast(phi, theta, history(lastW, p), history(lastE, q), steps)
+            val se = space.forecastSe(kf.pMat, sumV2F / n, steps, 0)
+            Iterator.tabulate(steps) { h =>
               val f = fw(h) + mu
-              ArmaForecastRow(key, st.n, h + 1, f, f - z * se, f + z * se)
+              ArmaForecastRow(key, n, h + 1, f, f - z * se(h), f + z * se(h))
             }
-            out.iterator
           }
         })(Encoders.product[ArmaKfState], Encoders.product[ArmaForecastRow])
   }

@@ -94,4 +94,20 @@ class ArimaSpec extends SparkSpec {
       }
     }
   }
+
+  test("fittedValues reconstructs the level at every d (cubic under ARIMA(0,d,0))") {
+    // white noise on Δᵈy predicts Δᵈy_t = 0, so the fitted level is
+    // y_t − Δᵈy_t = −Σ_{k=1..d} C(d,k)(−1)ᵏ y_{t−k}; the first d are actuals
+    val y = Array.tabulate(20)(i => 0.8 * i * i * i - 3.0 * i * i + 2.5 * i + 11.0)
+    for (d <- 1 to 4) {
+      val fv = new Arima(0, d, 0).fitFixed(y, Array.empty, Array.empty).fittedValues()
+      def binom(k: Int) = (1 to k).foldLeft(1.0)((c, i) => c * (d - i + 1) / i)
+      y.indices.foreach { t =>
+        val want = if (t < d) y(t)
+          else -(1 to d).map(k => binom(k) * (if (k % 2 == 0) 1 else -1) * y(t - k)).sum
+        assert(math.abs(fv(t) - want) <= 1e-9 * math.abs(y(t)).max(1.0),
+          s"d=$d t=$t: ${fv(t)} vs $want")
+      }
+    }
+  }
 }
