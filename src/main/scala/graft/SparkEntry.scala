@@ -1195,10 +1195,11 @@ object SparkEntry {
         |SELECT doc_id, lang FROM s WHERE rk <= ceil(n * 0.2)""".stripMargin),
     // ---- §2.8 spectral / correlation ----------------------------------
     GateQuery("q54_acf_distributed", (s, dir) => {
-      // the horizontally-scalable ACF formulation (parallel sort +
-      // zipWithIndex + explode-join — no single-partition window) under
-      // the hash gate; numerically identical to q26's acfVector up to
-      // summation order, so round(6) hashes against the same closed form
+      // the horizontally-scalable ACF formulation (parallel range sort +
+      // a RangeScan carry of the following partitions' heads — no
+      // single-partition window) under the hash gate; numerically
+      // identical to q26's acfVector up to summation order, so round(6)
+      // hashes against the same closed form
       val t = ev(s, dir)
       val vec = Correlation.acfVectorDistributed(t, "value", maxLag = 24)
       def r6(x: Double) =

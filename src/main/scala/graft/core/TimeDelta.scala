@@ -113,7 +113,8 @@ object TimeDelta {
     }
     val partials: Array[(Array[Double], Boolean, Boolean, Long)] =
       if (seriesKeys.isEmpty) {
-        // keyless path: one range sort and the RangeScan SUMMARY job
+        // keyless path: one sort (`RangeScan.sorted`: a range sort, or one
+        // partition on a small input) and the RangeScan SUMMARY job
         // alone (no carry pass, cache or broadcast) fold each partition's
         // WITHIN-partition diffs into the mergeable partial and ship its
         // first/last time alongside; the driver stitches the boundary
@@ -121,11 +122,8 @@ object TimeDelta {
         // global lag column's (ties arbitrary either way), and every
         // merged quantity is order-free (TreeSet of smallest, or-flags,
         // associative gcd).
-        val np = math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
-        val ranged = df.select(col(timeCol).cast("double").as("__t"))
-          .filter(col("__t").isNotNull)
-          .repartitionByRange(np, col("__t"))
-          .sortWithinPartitions("__t")
+        val ranged = RangeScan.sorted(df.select(col(timeCol).cast("double").as("__t"))
+          .filter(col("__t").isNotNull), col("__t"))
         val raw = RangeScan.summaries(Bridge.catalystRows(ranged)) { it =>
           val seen = scala.collection.mutable.TreeSet.empty[Double]
           val st = Array(false, false)

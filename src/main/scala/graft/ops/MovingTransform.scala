@@ -367,11 +367,11 @@ object MovingTransform {
       }
     }
     val rdd = Bridge.catalystRows(proj)
-    val offsets = RangeScan.summaries(rdd) { it =>
+    val offsets = RangeScan.carriesLeft(rdd, (Array.fill(nC)(0.0), Array.fill(nC)(1.0))) { it =>
       val s = Array.fill(nC)(0.0); val p = Array.fill(nC)(1.0)
       it.foreach(fold(s, p, _))
       (s, p)
-    }.scanLeft((Array.fill(nC)(0.0), Array.fill(nC)(1.0))) { case ((accS, accP), (s, p)) =>
+    } { case ((accS, accP), (s, p)) =>
       (Array.tabulate(nC)(k => accS(k) + s(k)), Array.tabulate(nC)(k => accP(k) * p(k)))
     }
     val colIdx = cols.zipWithIndex.toMap

@@ -182,14 +182,13 @@ object RangeWindow {
     * ring cannot hold the rows themselves. */
   private def trailingCarries[A: scala.reflect.ClassTag](rdd: RDD[InternalRow],
       k: Int)(decode: InternalRow => A): Array[Array[A]] = {
-    val tails = RangeScan.summaries(rdd) { it =>
+    RangeScan.carriesLeft(rdd, Array.empty[A]) { it =>
       val ring = new Array[A](math.max(k, 1))
       var n = 0L
       it.foreach { r => ring((n % ring.length).toInt) = decode(r); n += 1 }
       val m = math.min(n, k.toLong).toInt
       Array.tabulate(m)(i => ring(((n - m + i) % ring.length).toInt))
-    }
-    tails.scanLeft(Array.empty[A])((acc, t) => (acc ++ t).takeRight(k))
+    }((acc, t) => (acc ++ t).takeRight(k))
   }
 
   /** Range-partitioned LAG columns — the scale path for building a lag

@@ -27,14 +27,16 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: the only global computation is the exclusive prefix sum
   * of token counts in id order. [[packSequences]] computes it as a
-  * [[graft.core.RangeScan]] — a parallel range sort, one tiny
-  * per-partition-totals job (P scalars to the driver; the sort's shuffle
-  * files are reused, data moves once), then an embarrassingly parallel
+  * [[graft.core.RangeScan]] — a parallel range sort, a per-partition
+  * token-totals job (P scalars to the driver; the sort's shuffle files are
+  * reused, data moves once), then an embarrassingly parallel
   * per-partition scan that emits ≤ ⌈tok/budget⌉+1 span rows per doc. No
-  * single-partition window anywhere. [[packSequencesWindow]] is the
-  * declarative reference formulation (global `sum() OVER` — a
-  * single-partition WindowExec, fine below ~1M docs) used as the
-  * differential oracle in the spec.
+  * single-partition window anywhere. A small input (under
+  * `RangeScan.SmallInputBytes`) is sorted in one partition instead, whose
+  * offset is 0: no job runs before the caller's action.
+  * [[packSequencesWindow]] is the declarative reference formulation
+  * (global `sum() OVER` — a single-partition WindowExec, fine below ~1M
+  * docs) used as the differential oracle in the spec.
   */
 object Packing {
 
@@ -72,16 +74,15 @@ object Packing {
       budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val spark = df.sparkSession
-    val base = Bridge.catalystRows(df.filter(col(tokCol) > 0)
-      .select(col(idCol).cast("long"), col(tokCol).cast("long"))
-      .orderBy(col(idCol)))                       // parallel range sort
+    val base = Bridge.catalystRows(RangeScan.sorted(df.filter(col(tokCol) > 0), col(idCol))
+      .select(col(idCol).cast("long"), col(tokCol).cast("long")))
       .map { r =>
         require(!r.isNullAt(0), s"packSequences: null $idCol")
         (r.getLong(0), r.getLong(1))
       }
     // per-partition token totals → exclusive per-partition offsets; the
     // summary job re-reads the sort's shuffle output, not the source
-    val offsets = RangeScan.summaries(base)(_.foldLeft(0L)(_ + _._2)).scanLeft(0L)(_ + _)
+    val offsets = RangeScan.carriesLeft(base, 0L)(_.foldLeft(0L)(_ + _._2))(_ + _)
     val b = budget // local so the closure captures a scalar, not `this`
     val rows = RangeScan.withCarry(base, offsets) { (offset, it) =>
       var run = offset

@@ -107,17 +107,16 @@ object Sampling {
     val spark = df.sparkSession
     // a null token count has no budget contribution and no place in the
     // cut — dropped explicitly (it would otherwise NPE the scan below)
-    val sorted = df.filter(col(tokCol).isNotNull)
-      .withColumn("__tok", col(tokCol).cast("long"))
-      .orderBy(col(scoreCol).desc, col(idCol)) // parallel range sort
+    val sorted = RangeScan.sorted(df.filter(col(tokCol).isNotNull)
+      .withColumn("__tok", col(tokCol).cast("long")), col(scoreCol).desc, col(idCol))
     val tokIdx = sorted.schema.fieldIndex("__tok")
     val rdd = Bridge.catalystRows(sorted)
     // exclusive (rank, token) offset of each partition
-    val offsets = RangeScan.summaries(rdd) { it =>
+    val offsets = RangeScan.carriesLeft(rdd, (0L, 0L)) { it =>
       var n = 0L; var t = 0L
       while (it.hasNext) { n += 1; t += it.next().getLong(tokIdx) }
       (n, t)
-    }.scanLeft((0L, 0L)) { case ((n0, t0), (n, t)) => (n0 + n, t0 + t) }
+    } { case ((n0, t0), (n, t)) => (n0 + n, t0 + t) }
     val b = budget
     val rows = RangeScan.withCarry(rdd, offsets) { case ((rank0, tok0), it) =>
       if (tok0 >= b) Iterator.empty
@@ -161,11 +160,11 @@ object Sampling {
   def shuffleShards(df: DataFrame, idCol: String, numShards: Int): DataFrame = {
     require(numShards >= 1, s"numShards must be positive: $numShards")
     val spark = df.sparkSession
-    val sorted = df
-      .withColumn("__k", md5(col(idCol).cast("string").cast("binary")))
-      .orderBy(col("__k"), col(idCol)) // parallel range sort
+    val sorted = RangeScan.sorted(
+      df.withColumn("__k", md5(col(idCol).cast("string").cast("binary"))),
+      col("__k"), col(idCol))
     val rdd = Bridge.catalystRows(sorted)
-    val offsets = RangeScan.summaries(rdd)(_.size.toLong).scanLeft(0L)(_ + _)
+    val offsets = RangeScan.carriesLeft(rdd, 0L)(_.size.toLong)(_ + _)
     val n = numShards.toLong
     val outRows = RangeScan.withCarry(rdd, offsets) { (offset, it) =>
       var rank = offset

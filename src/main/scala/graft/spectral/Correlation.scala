@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.Bridge.RDD
 import org.apache.spark.sql.types._
 
 /** Autocorrelation analytics — the Spark re-expression of the reference's
@@ -25,60 +26,148 @@ object Correlation {
   /** ACF values for lags 0..maxLag as a local array (the ACF vector itself
     * is tiny — K+1 doubles — regardless of table size).
     *
-    * Implementation: parallel range sort, then one sequential pass with a
-    * K-deep ring buffer accumulating all K+1 product sums — the same terms
-    * in the same (time-ascending) order as the window formulation
-    * ([[acfVectorWindow]], kept as the differential-test twin), so results
-    * are bit-identical, but without WindowExec's K separate lag frames
-    * (~3× faster at 600k×48). */
+    * Implementation: `RangeScan.sorted` orders the series — one partition
+    * sorted in place on a small input, a parallel range sort otherwise —
+    * and [[acfInOrder]] takes every lag-product sum in time-ascending order:
+    * the same terms in the same order as the window formulation
+    * ([[acfVectorWindow]], kept as the differential-test twin), so on a
+    * one-partition series whose sum is exact in doubles the results are
+    * bit-identical, without WindowExec's K separate lag frames. */
   def acfVector(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] =
     acfVectorWithCount(tsf, xCol, maxLag)._1
 
   /** [[acfVector]] plus the frame's row count, nulls included (the `n` of
-    * [[acfConfint]]). The count rides the mean aggregate the ACF already
-    * runs, so it costs no job of its own. */
+    * [[acfConfint]]), counted by the pass that takes the mean. An all-null
+    * column gives what an all-NaN one does (1 at lag 0, NaN after); an
+    * empty frame fails. */
   def acfVectorWithCount(tsf: TimeseriesFrame, xCol: String,
-      maxLag: Int): (Array[Double], Long) = {
-    val sp = tsf.df.sparkSession
-    import sp.implicits._
-    val stats = tsf.df.agg(avg(col(xCol).cast("double")), count(lit(1))).head()
-    val mu = stats.getDouble(0)
-    val sums = tsf.df
-      .orderBy(tsf.orderCols: _*)
-      .select(col(xCol).cast("double"))
-      .coalesce(1) // concatenates the range-sorted partitions in order
-      .mapPartitions { it =>
-        val K = maxLag
-        val ring = new Array[Double](math.max(K, 1))
-        val s = new Array[Double](K + 1)
-        var n = 0L
-        while (it.hasNext) {
-          val row = it.next()
-          val x = if (row.isNullAt(0)) Double.NaN else row.getDouble(0) - mu
-          if (!x.isNaN) {
-            s(0) += x * x
-            val lim = math.min(K.toLong, n)
-            var k = 1
-            while (k <= lim) {
-              val prev = ring(((n - k) % K).toInt)
-              if (!prev.isNaN) s(k) += x * prev
-              k += 1
-            }
-          }
-          if (K > 0) ring((n % K).toInt) = x
-          n += 1
-        }
-        Iterator.single(s)
-      }
-      .collect()
-      .foldLeft(new Array[Double](maxLag + 1)) { (acc, part) =>
+      maxLag: Int): (Array[Double], Long) =
+    acfInOrder(values(RangeScan.sorted(withX(tsf, xCol), tsf.orderCols: _*)), maxLag)
+
+  /** `xCol` as `__x`, a double, next to the order columns. */
+  private def withX(tsf: TimeseriesFrame, xCol: String): DataFrame =
+    tsf.df.select(tsf.orderCols :+ col(xCol).cast("double").as("__x"): _*)
+
+  /** The `__x` column of a sorted frame, in order; a null stays null. */
+  private def values(sorted: DataFrame): RDD[java.lang.Double] =
+    Bridge.catalystRows(sorted.select("__x"))
+      .map(r => if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0)))
+
+  /** The most values the one-partition pass buffers: the JVM's array cap. */
+  private final val MaxBuffered = Int.MaxValue - 8
+
+  /** The ACF of a series in order, and its row count. The mean is the
+    * sum of the non-null values over their count; a NaN value counts, so
+    * it makes the mean NaN, as in `avg`.
+    *
+    * One partition: ONE job, one task — it buffers the values as a
+    * `double[]` (at most [[MaxBuffered]]), takes the mean and then the lag
+    * sums. More partitions: a [[graft.core.RangeScan]] over the cached raw
+    * values whose streaming summary is each partition's [[Fold]] of its
+    * first maxLag values, so the driver combines the mean without a job
+    * of its own; the carry chains the heads backward (`scanRight`) and the
+    * carry pass centres the values as it streams them through [[LagSums]]. */
+  private def acfInOrder(xs: RDD[java.lang.Double], maxLag: Int): (Array[Double], Long) =
+    if (xs.getNumPartitions == 1) {
+      val (sums, n) = xs.mapPartitions { it =>
+        val f = new Fold(MaxBuffered)
+        it.foreach(f.add)
+        require(f.rows <= MaxBuffered, s"a one-partition ACF buffers at most $MaxBuffered values")
+        val mu = f.sum / f.defined
+        val s = new LagSums(maxLag)
         var i = 0
-        while (i <= maxLag) { acc(i) += part(i); i += 1 }
-        acc
+        while (i < f.rows) { s.add(f.head(i) - mu); i += 1 }
+        Iterator.single((s.sums, f.rows))
+      }.collect().head
+      requireRows(n)
+      (acfOf(sums), n)
+    } else {
+      xs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val folds = RangeScan.summaries(xs) { it =>
+          val f = new Fold(maxLag)
+          it.foreach(f.add)
+          (f.kept, f.sum, f.defined, f.rows)
+        }
+        val n = folds.map(_._4).sum
+        requireRows(n)
+        val mu = folds.map(_._2).sum / folds.map(_._3).sum
+        // carry(p) = the first maxLag raw values AFTER partition p,
+        // concatenated across as many following partitions as needed so a
+        // short (or empty) neighbor cannot starve it
+        val carries = folds.map(_._1)
+          .scanRight(Array.emptyDoubleArray)((head, after) => (head ++ after).take(maxLag))
+          .tail
+        val partials = RangeScan.withCarry(xs, carries) { (after, it) =>
+          val s = new LagSums(maxLag)
+          it.foreach(v => s.add(if (v eq null) Double.NaN else v - mu))
+          var j = 0
+          while (j < after.length) { s.carried(after(j) - mu, j); j += 1 }
+          Iterator.single(s.sums)
+        }.collect()
+        val total = new Array[Double](maxLag + 1)
+        partials.foreach(s => (0 to maxLag).foreach(k => total(k) += s(k)))
+        (acfOf(total), n)
+      } finally xs.unpersist()
+    }
+
+  /** Values of a series added in order: the first `keep` of them in
+    * `head` (a null is a NaN slot), the sum of the non-null ones, their
+    * count and the rows. */
+  private final class Fold(keep: Int) {
+    var head = new Array[Double](math.min(keep, 256))
+    var sum = 0.0
+    var defined = 0L
+    var rows = 0L
+
+    def add(v: java.lang.Double): Unit = {
+      if (rows < keep) {
+        if (rows == head.length)
+          head = java.util.Arrays.copyOf(head, math.min(2L * rows, keep.toLong).toInt)
+        head(rows.toInt) = if (v eq null) Double.NaN else v
       }
-    val denom = sums(0)
-    (Array(1.0) ++ (1 to maxLag).map(k => sums(k) / denom), stats.getLong(1))
+      if (v ne null) { sum += v; defined += 1 }
+      rows += 1
+    }
+
+    def kept: Array[Double] = java.util.Arrays.copyOf(head, math.min(rows, keep.toLong).toInt)
   }
+
+  /** The lag-product sums of centred values added in series order:
+    * `sums(0)` = Σ xc², `sums(k)` = Σ xcᵢ·xcᵢ₋ₖ for k = 1..maxLag, through a
+    * maxLag-deep ring. NaN slots are skipped. */
+  private final class LagSums(maxLag: Int) {
+    val sums = new Array[Double](maxLag + 1)
+    private val ring = new Array[Double](math.max(maxLag, 1))
+    private var n = 0L
+
+    def add(x: Double): Unit = { if (!x.isNaN) sums(0) += x * x; push(x, 1) }
+
+    /** The j-th value (from 0) AFTER this partition: it multiplies only
+      * this partition's tail, at lags j+1..maxLag, so each cross product
+      * is counted once, by the partition owning its earlier element, and
+      * the carry-carry products are left to the neighbour's own pass. */
+    def carried(x: Double, j: Int): Unit = push(x, j + 1)
+
+    private def push(x: Double, from: Int): Unit = {
+      if (!x.isNaN) {
+        var k = from
+        while (k <= math.min(n, maxLag.toLong)) {
+          val prev = ring(((n - k) % ring.length).toInt)
+          if (!prev.isNaN) sums(k) += x * prev
+          k += 1
+        }
+      }
+      ring((n % ring.length).toInt) = x
+      n += 1
+    }
+  }
+
+  private def acfOf(sums: Array[Double]): Array[Double] =
+    Array(1.0) ++ (1 until sums.length).map(k => sums(k) / sums(0))
+
+  private def requireRows(n: Long): Unit =
+    require(n > 0, "ACF of an empty series: the frame has no rows")
 
   /** The K-lag-columns window formulation of [[acfVector]] — the original
     * semantic spec, kept for differential testing. */
@@ -101,63 +190,15 @@ object Correlation {
     }
   }
 
-  /** Horizontally-scalable ACF: instead of K lag columns over a
-    * single-partition global window, range-sort in parallel, then fold
-    * each partition once with a maxLag-deep ring buffer; products that
-    * straddle a partition boundary are completed by appending the
-    * FOLLOWING partitions' first maxLag values — a [[graft.core.RangeScan]]
-    * whose summary is each partition's head (P·K doubles) and whose
-    * carry chains the heads backward (`scanRight`). One sort shuffle, one
-    * O(n) pass, no exploded join — every stage partition-parallel: the
-    * 100 TB path. Null and NaN values are NaN slots whose products are
-    * skipped, as in [[acfVector]], to which it is numerically identical
-    * up to summation order. */
-  def acfVectorDistributed(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] = {
-    val mu = tsf.df.agg(avg(col(xCol).cast("double"))).head().getDouble(0)
-    val sorted = Bridge.catalystRows(tsf.df
-      .orderBy(tsf.orderCols: _*)                 // range-partitioned parallel sort
-      .select(col(xCol).cast("double")))
-      .map(r => if (r.isNullAt(0)) Double.NaN else r.getDouble(0) - mu)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // carry(p) = the first maxLag centered values AFTER partition p,
-    // concatenated across as many following partitions as needed so a
-    // short (or empty) neighbor cannot starve it
-    val carries = RangeScan.summaries(sorted)(_.take(maxLag).toArray)
-      .scanRight(Array.empty[Double])((head, after) => (head ++ after).take(maxLag))
-      .tail
-    val ringLen = math.max(maxLag, 1)
-    val partials = RangeScan.withCarry(sorted, carries) { (after, it) =>
-      val sums = Array.ofDim[Double](maxLag + 1) // [0] = denom Σxc²
-      val ring = Array.ofDim[Double](ringLen)
-      var n = 0L
-      // add x's products with the ring's values at lags from..maxLag
-      def push(x: Double, from: Int): Unit = {
-        if (!x.isNaN) {
-          var k = from
-          while (k <= math.min(n, maxLag.toLong)) {
-            val prev = ring(((n - k) % ringLen).toInt)
-            if (!prev.isNaN) sums(k) += x * prev
-            k += 1
-          }
-        }
-        ring((n % ringLen).toInt) = x
-        n += 1
-      }
-      it.foreach { x => if (!x.isNaN) sums(0) += x * x; push(x, 1) }
-      // complete straddling products: carried value j (the j-th row of
-      // the following partitions) multiplies ONLY this partition's tail
-      // rows — lags k ≥ j+1 reach past the other carried values, so each
-      // cross product is counted exactly once, by the partition owning
-      // its earlier element; carry-carry products belong to the
-      // neighbor's own pass. No denom contribution from carries.
-      after.iterator.zipWithIndex.foreach { case (x, j) => push(x, j + 1) }
-      Iterator.single(sums)
-    }.collect()
-    sorted.unpersist()
-    val total = Array.ofDim[Double](maxLag + 1)
-    partials.foreach(s => (0 to maxLag).foreach(k => total(k) += s(k)))
-    Array(1.0) ++ (1 to maxLag).map(k => total(k) / total(0))
-  }
+  /** Horizontally-scalable ACF: [[acfVector]] with a parallel range sort
+    * (`orderBy`) at every input size instead of `RangeScan.sorted`'s
+    * one-partition sort of a small input — no single-partition window,
+    * no exploded join, one sort shuffle and one O(n) pass, every stage
+    * partition-parallel: the 100 TB path, and the twin that keeps
+    * [[acfInOrder]]'s carry under test on small fixtures. Numerically
+    * identical to [[acfVector]] up to summation order. */
+  def acfVectorDistributed(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] =
+    acfInOrder(values(withX(tsf, xCol).orderBy(tsf.orderCols: _*)), maxLag)._1
 
   /** Grouped multi-series ACF — the horizontal scale path the reference
     * lacks: one row per (seriesKeys, lag). All windows partition by the

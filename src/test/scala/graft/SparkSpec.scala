@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -17,6 +18,50 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2),
       StructType(Seq(StructField("i", LongType), StructField("x", DoubleType))))
+  }
+
+  /** Jobs `body` launches on this thread, counted by a listener on a job
+    * group (AQE stage jobs inherit it). A sentinel job run afterwards is
+    * awaited, so every earlier job start has reached the listener by then. */
+  def jobsLaunchedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .filter(_ != null).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = body
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (!seen.contains(s"$group-sentinel") && System.nanoTime < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$group-sentinel"), "sentinel job never reached the listener")
+      (out, seen.toArray.count(_ == group))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Run `body` with `p` shuffle partitions that AQE may not coalesce, so
+    * a range sort of a small fixture keeps `p` partitions. */
+  def atShufflePartitions[A](p: Int)(body: => A): A = {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val old = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), p.toString)
+    spark.conf.set(keys(1), "false")
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   def d(xs: Double*): Seq[Option[Double]] = xs.map(x => Some(x))

@@ -18,14 +18,17 @@ class RangeScanSpec extends SparkSpec {
   private val Ps = Seq(1, 2, 7, 32)
 
   /** Run `body` with `p` shuffle partitions that AQE may not coalesce,
-    * so `orderBy` and the keyless TimeDelta path range-sort into `p`. */
+    * so `orderBy` and the keyless TimeDelta path range-sort into `p`. At
+    * p >= 2 the small-input rule is off, so these small fixtures take the
+    * range path and not `RangeScan.sorted`'s one-partition sort. */
   private def atP[A](p: Int)(body: => A): A = {
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.enabled")
     val old = keys.map(k => k -> spark.conf.getOption(k))
     spark.conf.set(keys(0), p.toString)
     spark.conf.set(keys(1), "false")
-    try body
+    try RangeScan.smallInputBound.withValue(
+      if (p == 1) RangeScan.SmallInputBytes else 0L)(body)
     finally old.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

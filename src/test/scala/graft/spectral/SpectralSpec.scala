@@ -42,7 +42,7 @@ class SpectralSpec extends SparkSpec {
     val df = xs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
       .toDF("i", "x").repartition(25)
     val tsf = TimeseriesFrame(df, None, Seq("i"))
-    val dist = Correlation.acfVectorDistributed(tsf, "x", maxLag = 20)
+    val dist = atShufflePartitions(25)(Correlation.acfVectorDistributed(tsf, "x", maxLag = 20))
     val ref = Correlation.acfVector(tsf, "x", maxLag = 20)
     dist.zip(ref).zipWithIndex.foreach { case ((d, r), k) =>
       assert(math.abs(d - r) < 1e-10, s"lag $k: $d vs $r")
@@ -187,7 +187,7 @@ class SpectralSpec extends SparkSpec {
     val xs = (0 until 40).map(i => if (i == 7) NA else Some(math.sin(i * 0.5) * 10))
     val tsf = TimeseriesFrame(seriesDF(xs), None, Seq("i"))
     for (maxLag <- Seq(0, 1, 9)) {
-      val dist = Correlation.acfVectorDistributed(tsf, "x", maxLag)
+      val dist = atShufflePartitions(4)(Correlation.acfVectorDistributed(tsf, "x", maxLag))
       val ref = Correlation.acfVector(tsf, "x", maxLag)
       assert(dist.length == maxLag + 1 && ref.length == maxLag + 1)
       dist.zip(ref).zipWithIndex.foreach { case ((a, e), k) =>
@@ -195,6 +195,59 @@ class SpectralSpec extends SparkSpec {
       }
     }
     assert(Correlation.acfVectorDistributed(tsf, "x", 0).toSeq == Seq(1.0))
+  }
+
+  test("distributed ACF == the window formulation across partition counts, ties and nulls") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // (t, k, x): t repeats three times and k orders each tie against the
+    // generating index; x is cents-like (exact sums), one in six null;
+    // rows arrive shuffled. 32 partitions of 20 rows leave some empty.
+    for (n <- Seq(20, 301)) {
+      val rnd = new scala.util.Random(29 + n)
+      val rows = rnd.shuffle((0 until n).toList).map { i =>
+        Row((i / 3).toLong, (n - i).toLong,
+          if (rnd.nextInt(6) == 0) null else Double.box(rnd.nextInt(1000) / 8.0))
+      }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+        StructType(Seq(StructField("t", LongType), StructField("k", LongType),
+          StructField("x", DoubleType))))
+      val tsf = TimeseriesFrame(df, Some("t"), Seq("k"))
+      for (maxLag <- Seq(0, 3, 12)) {
+        val want = Correlation.acfVectorWindow(tsf, "x", maxLag)
+        for (p <- Seq(2, 7, 32)) {
+          val got = atShufflePartitions(p)(Correlation.acfVectorDistributed(tsf, "x", maxLag))
+          assert(got.length == want.length)
+          got.zip(want).zipWithIndex.foreach { case ((a, e), k) =>
+            assert(math.abs(a - e) < 1e-10, s"n=$n P=$p maxLag=$maxLag lag $k: $a vs $e")
+          }
+        }
+      }
+    }
+  }
+
+  test("ACF of an all-null column is the all-NaN series' vector; an empty frame fails by name") {
+    val nulls = TimeseriesFrame(seriesDF(Seq.fill(12)(NA)), None, Seq("i"))
+    val nans = TimeseriesFrame(seriesDF(Seq.fill(12)(Some(Double.NaN))), None, Seq("i"))
+    def same(a: Array[Double], b: Array[Double]) = a.length == b.length &&
+      a.zip(b).forall { case (x, y) => x == y || (x.isNaN && y.isNaN) }
+    for (maxLag <- Seq(0, 3)) {
+      val want = Correlation.acfVector(nans, "x", maxLag)
+      assert(want.head == 1.0 && want.tail.forall(_.isNaN), want.toSeq)
+      assert(same(Correlation.acfVector(nulls, "x", maxLag), want), s"maxLag $maxLag")
+      // the distributed form on 4 partitions: the summary job's mean
+      val dist = (t: TimeseriesFrame) =>
+        atShufflePartitions(4)(Correlation.acfVectorDistributed(t, "x", maxLag))
+      assert(same(dist(nulls), want), s"maxLag $maxLag")
+      assert(same(dist(nans), want), s"maxLag $maxLag")
+    }
+    assert(Correlation.acfVectorWithCount(nulls, "x", 3)._2 == 12L)
+    val empty = TimeseriesFrame(seriesDF(Nil), None, Seq("i"))
+    for (acf <- Seq[TimeseriesFrame => Any](Correlation.acfVectorWithCount(_, "x", 3),
+        t => atShufflePartitions(4)(Correlation.acfVectorDistributed(t, "x", 3)))) {
+      val e = intercept[IllegalArgumentException](acf(empty))
+      assert(e.getMessage.contains("ACF of an empty series"), e.getMessage)
+    }
   }
 
   test("quadratic/cubic detrend matches numpy polyfit residuals on airpassengers") {
