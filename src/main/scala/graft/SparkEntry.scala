@@ -564,15 +564,10 @@ object SparkEntry {
       // tokHashSql has WHERE text IS NOT NULL) — otherwise Spark's
       // null-intolerant hash expressions silently drop the doc while the
       // oracle's CASE gives it an all-sentinel signature
-      // materialize=false: this query consumes the candidate set exactly
-      // once, so the eager localCheckpoint (whose payoff is ITERATING
-      // consumers never replaying the scan+hash+join — see q50) is pure
-      // overhead here; r8 idle A/B vs the r6 checkout: 0.77s eager vs
-      // 0.61s r6-lazy on sf0.1
       Dedup.minhashCandidates(
         tbl(s, dir, "documents").filter(col("text").isNotNull), "doc_id", "text",
         shingleHashesOf = TextFunctions.shingleHashes(_, 3),
-        numHashes = 64, bands = 8, materialize = false)
+        numHashes = 64, bands = 8)
         .filter(col("est_jaccard") >= 0.5)
     }, oracleSql =
       s"WITH $minhashPairCtes\nSELECT * FROM scored WHERE est_jaccard >= 0.5"),
@@ -728,14 +723,10 @@ object SparkEntry {
       // pairs → CLUSTERS: distributed min-label connected components over
       // the ≥0.5 minhash candidate graph; the oracle replays the closure
       // as a recursive CTE (component = min reachable id)
-      // materialize = false: connectedComponents is the pairs' ONLY
-      // consumer (its micro-tier probe + distinct each run the plan at
-      // most once), so the default eager checkpoint would be a pure
-      // extra materialization pass
       val pairs = Dedup.minhashCandidates(
         tbl(s, dir, "documents").filter(col("text").isNotNull), "doc_id", "text",
         shingleHashesOf = TextFunctions.shingleHashes(_, 3),
-        numHashes = 64, bands = 8, materialize = false)
+        numHashes = 64, bands = 8)
         .filter(col("est_jaccard") >= 0.5)
       Dedup.connectedComponents(pairs)
         .select(col("id").as("doc_id"), col("component"))
@@ -946,10 +937,9 @@ object SparkEntry {
       // stage is an operator gated on its own elsewhere (q18/q50/q71/
       // q61), composed here end-to-end under one oracle
       val docs = tbl(s, dir, "documents").filter(col("text").isNotNull)
-      // materialize = false: CC is the pairs' only consumer (see q50)
       val pairs = Dedup.minhashCandidates(docs, "doc_id", "text",
           shingleHashesOf = TextFunctions.shingleHashes(_, 3),
-          numHashes = 64, bands = 8, materialize = false)
+          numHashes = 64, bands = 8)
         .filter(col("est_jaccard") >= 0.5)
       val clusters = Dedup.connectedComponents(pairs)
         .select(col("id").as("doc_id"), col("component"))
@@ -3533,55 +3523,14 @@ object SparkEntry {
         |  WHEN substr(md5(doc_id::VARCHAR), 1, 2) < 'e6' THEN 'val'
         |  ELSE 'test' END AS split
         |FROM v WHERE keep""".stripMargin),
-    GateQuery("q116_minhash_index_search", (s, dir) => {
-      // incremental-ingestion near-dup: build a MinhashIndex over the
-      // corpus as the reference, then screen a constructed arriving batch
-      // against it — %3 batch docs are tail-perturbed copies of their
-      // source doc (guaranteed high-Jaccard hits), the rest are 3-token
-      // synthetic strings unique per doc (no shared shingles). The oracle
-      // replays the identical integer signature arithmetic over the
-      // union corpus with the candidate join restricted to batch × ref.
-      val d = tbl(s, dir, "documents").filter(col("text").isNotNull)
-      val ref = d.select(col("doc_id"), col("text"))
-      val batch = d.select((col("doc_id") + 1000000L).as("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" extra trailing words here")))
-          .otherwise(concat(
-            lit("u"), col("doc_id").cast("string"),
-            lit("x v"), col("doc_id").cast("string"),
-            lit("y w"), col("doc_id").cast("string"), lit("z"))).as("text"))
-      val idx = Dedup.minhashIndex(ref, "doc_id", "text")
-      Dedup.minhashSearch(idx, batch, "doc_id", "text")
-        .filter(col("est_jaccard") >= 0.5)
-    }, oracleSql = minhashAcrossSql),
-    GateQuery("q134_minhash_index_search_chunked", (s, dir) => {
-      // q116's screen in CHUNKED mode (r14): the same build + the same
-      // arriving batch, but screened as ~5 sequential id-hash slices
-      // (cap = ⌈n/5⌉, so every SF exercises real carving — a fixed doc
-      // cap made sf0.1 run 42 slices whose per-slice overhead dominated)
-      // with the flood cap computed whole-batch. Chunked ≡ unchunked is
-      // the spec-pinned contract, so this row shares q116's ORACLE SQL
-      // verbatim — the DuckDB replay of the one-shot screen hash-gates
-      // the carved execution path end to end.
-      val d = tbl(s, dir, "documents").filter(col("text").isNotNull)
-      val ref = d.select(col("doc_id"), col("text"))
-      val batch = d.select((col("doc_id") + 1000000L).as("doc_id"),
-        when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" extra trailing words here")))
-          .otherwise(concat(
-            lit("u"), col("doc_id").cast("string"),
-            lit("x v"), col("doc_id").cast("string"),
-            lit("y w"), col("doc_id").cast("string"), lit("z"))).as("text"))
-      val idx = Dedup.minhashIndex(ref, "doc_id", "text")
-      // r16: the ⌈n/5⌉ per-slice cap is derived inside the screen from
-      // the batch count its signature checkpoint already measures — the
-      // explicit batch.count() here was a full extra scan+aggregate job
-      Dedup.minhashSearch(idx, batch, "doc_id", "text",
-          targetScreenChunks = 5)
-        .filter(col("est_jaccard") >= 0.5)
-    }, oracleSql = minhashAcrossSql),
-      // chunked ≡ unchunked is the contract — the carved screen must hash
-      // to the SAME one-shot oracle replay
+    GateQuery("q116_minhash_index_search", minhashIndexScreen, minhashAcrossSql),
+    // q116's build, batch and screen, under the name it had when it forced
+    // the screen into ~5 id-hash slices. The screen now slices only past
+    // `Dedup.ScreenScratchMaxBytes` of estimated scratch (131,072 batch
+    // docs), so at every gate SF (500 docs at sf0.01, 5,000 at sf0.1) it
+    // screens in one pass; DedupSpec pins the sliced path ≡ the one pass.
+    GateQuery("q134_minhash_index_search_chunked", minhashIndexScreen,
+      minhashAcrossSql),
     GateQuery("q117_split_by_cluster", (s, dir) => {
       // leakage-safe train/val/test: the split key is the near-dup
       // CLUSTER representative (q50's components), so a doc and its fuzzy
@@ -3589,10 +3538,9 @@ object SparkEntry {
       // id. Oracle = the q50 recursive-CTE closure + the q61 md5 carve on
       // coalesce(component, doc_id).
       val docs = tbl(s, dir, "documents").filter(col("text").isNotNull)
-      // materialize = false: CC is the pairs' only consumer (see q50)
       val pairs = Dedup.minhashCandidates(docs, "doc_id", "text",
           shingleHashesOf = TextFunctions.shingleHashes(_, 3),
-          numHashes = 64, bands = 8, materialize = false)
+          numHashes = 64, bands = 8)
         .filter(col("est_jaccard") >= 0.5)
       val clusters = Dedup.connectedComponents(pairs)
       graft.pipeline.Sampling.splitByCluster(docs, "doc_id", clusters,
@@ -4975,6 +4923,29 @@ object SparkEntry {
        |  list_sum(list_transform(range(1, 65),
        |    i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))::DOUBLE / 64 AS est_jaccard
        | FROM cand c JOIN sigs sa ON sa.doc_id = c.id_a JOIN sigs sb ON sb.doc_id = c.id_b)""".stripMargin
+
+  /** q116 and q134: incremental-ingestion near-dup — build a MinhashIndex
+    * over the corpus as the reference, then screen a constructed arriving
+    * batch against it: %3 batch docs are tail-perturbed copies of their
+    * source doc (guaranteed high-Jaccard hits), the rest are 3-token
+    * synthetic strings unique per doc (no shared shingles). The oracle
+    * ([[minhashAcrossSql]]) replays the identical integer signature
+    * arithmetic over the union corpus with the candidate join restricted
+    * to batch × ref. */
+  private def minhashIndexScreen(s: SparkSession, dir: String): DataFrame = {
+    val d = tbl(s, dir, "documents").filter(col("text").isNotNull)
+    val ref = d.select(col("doc_id"), col("text"))
+    val batch = d.select((col("doc_id") + 1000000L).as("doc_id"),
+      when(col("doc_id") % 3 === 0,
+        concat(col("text"), lit(" extra trailing words here")))
+        .otherwise(concat(
+          lit("u"), col("doc_id").cast("string"),
+          lit("x v"), col("doc_id").cast("string"),
+          lit("y w"), col("doc_id").cast("string"), lit("z"))).as("text"))
+    val idx = Dedup.minhashIndex(ref, "doc_id", "text")
+    Dedup.minhashSearch(idx, batch, "doc_id", "text")
+      .filter(col("est_jaccard") >= 0.5)
+  }
 
   /** q116: the same signature arithmetic over ref ∪ shifted batch, with the
     * candidate join restricted to batch × ref — replays

@@ -4,6 +4,8 @@ import graft.text.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import scala.util.DynamicVariable
 
 /** Deduplication operators for large-scale document corpora: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard. Designed for the 100 TB
@@ -99,8 +101,9 @@ object Dedup {
   /** MinHash+LSH candidate pairs: explode band keys, self-join per bucket.
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b; `est_jaccard` is
     * the signature agreement fraction. The bucket join shuffles only
-    * (bucket, id, signature) — documents never move. */
-  /** `maxBucket` caps the per-band bucket size: a corpus that is mostly
+    * (bucket, id, signature) — documents never move.
+    *
+    * `maxBucket` caps the per-band bucket size: a corpus that is mostly
     * COPIES of few documents puts thousands of identical signatures in
     * the same buckets, and the pair join goes quadratic in the copy
     * count (measured: a 2M-row corpus with ~1k distinct texts emits
@@ -117,22 +120,18 @@ object Dedup {
     * of shuffle before dying; the same corpus at 20M docs sailed past
     * because 400k-member buckets were over it). The 2000 default bounds
     * any bucket to ≤2·10⁶ pairs; raise it only with a matching pair
-    * budget: maxBucket ≈ sqrt(2 × affordable_pairs_per_bucket). */
-  /** `materialize` (the [[graft.similarity.Similarity.cosineCandidates]]
-    * contract): `true` (default) localCheckpoints the candidate set — the
-    * pipeline runs EAGERLY at call time and the checkpointed blocks are
-    * non-resilient (executor loss fails downstream jobs instead of
-    * recomputing), in exchange for iterating consumers
-    * ([[connectedComponents]]) never replaying the scan+hash+join and the
-    * internal signature cache being released before return. `false`
-    * keeps the RESULT lazy; the internal signature frame is an EAGER
-    * localCheckpoint either way (see the deadlock note at the call
+    * budget: maxBucket ≈ sqrt(2 × affordable_pairs_per_bucket).
+    *
+    * The RESULT is lazy: every gate caller consumes the pairs once
+    * ([[connectedComponents]] or a filter), and a caller that iterates
+    * them can `localCheckpoint` the frame itself. The internal signature
+    * frame is an EAGER localCheckpoint (see the deadlock note at the call
     * site), so the scan+hash pipeline runs exactly once (all three
     * internal consumers read the blocks) and the blocks are released by
-    * the ContextCleaner when the plan is dropped — no unmanaged
-    * persist. Both modes are non-resilient to executor loss
-    * (checkpoint blocks don't recompute); that is the price of not
-    * re-running the signature scan. */
+    * the ContextCleaner when the plan is dropped — no unmanaged persist.
+    * The pairs are non-resilient to executor loss (checkpoint blocks
+    * don't recompute); that is the price of not re-running the signature
+    * scan. */
   def minhashCandidates(
       df: DataFrame,
       idCol: String,
@@ -140,8 +139,7 @@ object Dedup {
       shingleHashesOf: Column => Column = TextFunctions.shingleHashes(_, 3),
       numHashes: Int = 64,
       bands: Int = 8,
-      maxBucket: Long = 2000L,
-      materialize: Boolean = true): DataFrame = {
+      maxBucket: Long = 2000L): DataFrame = {
     require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
       s"bands must divide numHashes (got numHashes=$numHashes, bands=$bands)" +
         " — silent truncation would drop signature slots")
@@ -182,16 +180,10 @@ object Dedup {
       .select(col("id_a"), col("id_b")).distinct()
     val sa = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
     val sb = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-    val out = pairs.join(sa, "id_a").join(sb, "id_b")
+    pairs.join(sa, "id_a").join(sb, "id_b")
       .select(col("id_a"), col("id_b"),
         (graft.functions.TextHash.slotMatchCount(col("sig_a"), col("sig_b"))
           .cast("double") / numHashes).as("est_jaccard"))
-    // eager: materialize the scored pairs now so iterating consumers
-    // (connectedComponents) never replay anything; lazy: hand back the
-    // un-run plan — the sig checkpoint above already guarantees the
-    // signature scan runs at most once per consuming action, and the
-    // ContextCleaner owns the block lifetime on both paths
-    if (materialize) out.localCheckpoint(true) else out
   }
 
   /** Drop every row of band buckets holding more than `maxBucket` members
@@ -251,26 +243,7 @@ object Dedup {
       * persist the appended index and [[release]] the old one when
       * cutting over. An unpersisted chain stays correct but recomputes
       * its lineage per consumption. */
-    def persist(): MinhashIndex = persist(reclaimBuildShuffles = false)
-
-    /** [[persist]] with an explicit disk-reclaim choice.
-      * `reclaimBuildShuffles = true` deletes, right after the two frames
-      * block-materialize, every shuffle REGISTERED DURING this call
-      * (snapshot-diff of the map-output tracker) — the repartition/
-      * aggregate shuffles that fed the pinned layout. Those files are
-      * pure recompute insurance once the blocks exist (MEMORY_AND_DISK
-      * never evicts to nothing), but the cached plan's lineage
-      * references their ShuffleDependencys forever, so the GC-driven
-      * cleaner can never reclaim them — at the 100M rung they are
-      * ~40 GB of dead disk squatting NEXT TO the 61 GB pinned cache,
-      * and the r14 probe died ENOSPC before the first screen ever ran.
-      * Lineage-safe (a cache-block loss refetches → FetchFailed → Spark
-      * resubmits the surviving parent stages; cost is re-execution,
-      * never wrong data). Default OFF: the snapshot-diff assumes no
-      * CONCURRENT query materializes its own shuffles during this call
-      * — single-writer builds (the probe, a dedicated index job) opt
-      * in; a shared interactive session keeps the insurance. */
-    def persist(reclaimBuildShuffles: Boolean): MinhashIndex = {
+    def persist(): MinhashIndex = {
       // pin the banded store HASH-PARTITIONED ON ITS JOIN KEY: the
       // cached layout's outputPartitioning satisfies the screen join's
       // required distribution, so [[minhashSearch]] plans NO exchange on
@@ -280,21 +253,11 @@ object Dedup {
       // batch — index-bound, growing with the corpus); the one
       // build-time repartition amortizes across every screen the index
       // serves. Same content, physical layout only.
-      val sc = sigs.sparkSession.sparkContext
-      val before =
-        if (reclaimBuildShuffles)
-          org.apache.spark.sql.graftbridge.Bridge.shuffleIds(sc)
-        else Set.empty[Int]
       val laid = banded.repartition(col("bucket"))
       laid.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       counts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       laid.count()
       counts.count()
-      if (reclaimBuildShuffles) {
-        val mine =
-          org.apache.spark.sql.graftbridge.Bridge.shuffleIds(sc) -- before
-        org.apache.spark.sql.graftbridge.Bridge.cleanupShuffles(sc, mine)
-      }
       copy(banded = laid)
     }
     /** Drop the pinned frames (no-op if never persisted). */
@@ -538,218 +501,111 @@ object Dedup {
     * batch side gets the same per-bucket cap as the index so a
     * boilerplate flood in the arriving data cannot blow the join.
     *
-    * Chunked mode (`maxDocsPerScreen > 0`, VERDICT r13 task 1): screens
-    * are per-doc decomposable — a batch doc's candidates depend only on
-    * its own bands and the (immutable) index — so a batch larger than
-    * the cap is carved into ⌈n/cap⌉ deterministic id-hash slices and
-    * screened SEQUENTIALLY, each slice's result eagerly materialized
-    * before the next starts. That bounds the LIVE shuffle scratch of a
-    * screen to one slice's worth (the r13 100M×2M probe died on ~13 GB
-    * of single-screen scratch vs 8.9 GB free disk; the operator was
-    * never the ceiling). One semantic subtlety makes naive carving
-    * wrong: the batch-side flood cap counts bucket members WITHIN the
-    * arriving batch, and a flood split across slices could duck under a
-    * per-slice cap — so in chunked mode the over-cap bucket list is
-    * computed ONCE over the full batch's banding and anti-joined into
-    * every slice, which keeps chunked ≡ unchunked exactly (spec-pinned,
-    * flood included). Plan shape per slice is the unchunked plan; only
-    * the rescore's size-conditional broadcast may engage at slice sizes
-    * where the full batch would shuffle — results identical either way.
-    *
-    * Slice execution picks one of two modes by the WHOLE BATCH's
-    * ESTIMATED scratch (r15, VERDICT r14 task 4 — measured at the
-    * 100M×2M probe: ~7.5 KB of shuffle scratch per batch doc,
-    * candidate-bound):
-    *
-    *  - BARRIER (estimated batch scratch ≥ `sliceBarrierMinBytes`):
-    *    each slice eagerly materializes (`localCheckpoint`) before the
-    *    next starts, and the slice's own shuffles — snapshot-diffed via
-    *    the map-output tracker, exactly the [[persist]] reclaim recipe —
-    *    are DELETED once its blocks exist (they are recompute insurance
-    *    a checkpoint never uses: checkpoint blocks don't recompute).
-    *    That deterministic per-slice reclaim is what bounds peak scratch
-    *    to one slice (r14 used a `System.gc()` nudge to provoke the
-    *    GC-driven ContextCleaner instead — a driver-global pause with a
-    *    throttle heuristic; the snapshot-diff deletes exactly the
-    *    slice's files, immediately). Like `persist(reclaimBuildShuffles
-    *    = true)` this assumes no CONCURRENT query registers shuffles
-    *    during the slice — chunked screening is the single-writer
-    *    probe/backfill shape; a shared interactive session should
-    *    screen unchunked or accept per-slice recompute on conflict.
-    *  - LAZY (under the threshold): the band join runs ONCE over the
-    *    full batch, the candidate set checkpoints (bounded — the
-    *    threshold just certified the whole batch's scratch), and each
-    *    slice carves the CANDIDATES by the same id-hash before its own
-    *    rescore joins, all unioned into ONE job. A doc's candidates are
-    *    keyed by its own id, so carving candidates ≡ carving docs; a
-    *    batch under the scratch threshold doesn't need the per-slice
-    *    barrier, and the r14 per-slice-plan shape re-executed the
-    *    index-side banding subplan twice per slice (55 driver jobs for
-    *    the 5-slice gate screen, 4× its one-shot twin). Results are
-    *    identical by the chunked ≡ unchunked contract (the global flood
-    *    cap is computed whole-batch in both modes).
+    * One rule, from what the screen already measures: the batch's
+    * signature checkpoint counts its n docs in the job that writes it,
+    * and while the estimated shuffle scratch n × [[ScreenScratchBytesPerDoc]]
+    * is under [[ScreenScratchMaxBytes]] the batch screens in ONE pass.
+    * Past the bound (the r13 100M×2M probe died on ~13 GB of
+    * single-screen scratch against 8.9 GB of free disk) the batch is
+    * carved into the fewest deterministic id-hash slices whose estimate
+    * is each under the bound, screened one after another: each slice's
+    * result is eagerly checkpointed, and the slice's own shuffles —
+    * snapshot-diffed in the map-output tracker — are deleted before the
+    * next slice starts (they are recompute insurance a checkpoint never
+    * uses), so peak scratch is one slice's worth and the screen leaves no
+    * registered shuffle behind. A doc's candidates depend only on its own
+    * bands and the immutable index, so the slices union to the one-pass
+    * result, with one care: the batch-side flood cap counts bucket
+    * members over the WHOLE batch, once, and every slice anti-joins that
+    * list — a flood split across slices would otherwise duck under a
+    * per-slice cap (spec-pinned, flood included). The per-slice reclaim
+    * assumes no CONCURRENT query registers shuffles during the screen; a
+    * batch past a GiB of scratch is the single-writer backfill shape.
     *
     * The streaming twin
-    * ([[graft.streaming.StreamingOps.streamingMinhashIndexScreen]])
-    * needs no such knob: its micro-batch IS the chunk — bound
+    * ([[graft.streaming.StreamingOps.streamingMinhashIndexScreen]]) has
+    * no slices: its micro-batch is the unit of scratch, so bound
     * per-screen scratch there by bounding the trigger
     * (`maxFilesPerTrigger`/`maxOffsetsPerTrigger`). */
   def minhashSearch(index: MinhashIndex, batch: DataFrame,
-      idCol: String, textCol: String,
-      broadcastRefSigsMaxBytes: Long = 64L << 20,
-      maxDocsPerScreen: Long = 0L,
-      sliceBarrierMinBytes: Long = 1L << 30,
-      targetScreenChunks: Int = 0): DataFrame = {
+      idCol: String, textCol: String): DataFrame = {
+    val bounds = screenBounds.value
     val params = minhashParams(index.numHashes)
     // eager localCheckpoint: consumed twice (banding + the scoring join);
     // see the deadlock note in minhashCandidates for why eager.
     // array<int> end-to-end: the index stores int signatures, and the
     // batch side is narrowed in the same scan-stage projection, so the
-    // rescore compares int slots directly (bit-identical est_jaccard)
-    // r16: the batch-sizing count rides the checkpoint's materializing
-    // job (RDD count — no aggregate, no shuffle); the old shape paid a
-    // separate 2-stage count() job per chunked screen
-    val (bSigs, nBatchDocs) = org.apache.spark.sql.graftbridge.Bridge
-      .localCheckpointWithCount(batch.select(col(idCol).as("id"),
+    // rescore compares int slots directly (bit-identical est_jaccard).
+    // The batch count rides the checkpoint's materializing job (RDD
+    // count — no aggregate, no shuffle).
+    val (bSigs, n) = Bridge.localCheckpointWithCount(
+      batch.select(col(idCol).as("id"),
         minhashSignatureInt(index.shingleHashesOf(col(textCol)), params)
           .as("sig")))
     val bandKeysOf = (sigs: DataFrame) => sigs.select(col("id"),
       explode(lshBandKeys(col("sig"), index.bands,
         index.numHashes / index.bands)).as("bucket"))
-    if (maxDocsPerScreen > 0 || targetScreenChunks > 0) {
-      val sc = bSigs.sparkSession.sparkContext
-      val before0 = org.apache.spark.sql.graftbridge.Bridge.shuffleIds(sc)
-      val n = nBatchDocs
-      // `targetScreenChunks` derives the per-slice cap from the batch
-      // count the screen already measures (r16): caller shapes like
-      // "slice into ~5 chunks" used to pay their OWN full count() of the
-      // batch just to compute ⌈n/5⌉ and hand it back as maxDocsPerScreen
-      val cap0 = if (targetScreenChunks > 0)
-        math.max(1L, (n + targetScreenChunks - 1) / targetScreenChunks)
-      else maxDocsPerScreen
-      if (n > cap0) {
-        val chunks = ((n + cap0 - 1) / cap0).toInt
-        // mode pick (see scaladoc): estimated WHOLE-BATCH scratch vs the
-        // barrier threshold, using the probe-measured ~7.5 KB/doc
-        // (rounded up to 8 KB — an over-estimate errs toward the
-        // scratch-bounded barrier, never toward unbounded lazy). Whole
-        // batch, not per slice (r15): lazy mode runs every slice inside
-        // ONE job, so the live scratch it must bound is the batch's —
-        // the previous per-slice test let a many-small-slices screen
-        // (100 × 0.8 GB, say) go lazy with 80 GB of one-job scratch.
-        val barrier = n * ScreenScratchBytesPerDoc >= sliceBarrierMinBytes
-        // full-batch flood cap (see scaladoc): candidate-bound small
-        // list. Checkpointed only in BARRIER mode, where every slice
-        // consumes it as a separate job; lazy mode consumes it exactly
-        // once inside the single candidate job, so the over-cap rollup
-        // inlines there (its tiny aggregate exchange runs in-job — two
-        // fewer driver jobs, same whole-batch cap semantics)
-        val overCapRaw = bandKeysOf(bSigs)
-          .groupBy(col("bucket")).agg(count(lit(1)).as("__bn"))
-          .filter(col("__bn") > index.maxBucket)
-          .select(col("bucket"))
-        if (!barrier) {
-          // LAZY slicing, restructured (r15): the r14 shape built the
-          // FULL screen plan per slice, and because a lazy slice's
-          // candidate set is consumed twice (ref-id prune + rescore),
-          // the index-side banding subplan (explode + flood-cap groupBy
-          // + anti-join over the whole index) executed 2× PER SLICE —
-          // ~10 AQE stage-jobs each, 55 driver jobs for the 5-slice
-          // gate screen. The band join now runs ONCE over the full
-          // batch; the candidate set (whole-batch scratch, which lazy
-          // mode just bounded above) checkpoints eagerly, and each
-          // slice carves it by the SAME id-hash that used to carve the
-          // batch (a doc's candidates are keyed by its own id, so
-          // carving candidates ≡ carving docs — the chunked ≡ unchunked
-          // contract, flood cap included, is untouched). The rescore
-          // attach sides are shared across slices: the batch sigs and
-          // the pruned ref sigs ride one broadcast each when under
-          // `broadcastRefSigsMaxBytes` (ReuseExchange dedups the
-          // identical broadcast subtree across the slice union), else
-          // one eager candidate-bound checkpoint.
-          val bBanded = bandKeysOf(bSigs)
-            .join(overCapRaw, Seq("bucket"), "left_anti")
-          // r16: the candidate count rides the pair checkpoint's own
-          // materializing job, and the ref prune is a LEFT SEMI against
-          // the raw (non-distinct) candidate ref ids — semantically
-          // identical to the old distinct + inner using-join (sigs ids
-          // are unique; a semi join cannot duplicate), but the refIds
-          // distinct exchange, its checkpoint, and its count() are all
-          // gone. The ref-id list is broadcast only under the budget
-          // (see pruneRefSigs); the size-conditional attach guard uses
-          // the pair count (≥ distinct refs), which errs toward the
-          // driver-safe shuffle join.
-          val (pairsAll, nPairs) = org.apache.spark.sql.graftbridge.Bridge
-            .localCheckpointWithCount(
-              bBanded.select(col("bucket"), col("id").as("id_new"))
-                .join(index.banded.select(col("bucket"), col("id").as("id_ref")),
-                  Seq("bucket"))
-                .select(col("id_new"), col("id_ref")).distinct())
-          val prunedRef = pruneRefSigs(index, pairsAll, nPairs,
-            broadcastRefSigsMaxBytes)
-          val refSigs =
-            if (nPairs * (24L + 4L * index.numHashes) <= broadcastRefSigsMaxBytes)
-              broadcast(prunedRef)
-            else prunedRef.localCheckpoint(true)
-          val bNew = bSigs.select(col("id").as("id_new"), col("sig").as("sig_n"))
-          val bAttach =
-            if (n * (24L + 4L * index.numHashes) <= broadcastRefSigsMaxBytes)
-              broadcast(bNew)
-            else bNew
-          val parts = (0 until chunks).map { i =>
-            pairsAll.filter(
-              pmod(xxhash64(col("id_new")), lit(chunks.toLong)) === i.toLong)
-              .join(bAttach, "id_new")
-              .join(refSigs, "id_ref")
-              .select(col("id_new"), col("id_ref"),
-                (graft.functions.TextHash.slotMatchCount(
-                  col("sig_n"), col("sig_r"))
-                  .cast("double") / index.numHashes).as("est_jaccard"))
-          }
-          return parts.reduce(_ unionByName _)
-        }
-        // barrier mode: every slice consumes the cap list as its own job
-        // — materialize it once
-        val overCap = overCapRaw.localCheckpoint(true)
-        val parts = (0 until chunks).map { i =>
-          val slice = bSigs.filter(
-            pmod(xxhash64(col("id")), lit(chunks.toLong)) === i.toLong)
-          // eager checkpoint = the sequencing barrier AND the lineage
-          // cut: once a slice's result is block-materialized, nothing
-          // uses its band/rescore shuffles again (checkpoint blocks
-          // never recompute), so the snapshot-diff below deletes
-          // exactly this slice's shuffle files before the next slice
-          // writes its own — the deterministic reclamation that
-          // bounds peak scratch to one slice's worth
-          val before = org.apache.spark.sql.graftbridge.Bridge.shuffleIds(sc)
-          val r = screenSigs(index, slice, bandKeysOf, Some(overCap),
-            broadcastRefSigsMaxBytes).localCheckpoint(true)
-          val mine =
-            org.apache.spark.sql.graftbridge.Bridge.shuffleIds(sc) -- before
-          org.apache.spark.sql.graftbridge.Bridge.cleanupShuffles(sc, mine)
-          r
-        }
-        // barrier mode leaves ZERO registered shuffles behind: once the
-        // last slice is checkpointed, the flood-cap aggregate's shuffle
-        // (materialized above, insurance-only behind its checkpoint
-        // blocks) is reclaimed too — spec-pinned as the mode's disk
-        // invariant. Lazy mode reclaims nothing eagerly: its frames are
-        // candidate-bound eager checkpoints whose scratch the threshold
-        // just bounded, and the ContextCleaner frees them with the plan.
-        org.apache.spark.sql.graftbridge.Bridge.cleanupShuffles(sc,
-          org.apache.spark.sql.graftbridge.Bridge.shuffleIds(sc) -- before0)
-        return parts.reduce(_ unionByName _)
-      }
+    // the smallest slice count whose per-slice estimate is under the bound
+    val slices = n * ScreenScratchBytesPerDoc / bounds.scratchBytes + 1
+    if (slices == 1)
+      return screenSigs(index, bSigs, bandKeysOf, None, bounds.broadcastBytes)
+    val sc = bSigs.sparkSession.sparkContext
+    val before0 = Bridge.shuffleIds(sc)
+    // the whole-batch flood cap (see scaladoc), candidate-bound small;
+    // every slice consumes it as its own job, so it is materialized once
+    val overCap = bandKeysOf(bSigs)
+      .groupBy(col("bucket")).agg(count(lit(1)).as("__bn"))
+      .filter(col("__bn") > index.maxBucket)
+      .select(col("bucket"))
+      .localCheckpoint(true)
+    val parts = (0L until slices).map { i =>
+      val slice = bSigs.filter(pmod(xxhash64(col("id")), lit(slices)) === i)
+      // eager checkpoint = the sequencing barrier AND the lineage cut:
+      // once a slice's result is block-materialized, nothing uses its
+      // band/rescore shuffles again (checkpoint blocks never recompute),
+      // so the snapshot-diff deletes exactly this slice's shuffle files
+      // before the next slice writes its own
+      val before = Bridge.shuffleIds(sc)
+      val r = screenSigs(index, slice, bandKeysOf, Some(overCap),
+        bounds.broadcastBytes).localCheckpoint(true)
+      Bridge.cleanupShuffles(sc, Bridge.shuffleIds(sc) -- before)
+      r
     }
-    screenSigs(index, bSigs, bandKeysOf, None, broadcastRefSigsMaxBytes)
+    // once the last slice is checkpointed, the flood-cap aggregate's
+    // shuffle (insurance-only behind its checkpoint blocks) goes too: the
+    // sliced screen leaves ZERO registered shuffles behind (spec-pinned)
+    Bridge.cleanupShuffles(sc, Bridge.shuffleIds(sc) -- before0)
+    parts.reduce(_ unionByName _)
   }
 
   /** Estimated shuffle scratch a screen writes per batch doc — measured
     * at the 100M-corpus × 2M-doc probe (14.9 GB / 2M docs ≈ 7.5 KB,
     * candidate-bound: banding rows + the rescore's per-candidate
-    * signature payloads), rounded UP so the chunked-mode estimate errs
-    * toward the scratch-bounded barrier. */
-  private val ScreenScratchBytesPerDoc = 8L << 10
+    * signature payloads), rounded UP so the estimate errs toward more
+    * slices. */
+  private[graft] final val ScreenScratchBytesPerDoc = 8L << 10
+
+  /** The estimated scratch under which [[minhashSearch]] screens a batch
+    * in one pass: 1 GiB, 131,072 batch docs at [[ScreenScratchBytesPerDoc]].
+    * No gate scale factor comes near it: q116's and q134's batch is 500
+    * docs at sf0.01 and 5,000 at sf0.1. */
+  final val ScreenScratchMaxBytes: Long = 1L << 30
+
+  /** The largest candidate-bound side a screen broadcasts, 64 MiB: the
+    * ref-id list of the prune (8 B per candidate pair) and the pruned ref
+    * sigs of the rescore (24 B + 4 B per hash, per pair). Past it the
+    * join shuffles, so a flood of candidates never has to fit the
+    * driver. */
+  final val BroadcastRefSigsMaxBytes: Long = 64L << 20
+
+  /** The two bounds [[minhashSearch]] applies. */
+  private[graft] final case class ScreenBounds(
+      scratchBytes: Long = ScreenScratchMaxBytes,
+      broadcastBytes: Long = BroadcastRefSigsMaxBytes)
+
+  /** The bounds a screen reads; specs lower them to reach the sliced
+    * screen and the shuffle joins on small fixtures. */
+  private[graft] val screenBounds = new DynamicVariable(ScreenBounds())
 
   /** The index sigs pruned to the candidate pairs' ref ids by a LEFT SEMI
     * join (`id_ref`, `sig_r`). The id list (8 B per pair) is broadcast
@@ -764,15 +620,12 @@ object Dedup {
   }
 
   /** One screen over already-signed batch docs — the body shared by the
-    * unchunked path (flood cap computed here, over this frame's own
-    * banding) and the chunked slices (cap precomputed over the FULL
-    * batch and passed in).
-    *
-    * (The chunked LAZY mode no longer goes through this body — it hoists
-    * the band join out of the slice loop in [[minhashSearch]] itself.) */
+    * one-pass screen (flood cap computed here, over this frame's own
+    * banding) and the slices (cap precomputed over the FULL batch and
+    * passed in). */
   private def screenSigs(index: MinhashIndex, bSigs: DataFrame,
       bandKeysOf: DataFrame => DataFrame, overCap: Option[DataFrame],
-      broadcastRefSigsMaxBytes: Long): DataFrame = {
+      maxBroadcastBytes: Long): DataFrame = {
     val bBanded = overCap match {
       case Some(oc) => bandKeysOf(bSigs).join(oc, Seq("bucket"), "left_anti")
       case None => dropOverCapBuckets(bandKeysOf(bSigs),
@@ -782,12 +635,11 @@ object Dedup {
     // prune below + the scoring join) and is candidate-bound small.
     // r16: the candidate count rides the checkpoint's materializing job
     // (localCheckpointWithCount) for the attach-broadcast guard below
-    val (pairs, nPairs) = org.apache.spark.sql.graftbridge.Bridge
-      .localCheckpointWithCount(
-        bBanded.select(col("bucket"), col("id").as("id_new"))
-          .join(index.banded.select(col("bucket"), col("id").as("id_ref")),
-            Seq("bucket"))
-          .select(col("id_new"), col("id_ref")).distinct())
+    val (pairs, nPairs) = Bridge.localCheckpointWithCount(
+      bBanded.select(col("bucket"), col("id").as("id_new"))
+        .join(index.banded.select(col("bucket"), col("id").as("id_ref")),
+          Seq("bucket"))
+        .select(col("id_new"), col("id_ref")).distinct())
     // prune the reference sig table to the candidates' refs via a
     // broadcast semi-join BEFORE any exchange: a screen must never
     // shuffle the index (measured without this: the scoring join's
@@ -807,7 +659,7 @@ object Dedup {
     //
     // Size-conditional broadcast (r13): when the pruned ref-sig slice is
     // small enough — nRefs·(id + numHashes ints + row overhead) under
-    // `broadcastRefSigsMaxBytes` — the ref attach-join is hinted
+    // `maxBroadcastBytes` — the ref attach-join is hinted
     // broadcast, which removes that exchange ENTIRELY (the r12 int cast
     // only shrank it −24%): the candidate pairs stream against a
     // broadcast hash table instead of co-shuffling with the ref sigs.
@@ -822,10 +674,10 @@ object Dedup {
     // list is broadcast only under the budget (see pruneRefSigs); the
     // attach guard below keys on the PAIR count (≥ distinct refs),
     // erring toward the driver-safe shuffle join.
-    val prunedRef = pruneRefSigs(index, pairs, nPairs, broadcastRefSigsMaxBytes)
+    val prunedRef = pruneRefSigs(index, pairs, nPairs, maxBroadcastBytes)
     val refSigs = {
       val refSigBytes = nPairs * (24L + 4L * index.numHashes)
-      if (refSigBytes <= broadcastRefSigsMaxBytes) broadcast(prunedRef)
+      if (refSigBytes <= maxBroadcastBytes) broadcast(prunedRef)
       else prunedRef
     }
     pairs

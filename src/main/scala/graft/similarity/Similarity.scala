@@ -99,31 +99,28 @@ object Similarity {
     * keeping `round(sim,4) ≥ 0.42` should prune at ≤ 0.41995). The cell
     * tier may emit candidates below `threshold` (cells prune by bound,
     * not value); the driver micro-tier emits only pairs at/above it —
-    * both are supersets of every pair the caller keeps. */
-  /** `knownCount`: pass the corpus size when the caller already has it
+    * both are supersets of every pair the caller keeps.
+    *
+    * `knownCount`: pass the corpus size when the caller already has it
     * (a pipeline that just counted or wrote the frame) to skip the
     * tier-selecting count job — the one extra pass over the corpus this
     * operator otherwise costs. An upper bound is safe (it can only
     * steer a small corpus onto the distributed tier, never the driver
     * tier onto too-large data).
     *
-    * `materialize` (ADVICE r6): `true` (default) localCheckpoints the
-    * edge set — the distributed tier runs EAGERLY at call time, in
-    * exchange for iterating consumers (connectedComponents) never
-    * replaying the k-means + join. `false` keeps the EDGE SET lazy; the
-    * internal scan and assignment frames are lazy localCheckpoints
-    * either way, so a consuming action computes each of them at most
-    * once (first consumer stores the blocks, the rest read them) and
-    * the ContextCleaner frees the blocks when the plans are dropped —
-    * no unmanaged persist. Both modes are non-resilient to executor
-    * loss (checkpoint blocks don't recompute); that is the price of
-    * not re-running the k-means pipeline. */
+    * The edge set is localCheckpointed: the distributed tier runs
+    * EAGERLY at call time, so iterating consumers (connectedComponents)
+    * never replay the k-means + join. The internal scan and assignment
+    * frames are lazy localCheckpoints, so the call computes each of them
+    * at most once, and the ContextCleaner frees every block when the
+    * plans are dropped — no unmanaged persist. The edges are
+    * non-resilient to executor loss (checkpoint blocks don't recompute);
+    * that is the price of not re-running the k-means pipeline. */
   def cosineCandidates(
       corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nlist: Int = 64, seed: Long = 42L,
       maxIter: Int = 20, driverThreshold: Long = 5000L,
-      knownCount: Option[Long] = None,
-      materialize: Boolean = true): DataFrame = {
+      knownCount: Option[Long] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
     val spark = corpus.sparkSession
     import org.apache.spark.ml.clustering.KMeans
@@ -131,11 +128,9 @@ object Similarity {
     // zero-norm vectors: cosine is defined 0 here (< any positive τ) —
     // they can never pair, so drop them before normalizing
     // lazy localCheckpoint: consumed by the tier-selecting count(), the
-    // k-means fit/transform passes, and (lazy path) the consuming action
-    // — the first consumer stores the blocks, the rest read them, and
-    // the ContextCleaner frees them when the plan is dropped (the old
-    // persist was unpersisted at build time on the lazy path, so the
-    // consuming action replayed the scan+norm pipeline uncached)
+    // k-means fit/transform passes and the edge checkpoint — the first
+    // consumer stores the blocks, the rest read them, and the
+    // ContextCleaner frees them when the plan is dropped
     val base = corpus.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))
@@ -269,17 +264,12 @@ object Similarity {
     // and eager materialization is what lets the internal caches be
     // RELEASED here instead of leaking across calls (ADVICE r5). The edge
     // set is the operator's output — downstream reads it in full anyway.
-    // materialize=false keeps lineage instead (see scaladoc).
-    val joined = a.join(cpairs, "cell_a")
+    a.join(cpairs, "cell_a")
       .join(b, "cell_b")
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         cosinePre(col("va"), col("vb"), col("na"), col("nb")).as("sim"))
-    // eager: materialize the edge set now (iterating consumers replay
-    // nothing); lazy: hand back the un-run plan — the checkpoints above
-    // bound every internal frame to one computation per consuming action,
-    // and the ContextCleaner owns all block lifetimes
-    if (materialize) joined.localCheckpoint(true) else joined
+      .localCheckpoint(true)
   }
 
   /** LSH-bucketed ANN: multi-probe via `tables` independent bucket keys;

@@ -41,8 +41,10 @@ object Correlation {
     * column gives what an all-NaN one does (1 at lag 0, NaN after); an
     * empty frame fails. */
   def acfVectorWithCount(tsf: TimeseriesFrame, xCol: String,
-      maxLag: Int): (Array[Double], Long) =
+      maxLag: Int): (Array[Double], Long) = {
+    requireLag(maxLag)
     acfInOrder(values(RangeScan.sorted(withX(tsf, xCol), tsf.orderCols: _*)), maxLag)
+  }
 
   /** `xCol` as `__x`, a double, next to the order columns. */
   private def withX(tsf: TimeseriesFrame, xCol: String): DataFrame =
@@ -169,6 +171,12 @@ object Correlation {
   private def requireRows(n: Long): Unit =
     require(n > 0, "ACF of an empty series: the frame has no rows")
 
+  /** Checked on the driver before any job: a negative depth would
+    * otherwise abort the pass inside a task. */
+  private def requireLag(maxLag: Int): Unit =
+    require(maxLag >= 0, s"ACF depth maxLag must be >= 0, got $maxLag " +
+      "(the default PACF depth n/2 - 1 is negative below 2 rows)")
+
   /** The K-lag-columns window formulation of [[acfVector]] — the original
     * semantic spec, kept for differential testing. */
   def acfVectorWindow(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] = {
@@ -197,8 +205,10 @@ object Correlation {
     * partition-parallel: the 100 TB path, and the twin that keeps
     * [[acfInOrder]]'s carry under test on small fixtures. Numerically
     * identical to [[acfVector]] up to summation order. */
-  def acfVectorDistributed(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] =
+  def acfVectorDistributed(tsf: TimeseriesFrame, xCol: String, maxLag: Int): Array[Double] = {
+    requireLag(maxLag)
     acfInOrder(values(withX(tsf, xCol).orderBy(tsf.orderCols: _*)), maxLag)._1
+  }
 
   /** Grouped multi-series ACF — the horizontal scale path the reference
     * lacks: one row per (seriesKeys, lag). All windows partition by the
@@ -501,6 +511,7 @@ object Correlation {
       maxLag: Option[Int] = None, alpha: Option[Double] = None): DataFrame = {
     val n = tsf.df.count()
     val k = maxLag.getOrElse(math.min(n.toInt / 2 - 1, n.toInt - 1))
+    requireLag(k)
     // deep depths route the ACF through the FFT (acfVectorAuto); the
     // Levinson–Durbin solve stays O(k²) local — statsmodels 'ldb' pays
     // the same, and it is primitive-loop arithmetic after the de-boxing

@@ -116,13 +116,4 @@ object Bridge {
       org.apache.spark.sql.execution.LogicalRDD.fromDataset(internalRdd, ds,
         isStreaming = false)), n)
   }
-
-  /** Drop one cached RDD block out of the block manager — the
-    * fault-injection hook for the reclaim specs (a cache-block loss is
-    * the failure mode `cleanupShuffles`' lineage-safety claim is about,
-    * so the spec must be able to CAUSE one rather than argue about it). */
-  def removeCachedBlock(sc: org.apache.spark.SparkContext,
-      rddId: Int, partition: Int): Unit =
-    org.apache.spark.SparkEnv.get.blockManager.master
-      .removeBlock(org.apache.spark.storage.RDDBlockId(rddId, partition))
 }

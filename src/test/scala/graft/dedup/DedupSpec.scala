@@ -20,6 +20,12 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
   }
 
+  /** `body` with the screen's scratch bound at `docs` batch docs, so a
+    * batch of n docs screens in ⌊n / docs⌋ + 1 id-hash slices. */
+  private def slicedAt[T](docs: Long)(body: => T): T =
+    Dedup.screenBounds.withValue(Dedup.ScreenBounds(
+      scratchBytes = docs * Dedup.ScreenScratchBytesPerDoc))(body)
+
   test("shingleHashes: one hash per distinct word n-gram, stable values") {
     val r = docs.select(
       size(TextFunctions.wordShingles(col("text"), 3)).as("nstr"),
@@ -168,17 +174,25 @@ class DedupSpec extends SparkSpec {
     assert(rep.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((301L, 9L)))
   }
 
-  test("minhashCandidates: materialize=false ≡ eager default; sig cache released") {
+  test("minhashCandidates: lazy pairs ≡ a checkpointed copy; sig cache released") {
     import spark.implicits._
     val docs = ((1L to 40L).map(i => (i, s"unique text number $i about topic ${i % 7}")) ++
       Seq((101L, "the quick brown fox jumps over the lazy dog tonight"),
           (102L, "the quick brown fox jumps over the lazy dog today"))).toDF("doc_id", "text")
-    def run(m: Boolean) = Dedup.minhashCandidates(docs, "doc_id", "text",
-        numHashes = 16, bands = 4, materialize = m)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, t._2)).toSeq
-    val eager = run(m = true)
-    assert(eager == run(m = false), eager.mkString(";"))
-    assert(eager.exists(t => t._1 == 101L && t._2 == 102L), eager.mkString(";"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val pairs = Dedup.minhashCandidates(docs, "doc_id", "text",
+      numHashes = 16, bands = 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, t._2)).toSeq
+    val lazyRows = rows(pairs)
+    assert(lazyRows == rows(pairs.localCheckpoint(true)), lazyRows.mkString(";"))
+    assert(lazyRows.exists(t => t._1 == 101L && t._2 == 102L), lazyRows.mkString(";"))
+    // the signature frame is a checkpoint the ContextCleaner owns: the
+    // call pins no cache of its own
+    val pinned = sc.getPersistentRDDs
+      .filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }.keySet
+    assert(pinned.isEmpty, s"minhashCandidates left pinned RDDs $pinned")
   }
 
   test("decontaminate: broadcast eval prefilter ≡ symmetric shuffle path") {
@@ -526,7 +540,7 @@ class DedupSpec extends SparkSpec {
     val ref = corpus.filter(col("doc_id") % 2 === 0)
     val batch = corpus.filter(col("doc_id") % 2 === 1)
     val self = Dedup.minhashCandidates(corpus, "doc_id", "text",
-      numHashes = 64, bands = 16, materialize = false)
+      numHashes = 64, bands = 16)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filter { case (a, b, _) => (a % 2 == 0) != (b % 2 == 0) }
@@ -543,25 +557,14 @@ class DedupSpec extends SparkSpec {
     assert(viaIndexOriented == self,
       s"index=${viaIndexOriented.take(5)} self=${self.take(5)}")
     assert(self.nonEmpty, "construction must produce cross pairs")
-    // chunked mode ≡ one-shot over this realistic corpus too (the flood
-    // spec below pins the cap corner; this pins the common shape):
-    // 21 batch docs at maxDocsPerScreen=5 → 5 hash-carved slices
-    val viaChunks = Dedup.minhashSearch(idx, batch, "doc_id", "text",
-      maxDocsPerScreen = 5L)
+    // the sliced screen ≡ one-shot over this realistic corpus too (the
+    // flood spec below pins the cap corner; this pins the common shape):
+    // 20 batch docs under a 5-doc bound → 5 hash-carved slices
+    val viaChunks = slicedAt(5L)(Dedup.minhashSearch(idx, batch, "doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sorted.toSeq
     assert(viaChunks == viaIndexOriented,
       "chunked screen diverged from the one-shot screen")
-    // r16: targetScreenChunks derives the per-slice cap from the batch
-    // count the screen already measures (⌈20/4⌉ = 5 docs/slice here) —
-    // must equal the explicit maxDocsPerScreen=5 carving exactly, since
-    // both carve by the same id-hash into the same slice count
-    val viaTarget = Dedup.minhashSearch(idx, batch, "doc_id", "text",
-      targetScreenChunks = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sorted.toSeq
-    assert(viaTarget == viaChunks,
-      "targetScreenChunks carving diverged from the explicit cap")
     // persist lifecycle: pinned index returns the identical result
     val pinned = idx.persist()
     // serving-layout contract (r11): the pinned banded store is cached
@@ -667,21 +670,22 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val idx = Dedup.minhashIndex(ref, "doc_id", "text",
       numHashes = 64, bands = 16, maxBucket = 3L)
-    def run(chunk: Long) = Dedup.minhashSearch(idx, batch, "doc_id", "text",
-      maxDocsPerScreen = chunk)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sorted.toSeq
-    val oneShot = run(0L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sorted.toSeq
+    def run(docsPerSlice: Long) = rows(slicedAt(docsPerSlice)(
+      Dedup.minhashSearch(idx, batch, "doc_id", "text")))
+    val oneShot = rows(Dedup.minhashSearch(idx, batch, "doc_id", "text"))
     // sanity on the fixture: perturbed docs match their sources, flood
     // docs match NOTHING despite the index holding two under-cap copies
     assert(oneShot.exists { case (nw, rf, _) => nw == 1000L && rf == 0L })
     assert(!oneShot.exists { case (nw, _, _) => nw >= 2000L },
       s"flood docs must be capped out of the batch side: $oneShot")
-    // 14 batch docs at cap 4 → 4 hash-carved slices; the flood's 8 docs
-    // spread ~2 per slice, under the per-slice count — only the global
-    // over-cap list keeps them dropped
+    // 14 batch docs under a 4-doc bound → 4 hash-carved slices; the
+    // flood's 8 docs spread ~2 per slice, under the per-slice count —
+    // only the global over-cap list keeps them dropped
     assert(run(4L) == oneShot, "chunked screen diverged (flood corner)")
-    // chunk boundary no-op: cap >= batch size must take the one-shot path
+    // a bound over the batch size takes the one-shot path
     assert(run(100L) == oneShot)
   }
 
@@ -709,100 +713,15 @@ class DedupSpec extends SparkSpec {
     assert(cp.schema == src.schema)
   }
 
-  test("persist(reclaimBuildShuffles): build shuffles deleted, search unchanged") {
-    import spark.implicits._
-    import org.apache.spark.sql.graftbridge.Bridge
-    val corpus = (0L until 30L).map(i =>
-      (i, s"group ${i % 5} long shared sentence body variant ${i % 10} " +
-        "with common trailing words")).toDF("doc_id", "text")
-    val ref = corpus.filter(col("doc_id") % 2 === 0)
-    val batch = corpus.filter(col("doc_id") % 2 === 1)
-    val sc = spark.sparkContext
-    def run(idx: Dedup.MinhashIndex) =
-      Dedup.minhashSearch(idx, batch, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .sorted.toSeq
-    val plain = Dedup.minhashIndex(ref, "doc_id", "text",
-      numHashes = 64, bands = 16).persist()
-    val expect = run(plain)
-    plain.release()
-    val before = Bridge.shuffleIds(sc)
-    val reclaimed = Dedup.minhashIndex(ref, "doc_id", "text",
-      numHashes = 64, bands = 16).persist(reclaimBuildShuffles = true)
-    // every shuffle registered during the persist is gone again — the
-    // disk files behind the pinned layout's lineage were reclaimed
-    assert((Bridge.shuffleIds(sc) -- before).isEmpty,
-      "build shuffles must be unregistered after the reclaim")
-    // the pinned blocks serve searches identically (and a hypothetical
-    // cache-block loss would resubmit parent stages from lineage —
-    // recompute cost, never wrong data)
-    assert(run(reclaimed) == expect)
-    assert(expect.nonEmpty)
-    reclaimed.release()
-  }
-
-  test("persist(reclaimBuildShuffles): search survives a cache-block loss") {
-    import spark.implicits._
-    // ADVICE r14: the reclaim's central safety claim — "a cache-block
-    // loss recomputes from lineage; cost is re-execution, never wrong
-    // data" — was pinned only on the happy path where no block is ever
-    // lost. This drops materialized blocks of BOTH pinned frames AFTER
-    // the build shuffles were deleted and asserts the next search still
-    // answers identically (the recompute path re-runs the parent map
-    // stages from the surviving signature checkpoint and re-registers
-    // the shuffle it needs).
-    val corpus = (0L until 40L).map(i =>
-      (i, s"group ${i % 5} long shared sentence body variant ${i % 10} " +
-        "with common trailing words")).toDF("doc_id", "text")
-    val ref = corpus.filter(col("doc_id") % 2 === 0)
-    val batch = corpus.filter(col("doc_id") % 2 === 1)
-    val sc = spark.sparkContext
-    def run(idx: Dedup.MinhashIndex) =
-      Dedup.minhashSearch(idx, batch, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .sorted.toSeq
-    val plain = Dedup.minhashIndex(ref, "doc_id", "text",
-      numHashes = 64, bands = 16).persist()
-    val expect = run(plain)
-    assert(expect.nonEmpty)
-    plain.release()
-    val cachedBefore = sc.getPersistentRDDs.keySet
-    val idx = Dedup.minhashIndex(ref, "doc_id", "text",
-      numHashes = 64, bands = 16).persist(reclaimBuildShuffles = true)
-    // newly-pinned CACHE RDDs only: getPersistentRDDs also lists the
-    // signature localCheckpoint, whose block loss is unrecoverable BY
-    // DOCUMENTED DESIGN (checkpoint blocks don't recompute — the price
-    // of running the signature scan once); the reclaim claim is about
-    // the two cached frames whose lineage references the deleted build
-    // shuffles, so the fault is injected there
-    val mine = (sc.getPersistentRDDs.keySet -- cachedBefore).toSeq.sorted
-      .filterNot(id => sc.getPersistentRDDs(id).isCheckpointed)
-    assert(mine.nonEmpty, "persist() must have pinned new cache RDDs")
-    // drop cached partitions of each pinned cache (banded laid + counts)
-    // straight out of the block manager — the failure the claim is about
-    val dropped = mine.flatMap { id =>
-      sc.getPersistentRDDs(id).partitions.take(2).map { p =>
-        org.apache.spark.sql.graftbridge.Bridge.removeCachedBlock(
-          sc, id, p.index)
-        (id, p.index)
-      }
-    }
-    assert(dropped.nonEmpty)
-    assert(run(idx) == expect,
-      "post-block-loss search diverged — the lineage-recompute claim is broken")
-    idx.release()
-  }
-
   test("minhashSearch chunked barrier mode: slice shuffles reclaimed, result identical") {
     import spark.implicits._
     import org.apache.spark.sql.graftbridge.Bridge
-    // VERDICT r14 task 3: the probe-scale chunked path now reclaims each
-    // slice's own shuffles via the map-output-tracker snapshot-diff (no
-    // System.gc() nudge, no throttle heuristic). Forced here at gate
-    // scale with sliceBarrierMinBytes = 0; the invariant is total — the
-    // whole chunked screen leaves ZERO registered shuffles behind (the
-    // sizing count, the flood-cap aggregate, and every slice's band/
-    // rescore shuffles are all insurance-only behind checkpoint blocks).
+    // the sliced screen reclaims each slice's own shuffles via the
+    // map-output-tracker snapshot-diff. Forced here at gate scale by a
+    // 7-doc bound (30 docs → 5 slices); the invariant is total — the
+    // whole sliced screen leaves ZERO registered shuffles behind (the
+    // flood-cap aggregate and every slice's band/rescore shuffles are
+    // all insurance-only behind checkpoint blocks).
     val corpus = (0L until 30L).map(i =>
       (i, s"cluster ${i % 6} shared long body sentence variant ${i % 3} " +
         "with persistent trailing words here")).toDF("doc_id", "text")
@@ -819,18 +738,28 @@ class DedupSpec extends SparkSpec {
       Dedup.minhashSearch(idx, batch, "doc_id", "text"))
     assert(oneShot.nonEmpty)
     val before = Bridge.shuffleIds(sc)
-    val chunkedDf = Dedup.minhashSearch(idx, batch, "doc_id", "text",
-      maxDocsPerScreen = 7L, sliceBarrierMinBytes = 0L)
+    val chunkedDf = slicedAt(7L)(Dedup.minhashSearch(idx, batch, "doc_id", "text"))
     val leftover = Bridge.shuffleIds(sc) -- before
     assert(leftover.isEmpty,
       s"barrier-mode chunked screen left registered shuffles: $leftover")
     assert(collectSorted(chunkedDf) == oneShot,
       "barrier-mode chunked screen diverged from the one-shot screen")
-    // and the default threshold keeps gate-scale slices on the lazy
-    // path: same equality, one consuming job, nothing reclaimed
-    assert(collectSorted(Dedup.minhashSearch(idx, batch, "doc_id", "text",
-      maxDocsPerScreen = 7L)) == oneShot)
     idx.release()
+  }
+
+  test("q134 screens in one pass on the gate's sf0.01 tables: no more jobs than q116") {
+    // perfbench/gate_sf0.01 is the byte copy of the gate's sf0.01 tables;
+    // the table is read once first, so the schema catalog's inference job
+    // is not counted. q134's 500-doc batch is far under the screen's
+    // scratch bound, so it runs q116's one-pass screen, not slices.
+    val gateDir = "perfbench/gate_sf0.01"
+    graft.SparkEntry.tbl(spark, gateDir, "documents")
+    def run(q: String) = jobsLaunchedBy(
+      graft.SparkEntry.queries(q)(spark, gateDir).collect().map(_.toString).sorted.toSeq)
+    val (q116, jobs116) = run("q116_minhash_index_search")
+    val (q134, jobs134) = run("q134_minhash_index_search_chunked")
+    assert(q134.nonEmpty && q134 == q116)
+    assert(jobs134 <= jobs116, s"q134 launched $jobs134 jobs, q116 $jobs116")
   }
 
   test("MinhashIndex.append ≡ rebuild over the union, incl. cap crossing") {
@@ -1100,8 +1029,8 @@ class DedupSpec extends SparkSpec {
       // ...and fall back to a shuffle join above the cap (cap 0 forces
       // the at-scale path: an unbounded candidate ref slice must not
       // collect to the driver)
-      val over = Dedup.minhashSearch(idx, batch, "doc_id", "text",
-        broadcastRefSigsMaxBytes = 0L)
+      val over = Dedup.screenBounds.withValue(Dedup.ScreenBounds(broadcastBytes = 0L))(
+        Dedup.minhashSearch(idx, batch, "doc_id", "text"))
       val kindsOver = joinKinds(over)
       assert(kindsUnder.count(_ == "bhj") == kindsOver.count(_ == "bhj") + 2,
         s"attach join not size-conditionally broadcast: " +
@@ -1117,32 +1046,52 @@ class DedupSpec extends SparkSpec {
 
   test("minhashSearch ref-id prune: a tiny budget keeps the semi join unbroadcast, same rows") {
     val (idx, batch) = screenFixture()
-    /** Final-plan broadcasts whose payload is the bare `id_ref` list. */
-    def refIdBroadcasts(res: org.apache.spark.sql.DataFrame): Int = {
-      res.collect() // finalize THIS dataset's adaptive plan
-      org.apache.spark.sql.graftbridge.Bridge
-        .allExecutedNodes(res.queryExecution.executedPlan)
-        .count {
-          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
-            b.output.map(_.name) == Seq("id_ref")
-          case _ => false
-        }
+    /** Broadcasts whose payload is the bare `id_ref` list, in the final
+      * plans of every SQL action the screen and a `collect` of its result
+      * run: the one-pass rescore runs in the collect, each slice's in the
+      * slice's own checkpoint. A sentinel action run afterwards is awaited,
+      * so every earlier action has reached the listener by then. */
+    def refIdBroadcasts(screen: => org.apache.spark.sql.DataFrame): (Int, Seq[String]) = {
+      import org.apache.spark.sql.execution.QueryExecution
+      val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val sentinel = s"sentinel_${System.nanoTime}"
+      @volatile var sentinelSeen = false
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.analyzed.output.map(_.name) == Seq(sentinel)) sentinelSeen = true
+          else counts.add(org.apache.spark.sql.graftbridge.Bridge
+            .allExecutedNodes(qe.executedPlan).count {
+              case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+                b.output.map(_.name) == Seq("id_ref")
+              case _ => false
+            })
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val rows = screen.collect().map(_.toString).sorted.toSeq
+        spark.range(1).toDF(sentinel).collect()
+        val deadline = System.nanoTime + 30L * 1000000000L
+        while (!sentinelSeen && System.nanoTime < deadline) Thread.sleep(10)
+        assert(sentinelSeen, "sentinel action never reached the listener")
+        (counts.toArray.map(_.asInstanceOf[Int]).sum, rows)
+      } finally spark.listenerManager.unregister(listener)
     }
-    def rows(res: org.apache.spark.sql.DataFrame) =
-      res.collect().map(_.toString).sorted.toSeq
     // only the engine's own hints may broadcast (see the test above)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // the unchunked screen and the chunked lazy screen each prune once
-      for (chunks <- Seq(0, 2)) {
-        val roomy = Dedup.minhashSearch(idx, batch, "doc_id", "text",
-          targetScreenChunks = chunks)
-        val tiny = Dedup.minhashSearch(idx, batch, "doc_id", "text",
-          broadcastRefSigsMaxBytes = 8L, targetScreenChunks = chunks)
-        assert(refIdBroadcasts(roomy) > 0, s"chunks=$chunks: no id_ref broadcast")
-        assert(refIdBroadcasts(tiny) == 0, s"chunks=$chunks: id_ref broadcast over budget")
-        assert(rows(roomy).nonEmpty)
-        assert(rows(tiny) == rows(roomy), s"chunks=$chunks")
+      // the one-pass screen, and the same 10-doc batch under a 6-doc
+      // bound (2 slices): each pass prunes under the same budget
+      for (scratch <- Seq(Dedup.ScreenScratchMaxBytes, 6L * Dedup.ScreenScratchBytesPerDoc)) {
+        def screen(broadcastBytes: Long) = Dedup.screenBounds.withValue(
+          Dedup.ScreenBounds(scratch, broadcastBytes))(
+          Dedup.minhashSearch(idx, batch, "doc_id", "text"))
+        val (roomyBroadcasts, roomy) = refIdBroadcasts(screen(Dedup.BroadcastRefSigsMaxBytes))
+        val (tinyBroadcasts, tiny) = refIdBroadcasts(screen(8L))
+        assert(roomyBroadcasts > 0, s"scratch=$scratch: no id_ref broadcast")
+        assert(tinyBroadcasts == 0, s"scratch=$scratch: id_ref broadcast over budget")
+        assert(roomy.nonEmpty)
+        assert(tiny == roomy, s"scratch=$scratch")
       }
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }

@@ -411,11 +411,11 @@ class MultimodalStreamingSpec extends SparkSpec {
   }
 
   test("chunked-screen parity: 3-trigger stream ≡ batch chunked ≡ one-shot") {
-    // VERDICT r14 task 7 — PLANS asserts the streaming twin's
-    // micro-batch IS the chunk (bound per-screen scratch by bounding the
-    // trigger); this pins it: the SAME six arriving docs screened (a) as
-    // three 2-doc stream triggers, (b) as one batch carved into 3
-    // id-hash slices (minhashSearch chunked mode), and (c) as the
+    // the streaming twin's micro-batch IS the chunk (bound per-screen
+    // scratch by bounding the trigger); this pins it: the SAME six
+    // arriving docs screened (a) as three 2-doc stream triggers, (b) as
+    // one batch carved into 3 id-hash slices (minhashSearch's sliced
+    // screen, reached through a 3-doc scratch bound), and (c) as the
     // one-shot batch screen must produce bit-equal (id_new, id_ref,
     // est_jaccard) rows. est_jaccard is integer slot-count arithmetic /
     // numHashes, so equality is exact, not approximate.
@@ -451,14 +451,16 @@ class MultimodalStreamingSpec extends SparkSpec {
       .sorted.toSeq
     q.stop()
     val batchDf = ids.map(i => (i, arriving(i)._3)).toDF("doc_id", "text")
-    def screen(chunk: Long) =
-      graft.dedup.Dedup.minhashSearch(idx, batchDf, "doc_id", "text",
-        maxDocsPerScreen = chunk)
-        .filter(col("est_jaccard") >= 0.5)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("est_jaccard") >= 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sorted.toSeq
-    val oneShot = screen(0L)
-    val chunked = screen(2L) // 6 docs, cap 2 → 3 id-hash slices
+    val oneShot = rows(graft.dedup.Dedup.minhashSearch(idx, batchDf, "doc_id", "text"))
+    // 6 docs under a 3-doc bound → ⌊6/3⌋ + 1 = 3 id-hash slices
+    val chunked = rows(graft.dedup.Dedup.screenBounds.withValue(
+      graft.dedup.Dedup.ScreenBounds(
+        scratchBytes = 3L * graft.dedup.Dedup.ScreenScratchBytesPerDoc))(
+      graft.dedup.Dedup.minhashSearch(idx, batchDf, "doc_id", "text")))
     idx.release()
     assert(streamed.nonEmpty)
     assert(chunked == oneShot, s"chunked diverged:\n$chunked\nvs\n$oneShot")

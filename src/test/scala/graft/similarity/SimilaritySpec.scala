@@ -212,12 +212,6 @@ class SimilaritySpec extends SparkSpec {
       .union(Seq((9999L, Seq.fill(64)(0.0))).toDF("vec_id", "v"))
     val z = Similarity.cosineCandidates(withZero, "vec_id", "v", threshold = 0.42)
     assert(z.filter(col("id_a") === 9999L || col("id_b") === 9999L).count() == 0)
-    // materialize=false: lazy, lineage-preserving variant — identical set
-    // (ADVICE r6: the eager localCheckpoint is opt-out now)
-    val lazyPairs = toSet(Similarity.cosineCandidates(e, "vec_id", "v",
-        threshold = 0.42, nlist = 16, driverThreshold = 0L, materialize = false)
-      .filter(col("sim") >= 0.42))
-    assert(lazyPairs == direct)
   }
 
   test("native dot expression matches the HOF twin bit-for-bit (differential)") {

@@ -250,6 +250,23 @@ class SpectralSpec extends SparkSpec {
     }
   }
 
+  test("a negative ACF depth fails by name on the driver, before any job; PACF of one row too") {
+    val one = TimeseriesFrame(seriesDF(d(5)), None, Seq("i"))
+    // the single-series entries check the depth before they build a job
+    for (acf <- Seq[TimeseriesFrame => Any](Correlation.acfVector(_, "x", -1),
+        Correlation.acfVectorWithCount(_, "x", -1),
+        Correlation.acfVectorDistributed(_, "x", -1))) {
+      val (e, jobs) = jobsLaunchedBy(intercept[IllegalArgumentException](acf(one)))
+      assert(e.getMessage.contains("maxLag must be >= 0, got -1"), e.getMessage)
+      assert(jobs == 0, s"$jobs job(s) before the depth check")
+    }
+    // a one-row series: the default PACF depth min(n/2 - 1, n - 1) is -1;
+    // the ACF at depth 0 is still defined
+    val e = intercept[IllegalArgumentException](Correlation.pacf(spark, one, "x"))
+    assert(e.getMessage.contains("maxLag must be >= 0, got -1"), e.getMessage)
+    assert(Correlation.acfVector(one, "x", 0).toSeq == Seq(1.0))
+  }
+
   test("quadratic/cubic detrend matches numpy polyfit residuals on airpassengers") {
     // transcribed goldens: np.polyfit(arange(144), x, order) residuals
     val gold = Map(
