@@ -509,18 +509,22 @@ object Dedup {
     * single-screen scratch against 8.9 GB of free disk) the batch is
     * carved into the fewest deterministic id-hash slices whose estimate
     * is each under the bound, screened one after another: each slice's
-    * result is eagerly checkpointed, and the slice's own shuffles —
-    * snapshot-diffed in the map-output tracker — are deleted before the
-    * next slice starts (they are recompute insurance a checkpoint never
-    * uses), so peak scratch is one slice's worth and the screen leaves no
-    * registered shuffle behind. A doc's candidates depend only on its own
-    * bands and the immutable index, so the slices union to the one-pass
-    * result, with one care: the batch-side flood cap counts bucket
-    * members over the WHOLE batch, once, and every slice anti-joins that
-    * list — a flood split across slices would otherwise duck under a
-    * per-slice cap (spec-pinned, flood included). The per-slice reclaim
-    * assumes no CONCURRENT query registers shuffles during the screen; a
-    * batch past a GiB of scratch is the single-writer backfill shape.
+    * result is eagerly checkpointed, and the shuffles that slice's own
+    * plans wrote (the [[Bridge.shuffleIdsOf]] of each frame it
+    * checkpointed) are deleted before the next slice starts (they are
+    * recompute insurance a checkpoint never uses), so peak scratch is
+    * one slice's worth and the screen leaves none of its shuffles
+    * registered. Only those ids go: a shuffle that another query of the
+    * same context registers while the screen runs is never touched
+    * (spec-pinned). A doc's candidates depend only on its own bands and
+    * the immutable index, so the slices union to the one-pass result,
+    * with one care: the batch-side flood cap counts bucket members over
+    * the WHOLE batch, once, and every slice anti-joins that list — a
+    * flood split across slices would otherwise duck under a per-slice
+    * cap (spec-pinned, flood included). The sliced side is checked for
+    * its rows and its shuffles on spec fixtures only: no gate scale
+    * factor or benchmark workload reaches it, so what slicing costs
+    * against one pass on a large batch is unmeasured.
     *
     * The streaming twin
     * ([[graft.streaming.StreamingOps.streamingMinhashIndexScreen]]) has
@@ -548,47 +552,53 @@ object Dedup {
     // the smallest slice count whose per-slice estimate is under the bound
     val slices = n * ScreenScratchBytesPerDoc / bounds.scratchBytes + 1
     if (slices == 1)
-      return screenSigs(index, bSigs, bandKeysOf, None, bounds.broadcastBytes)
+      return screenSigs(index, bSigs, bandKeysOf, None, bounds.broadcastBytes)._1
     val sc = bSigs.sparkSession.sparkContext
-    val before0 = Bridge.shuffleIds(sc)
+    // once a frame's rows are checkpoint blocks nothing reads its
+    // shuffles again (checkpoint blocks never recompute), so the shuffles
+    // its executed plan wrote go; ids read off the screen's own plans,
+    // never a diff of the context's registry, which would also take
+    // another query's
+    def reclaim(ran: DataFrame*): Unit =
+      Bridge.cleanupShuffles(sc, ran.flatMap(Bridge.shuffleIdsOf).toSet)
     // the whole-batch flood cap (see scaladoc), candidate-bound small;
     // every slice consumes it as its own job, so it is materialized once
-    val overCap = bandKeysOf(bSigs)
+    val overCapPlan = bandKeysOf(bSigs)
       .groupBy(col("bucket")).agg(count(lit(1)).as("__bn"))
       .filter(col("__bn") > index.maxBucket)
       .select(col("bucket"))
-      .localCheckpoint(true)
+    val overCap = overCapPlan.localCheckpoint(true)
+    reclaim(overCapPlan)
     val parts = (0L until slices).map { i =>
       val slice = bSigs.filter(pmod(xxhash64(col("id")), lit(slices)) === i)
       // eager checkpoint = the sequencing barrier AND the lineage cut:
-      // once a slice's result is block-materialized, nothing uses its
-      // band/rescore shuffles again (checkpoint blocks never recompute),
-      // so the snapshot-diff deletes exactly this slice's shuffle files
-      // before the next slice writes its own
-      val before = Bridge.shuffleIds(sc)
-      val r = screenSigs(index, slice, bandKeysOf, Some(overCap),
-        bounds.broadcastBytes).localCheckpoint(true)
-      Bridge.cleanupShuffles(sc, Bridge.shuffleIds(sc) -- before)
+      // this slice's band and rescore shuffles go before the next slice
+      // writes its own
+      val (screen, pairsPlan) = screenSigs(index, slice, bandKeysOf,
+        Some(overCap), bounds.broadcastBytes)
+      val r = screen.localCheckpoint(true)
+      reclaim(pairsPlan, screen)
       r
     }
-    // once the last slice is checkpointed, the flood-cap aggregate's
-    // shuffle (insurance-only behind its checkpoint blocks) goes too: the
-    // sliced screen leaves ZERO registered shuffles behind (spec-pinned)
-    Bridge.cleanupShuffles(sc, Bridge.shuffleIds(sc) -- before0)
     parts.reduce(_ unionByName _)
   }
 
   /** Estimated shuffle scratch a screen writes per batch doc — measured
-    * at the 100M-corpus × 2M-doc probe (14.9 GB / 2M docs ≈ 7.5 KB,
-    * candidate-bound: banding rows + the rescore's per-candidate
-    * signature payloads), rounded UP so the estimate errs toward more
-    * slices. */
+    * once, at a 100M-corpus × 2M-doc probe that is no longer in the repo
+    * (14.9 GB / 2M docs ≈ 7.5 KB), rounded UP so the estimate errs toward
+    * more slices. The scratch is candidate-bound (banding rows + the
+    * rescore's per-candidate signature payloads), so the true figure
+    * moves with a corpus's duplicate rate; no workload re-measures it. */
   private[graft] final val ScreenScratchBytesPerDoc = 8L << 10
 
   /** The estimated scratch under which [[minhashSearch]] screens a batch
     * in one pass: 1 GiB, 131,072 batch docs at [[ScreenScratchBytesPerDoc]].
     * No gate scale factor comes near it: q116's and q134's batch is 500
-    * docs at sf0.01 and 5,000 at sf0.1. */
+    * docs at sf0.01 and 5,000 at sf0.1. Neither the sliced side past it
+    * nor where slicing starts to pay is verified on any workload: specs
+    * check the sliced rows and shuffles on small fixtures through
+    * [[screenBounds]], and no benchmark workload has a batch past the
+    * bound. */
   final val ScreenScratchMaxBytes: Long = 1L << 30
 
   /** The largest candidate-bound side a screen broadcasts, 64 MiB: the
@@ -622,10 +632,11 @@ object Dedup {
   /** One screen over already-signed batch docs — the body shared by the
     * one-pass screen (flood cap computed here, over this frame's own
     * banding) and the slices (cap precomputed over the FULL batch and
-    * passed in). */
+    * passed in). Returns the lazy result and the candidate-pair frame
+    * the screen already checkpointed, whose shuffles a slice reclaims. */
   private def screenSigs(index: MinhashIndex, bSigs: DataFrame,
       bandKeysOf: DataFrame => DataFrame, overCap: Option[DataFrame],
-      maxBroadcastBytes: Long): DataFrame = {
+      maxBroadcastBytes: Long): (DataFrame, DataFrame) = {
     val bBanded = overCap match {
       case Some(oc) => bandKeysOf(bSigs).join(oc, Seq("bucket"), "left_anti")
       case None => dropOverCapBuckets(bandKeysOf(bSigs),
@@ -635,11 +646,11 @@ object Dedup {
     // prune below + the scoring join) and is candidate-bound small.
     // r16: the candidate count rides the checkpoint's materializing job
     // (localCheckpointWithCount) for the attach-broadcast guard below
-    val (pairs, nPairs) = Bridge.localCheckpointWithCount(
-      bBanded.select(col("bucket"), col("id").as("id_new"))
-        .join(index.banded.select(col("bucket"), col("id").as("id_ref")),
-          Seq("bucket"))
-        .select(col("id_new"), col("id_ref")).distinct())
+    val pairsPlan = bBanded.select(col("bucket"), col("id").as("id_new"))
+      .join(index.banded.select(col("bucket"), col("id").as("id_ref")),
+        Seq("bucket"))
+      .select(col("id_new"), col("id_ref")).distinct()
+    val (pairs, nPairs) = Bridge.localCheckpointWithCount(pairsPlan)
     // prune the reference sig table to the candidates' refs via a
     // broadcast semi-join BEFORE any exchange: a screen must never
     // shuffle the index (measured without this: the scoring join's
@@ -680,13 +691,13 @@ object Dedup {
       if (refSigBytes <= maxBroadcastBytes) broadcast(prunedRef)
       else prunedRef
     }
-    pairs
+    (pairs
       .join(bSigs.select(col("id").as("id_new"),
         col("sig").as("sig_n")), "id_new")
       .join(refSigs, "id_ref")
       .select(col("id_new"), col("id_ref"),
         (graft.functions.TextHash.slotMatchCount(col("sig_n"), col("sig_r"))
-          .cast("double") / index.numHashes).as("est_jaccard"))
+          .cast("double") / index.numHashes).as("est_jaccard")), pairsPlan)
   }
 
   /** SimHash over precomputed feature-hash values: `bits`-bit signature

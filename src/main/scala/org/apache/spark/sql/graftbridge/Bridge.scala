@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for the `private[sql]` Column↔Expression bridge —
@@ -69,6 +69,16 @@ object Bridge {
     p +: (p.children ++ extra).flatMap(allExecutedNodes)
   }
 
+  /** The ids of the shuffles a frame's executed plan wrote: every
+    * shuffle exchange that [[allExecutedNodes]] reaches. Call it after the
+    * action that ran the frame (an eager checkpoint of it): before that,
+    * an adaptive root still holds its initial plan, whose exchanges have
+    * not run. */
+  def shuffleIdsOf(df: DataFrame): Set[Int] =
+    allExecutedNodes(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+      .queryExecution.executedPlan)
+      .collect { case s: ShuffleExchangeLike => s.shuffleId }.toSet
+
   /** Registered shuffle ids (the map-output tracker's live set). */
   def shuffleIds(sc: org.apache.spark.SparkContext): Set[Int] =
     org.apache.spark.SparkEnv.get.mapOutputTracker
@@ -83,10 +93,11 @@ object Bridge {
     * disk for the cache's whole lifetime). Safe in the lineage sense: a
     * later recompute (cache-block loss) hits `FetchFailed` and Spark
     * resubmits the parent map stages from the surviving lineage — the
-    * cost is re-execution, never wrong data. Callers own the
-    * concurrency contract (don't reclaim ids a concurrently-running
-    * query still reads — snapshot-diff around your own materialization
-    * to target only your shuffles). */
+    * cost is re-execution, never wrong data. Pass only shuffles your own
+    * plans wrote ([[shuffleIdsOf]]): a diff of [[shuffleIds]] around a
+    * materialization also takes the shuffles a concurrent query of the
+    * same context registered meanwhile, and that query then fails to
+    * fetch them. */
   def cleanupShuffles(sc: org.apache.spark.SparkContext,
       ids: Set[Int]): Unit =
     sc.cleaner.foreach(cl => ids.foreach(cl.doCleanupShuffle(_, blocking = true)))

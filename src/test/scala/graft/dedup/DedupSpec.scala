@@ -2,6 +2,8 @@ package graft.dedup
 
 import graft.SparkSpec
 import graft.text.TextFunctions
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.functions._
 
 /** The deterministic (cross-engine) minhash/simhash path: polynomial
@@ -174,7 +176,7 @@ class DedupSpec extends SparkSpec {
     assert(rep.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((301L, 9L)))
   }
 
-  test("minhashCandidates: lazy pairs ≡ a checkpointed copy; sig cache released") {
+  test("minhashCandidates: lazy pairs ≡ the index screen's pairs; sig cache released") {
     import spark.implicits._
     val docs = ((1L to 40L).map(i => (i, s"unique text number $i about topic ${i % 7}")) ++
       Seq((101L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -186,13 +188,20 @@ class DedupSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(t => (t._1, t._2)).toSeq
     val lazyRows = rows(pairs)
-    assert(lazyRows == rows(pairs.localCheckpoint(true)), lazyRows.mkString(";"))
-    assert(lazyRows.exists(t => t._1 == 101L && t._2 == 102L), lazyRows.mkString(";"))
     // the signature frame is a checkpoint the ContextCleaner owns: the
     // call pins no cache of its own
     val pinned = sc.getPersistentRDDs
       .filter { case (id, rdd) => !before(id) && !rdd.isCheckpointed }.keySet
     assert(pinned.isEmpty, s"minhashCandidates left pinned RDDs $pinned")
+    assert(lazyRows.exists(t => t._1 == 101L && t._2 == 102L), lazyRows.mkString(";"))
+    // an independent construction: screening the corpus against an index
+    // of itself reports every pair sharing a band bucket, self pairs and
+    // both orientations included
+    val idx = Dedup.minhashIndex(docs, "doc_id", "text",
+      numHashes = 16, bands = 4)
+    val viaIndex = rows(Dedup.minhashSearch(idx, docs, "doc_id", "text")
+      .filter(col("id_new") < col("id_ref")))
+    assert(lazyRows == viaIndex, s"lazy=$lazyRows index=$viaIndex")
   }
 
   test("decontaminate: broadcast eval prefilter ≡ symmetric shuffle path") {
@@ -716,8 +725,8 @@ class DedupSpec extends SparkSpec {
   test("minhashSearch chunked barrier mode: slice shuffles reclaimed, result identical") {
     import spark.implicits._
     import org.apache.spark.sql.graftbridge.Bridge
-    // the sliced screen reclaims each slice's own shuffles via the
-    // map-output-tracker snapshot-diff. Forced here at gate scale by a
+    // the sliced screen reclaims the shuffles each slice's own plans
+    // wrote. Forced here at gate scale by a
     // 7-doc bound (30 docs → 5 slices); the invariant is total — the
     // whole sliced screen leaves ZERO registered shuffles behind (the
     // flood-cap aggregate and every slice's band/rescore shuffles are
@@ -745,6 +754,58 @@ class DedupSpec extends SparkSpec {
     assert(collectSorted(chunkedDf) == oneShot,
       "barrier-mode chunked screen diverged from the one-shot screen")
     idx.release()
+  }
+
+  test("minhashSearch sliced screen leaves a concurrent query's shuffle registered") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.Bridge
+    // another query of the same context registers a shuffle WHILE the
+    // sliced screen runs. The index's banded side holds its first reader
+    // (a task of slice 0's band join) until that shuffle is registered,
+    // so it lands inside the screen on every run; the screen must delete
+    // its own shuffles only.
+    val corpus = (0L until 30L).map(i =>
+      (i, s"cluster ${i % 6} shared long body sentence variant ${i % 3} " +
+        "with persistent trailing words here")).toDF("doc_id", "text")
+    val batch = corpus.select((col("doc_id") + 500L).as("doc_id"),
+      concat(col("text"), lit(" tail")).as("text"))
+    val idx = Dedup.minhashIndex(corpus, "doc_id", "text",
+      numHashes = 64, bands = 16)
+    val sc = spark.sparkContext
+    def collectSorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sorted.toSeq
+    val oneShot = collectSorted(
+      Dedup.minhashSearch(idx, batch, "doc_id", "text"))
+    val held = idx.copy(banded = idx.banded.filter(
+      udf((_: Long) => DedupSpec.HoldFirstReader.pass()).asNondeterministic()(
+        col("id"))))
+    val other = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.rdd.RDD[(Int, Int)]]()
+    val otherQuery = new Thread(() => {
+      if (DedupSpec.HoldFirstReader.started.await(60, TimeUnit.SECONDS)) {
+        val rdd = sc.parallelize(1 to 20, 2).map(i => (i % 3, i))
+          .reduceByKey(_ + _)
+        rdd.count()
+        other.set(rdd)
+      }
+      DedupSpec.HoldFirstReader.registered.countDown()
+    })
+    otherQuery.start()
+    val sliced = try slicedAt(7L)(
+      Dedup.minhashSearch(held, batch, "doc_id", "text"))
+    finally {
+      DedupSpec.HoldFirstReader.registered.countDown()
+      otherQuery.join(60000L)
+    }
+    assert(other.get != null, "the other query never ran inside the screen")
+    val otherId = other.get.dependencies.head
+      .asInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]].shuffleId
+    assert(Bridge.shuffleIds(sc).contains(otherId),
+      s"the sliced screen deleted shuffle $otherId of another query")
+    assert(other.get.collect().toMap == (1 to 20).groupBy(_ % 3)
+      .map { case (k, v) => k -> v.sum })
+    assert(collectSorted(sliced) == oneShot)
   }
 
   test("q134 screens in one pass on the gate's sf0.01 tables: no more jobs than q116") {
@@ -1094,5 +1155,23 @@ class DedupSpec extends SparkSpec {
         assert(tiny == roomy, s"scratch=$scratch")
       }
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+}
+
+object DedupSpec {
+  /** A filter that holds the first row it sees until [[registered]]
+    * opens, and lets every later row through at once, so one task waits
+    * and the rest of the `local[4]` slots stay free. */
+  object HoldFirstReader {
+    val started = new CountDownLatch(1)
+    val registered = new CountDownLatch(1)
+    private val first = new AtomicBoolean(true)
+    def pass(): Boolean = {
+      if (first.getAndSet(false)) {
+        started.countDown()
+        registered.await(60, TimeUnit.SECONDS)
+      }
+      true
+    }
   }
 }
