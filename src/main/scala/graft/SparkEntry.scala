@@ -2296,7 +2296,7 @@ object SparkEntry {
     }, oracleSql = periodogramByKeySql),
     GateQuery("q81_periodogram_by_key_fft", (s, dir) => {
       // the LONG-series spectral scale path under the hash gate: per-key
-      // gather (sort_array collect_list) + executor-side mixed-radix real
+      // sorted-stream gather + executor-side mixed-radix real
       // FFT — O(m log m) per series vs the explode-DFT's O(m²/2) — must
       // reproduce q48's spectrum exactly (same oracle SQL: the DuckDB DFT
       // replay checks the FFT cross-engine AND cross-algorithm); same
@@ -2415,7 +2415,7 @@ object SparkEntry {
       // reproduce the declarative window semantics exactly
       val t = ev(s, dir)
       RangeWindow.slidingWindow(t, "value_cents",
-          Seq("sum", "min", "max", "defined"), width = 7, numPartitions = 32)
+          Seq("sum", "min", "max", "defined"), width = 7)
         .select(col("event_id"),
           round(col("value_cents_sum") / 100.0, 6).as("v_sum"),
           (col("value_cents_min") / 100.0).as("v_min"),
@@ -2864,7 +2864,7 @@ object SparkEntry {
     GateQuery("q52_arma_forecast_by_key", (s, dir) => {
       // the millions-of-models fan-out under the HASH gate: one
       // fixed-parameter ARMA(1,1) per user, fitted and forecast entirely
-      // on the executors (collect_list gather + narrow flatMap); the
+      // on the executors (sorted-stream gather + per-series kernel); the
       // oracle runs q43's scalar Kalman/forecast/CI recursion with every
       // user stepped simultaneously in one recursive CTE
       val t = ev(s, dir).withSeriesKeys("user_id")
@@ -3524,12 +3524,14 @@ object SparkEntry {
         |  ELSE 'test' END AS split
         |FROM v WHERE keep""".stripMargin),
     GateQuery("q116_minhash_index_search", minhashIndexScreen, minhashAcrossSql),
-    // q116's build, batch and screen, under the name it had when it forced
-    // the screen into ~5 id-hash slices. The screen now slices only past
-    // `Dedup.ScreenScratchMaxBytes` of estimated scratch (131,072 batch
-    // docs), so at every gate SF (500 docs at sf0.01, 5,000 at sf0.1) it
-    // screens in one pass; DedupSpec pins the sliced path ≡ the one pass.
-    GateQuery("q134_minhash_index_search_chunked", minhashIndexScreen,
+    // q116's build, batch and screen through the SLICED screen: a 2 MiB
+    // scratch bound (256 batch docs at `Dedup.ScreenScratchBytesPerDoc`)
+    // carves the batch into 2 id-hash slices at sf0.001 and sf0.01 (500
+    // docs) and 20 at sf0.1 (5,000), so the sliced path answers to
+    // q116's oracle at every gate SF.
+    GateQuery("q134_minhash_index_search_chunked", (s, dir) =>
+      Dedup.screenBounds.withValue(Dedup.ScreenBounds(scratchBytes = 2L << 20))(
+        minhashIndexScreen(s, dir)),
       minhashAcrossSql),
     GateQuery("q117_split_by_cluster", (s, dir) => {
       // leakage-safe train/val/test: the split key is the near-dup

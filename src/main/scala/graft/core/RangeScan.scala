@@ -10,9 +10,8 @@ import scala.util.DynamicVariable
   * over a globally ordered series. A [[TimeseriesFrame]] is one table in
   * global time order; a global `Window.orderBy` honours that order with a
   * single-partition sort. Every single-series scale operator instead
-  * range-sorts in parallel ([[sorted]], or a caller's own
-  * `repartitionByRange` or `orderBy` when it picks the partition count or
-  * wants the range path at every size) and restores the cross-partition
+  * range-sorts in parallel ([[sorted]], or a caller's own `orderBy` when
+  * it wants the range path at every size) and restores the cross-partition
   * context in three steps:
   *
   *  1. [[summaries]] — ONE job returning one summary per partition, in
@@ -63,7 +62,7 @@ object RangeScan {
 
   /** The bound [[sorted]] applies; specs lower it to 0 to run the range
     * path on their small fixtures. */
-  private[core] val smallInputBound = new DynamicVariable[Long](SmallInputBytes)
+  private[graft] val smallInputBound = new DynamicVariable[Long](SmallInputBytes)
 
   /** `df` in `order` for a scan whose partition count the caller leaves
     * to the session: below [[SmallInputBytes]] (reading the estimate runs

@@ -66,17 +66,16 @@ object TimeDelta {
     * cache-release handle. Exposed (beyond [[infer]]'s own use) so specs
     * can assert the GLOBAL path plans no single-partition WindowExec: the
     * keyless lag comes from [[graft.ops.RangeWindow.lagColumnsManaged]]
-    * (range repartition + boundary carry), never `Window.orderBy` over the
+    * (`RangeScan.sorted` + boundary carry), never `Window.orderBy` over the
     * whole table. The keyed path keeps a keyed window — partitioned by the
     * series keys, it parallelizes on its own. */
   def deltaFrame(df: DataFrame, timeCol: String, seriesKeys: Seq[String])
       : (DataFrame, () => Unit) = {
     val tt = col(timeCol).cast("double")
     if (seriesKeys.isEmpty) {
-      val np = math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
       val base = df.select(tt.as("__t")).filter(col("__t").isNotNull)
       val (lagged, release) = graft.ops.RangeWindow.lagColumnsManaged(
-        base, Seq(col("__t")), Seq("__t"), 1, np)
+        base, Seq(col("__t")), Seq("__t"), 1)
       (lagged.select((col("__t") - col("__l1___t")).as("__d")), release)
     } else {
       val w = Window.partitionBy(seriesKeys.map(col): _*).orderBy(col(timeCol))

@@ -521,10 +521,11 @@ object Dedup {
     * with one care: the batch-side flood cap counts bucket members over
     * the WHOLE batch, once, and every slice anti-joins that list — a
     * flood split across slices would otherwise duck under a per-slice
-    * cap (spec-pinned, flood included). The sliced side is checked for
-    * its rows and its shuffles on spec fixtures only: no gate scale
-    * factor or benchmark workload reaches it, so what slicing costs
-    * against one pass on a large batch is unmeasured.
+    * cap (spec-pinned, flood included). The sliced side's rows are
+    * gate-checked by q134, which lowers the bound through [[screenBounds]]
+    * so its small batch slices; no benchmark workload has a batch past
+    * the real bound, so what slicing costs against one pass on a large
+    * batch is unmeasured.
     *
     * The streaming twin
     * ([[graft.streaming.StreamingOps.streamingMinhashIndexScreen]]) has
@@ -593,12 +594,11 @@ object Dedup {
 
   /** The estimated scratch under which [[minhashSearch]] screens a batch
     * in one pass: 1 GiB, 131,072 batch docs at [[ScreenScratchBytesPerDoc]].
-    * No gate scale factor comes near it: q116's and q134's batch is 500
-    * docs at sf0.01 and 5,000 at sf0.1. Neither the sliced side past it
-    * nor where slicing starts to pay is verified on any workload: specs
-    * check the sliced rows and shuffles on small fixtures through
-    * [[screenBounds]], and no benchmark workload has a batch past the
-    * bound. */
+    * No gate scale factor comes near it: q116's batch is 500 docs at
+    * sf0.01 and 5,000 at sf0.1 (q134 screens the same batch under a
+    * lowered bound, through [[screenBounds]], to gate the sliced rows).
+    * Where slicing starts to pay is verified on no workload: no benchmark
+    * workload has a batch past the bound. */
   final val ScreenScratchMaxBytes: Long = 1L << 30
 
   /** The largest candidate-bound side a screen broadcasts, 64 MiB: the

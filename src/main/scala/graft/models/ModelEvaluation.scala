@@ -3,9 +3,7 @@ package graft.models
 import graft.core.TimeseriesFrame
 import graft.ops.Interpolate
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -121,33 +119,16 @@ object ModelEvaluation {
     * skipped (drift needs a ≥2-point train fold). Gate q86 replays the
     * whole pipeline per user in SQL. */
   def evaluateNaiveDriftByKey(tsf: TimeseriesFrame, xCol: String,
-      nFolds: Int = 3, steps: Int = 3): DataFrame = {
-    val spark = tsf.df.sparkSession
-    val g = graft.core.SeriesGather.gather(tsf, Seq(xCol),
-      "evaluateNaiveDriftByKey", dropNulls = true)
-    val outSchema = StructType(g.keySchema.fields ++ Seq(
-      StructField("model", StringType),
-      StructField("rmse", DoubleType), StructField("mae", DoubleType),
-      StructField("mape", DoubleType), StructField("pocid", DoubleType),
-      StructField("r2", DoubleType)))
-    val layout = g.layout
-    // heavyPerSeries = false (r16, VERDICT r15 task 4 re-adjudication):
-    // naive/drift pooling is O(folds·steps) = O(1) per series plus one
-    // linear pass — per-series CPU is AT MOST proportional to the
-    // gathered bytes, the exact class SeriesGather's scaladoc assigns to
-    // AQE's byte-based sizing. The rebalance guard exists for
-    // disproportionate-CPU kernels (iterative refits, triangulations);
-    // here it was a pure extra shuffle of the gathered rows (measured
-    // r16 A/B at sf0.1: 37 → 5 tasks, 5 → 4 stages, shuffle 4.2 → 2.0
-    // MB, exec 5.5 → 0.7 s summed; wall flat at gate scale — the win is
-    // the removed exchange). The ARIMA/VAR eval shells keep the guard.
-    val outRdd = graft.core.SeriesGather.rows(g, heavyPerSeries = false)
-      .flatMap { row =>
-      val y = graft.core.SeriesGather.values(row, layout)
+      nFolds: Int = 3, steps: Int = 3): DataFrame =
+    graft.core.SeriesGather.byKey(tsf, Seq(xCol), "evaluateNaiveDriftByKey",
+      Seq(StructField("model", StringType),
+        StructField("rmse", DoubleType), StructField("mae", DoubleType),
+        StructField("mape", DoubleType), StructField("pocid", DoubleType),
+        StructField("r2", DoubleType)), dropNulls = true) { cols =>
+      val y = cols(0)
       val m = y.length
       if (m - nFolds * steps < 2) Iterator.empty
       else {
-        val keyVals = graft.core.SeriesGather.keyVals(row, layout)
         def pool(pred: (Int, Int) => Double): (Array[Double], Array[Double]) = {
           val t = new Array[Double](nFolds * steps)
           val p = new Array[Double](nFolds * steps)
@@ -164,14 +145,12 @@ object ModelEvaluation {
             y(te - 1) + (h + 1) * (y(te - 1) - y(0)) / (te - 1)))
         specs.iterator.map { case (name, pred) =>
           val (t, p) = pool(pred)
-          InternalRow.fromSeq(keyVals ++ Seq[Any](UTF8String.fromString(name),
+          Seq[Any](UTF8String.fromString(name),
             Metrics.rmse(t, p), Metrics.mae(t, p), Metrics.mape(t, p),
-            Metrics.pocid(t, p), Metrics.r2(t, p)))
+            Metrics.pocid(t, p), Metrics.r2(t, p))
         }
       }
     }
-    Bridge.fromCatalystRows(spark, outRdd, outSchema)
-  }
 
   private def fitFull(spec: Spec, series: Array[Array[Double]]): (Double, Double) =
     try {

@@ -2,63 +2,47 @@ package graft.models
 
 import graft.core.{SeriesGather, TimeseriesFrame}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Per-series model fitting at cluster scale: one forecast model per
   * `seriesKeys` group, fitted on the EXECUTORS (the collected-series
   * driver path of [[ModelEvaluation]] is the reference's single-series
   * semantics; this is the horizontal generalization — at 100 TB each
-  * series is small even when the table is not, so `collect_list` per key
+  * series is small even when the table is not, so one gather per key
   * followed by an executor-side fit is the standard "millions of models"
   * recipe).
   *
-  * The plan: one hash aggregate gathers each series in time order
-  * (`sort_array` of (time, tiebreak, value) structs — map-side partials,
-  * one shuffle of the grouped values), then a narrow `flatMap` fits the
-  * model and emits `steps` forecast rows per key. No driver involvement
-  * per series.
+  * The plan: the [[SeriesGather]] sorted stream (one exchange on the
+  * keys at a pinned partition count, a sort by key and time) hands each
+  * series to a kernel that fits the model and emits `steps` forecast
+  * rows per key. No driver involvement per series.
   */
 object PerSeries {
 
-  /** Shared gather/fan-out shell: collect each series in time order into
-    * one grouped row, run `predictOf` on the executors, emit `steps`
-    * forecast rows per key. */
+  /** Shared gather/fan-out shell: read each series in time order, run
+    * `predictOf` on the executors, emit `steps` forecast rows per key. A
+    * series with a null value is skipped like a failed fit. */
   private def forecastByKey(
       tsf: TimeseriesFrame,
       valueCol: String,
       steps: Int,
-      minRows: Int,
-      heavyPerSeries: Boolean = true)(
+      minRows: Int)(
       predictOf: Array[Double] => (Array[Double], Array[Double], Array[Double]))
-      : DataFrame = {
-    val spark = tsf.df.sparkSession
-    val g = SeriesGather.gather(tsf, Seq(valueCol),
-      "per-series forecasting")
-    val outSchema = StructType(g.keySchema.fields ++ Seq(
+      : DataFrame =
+    SeriesGather.byKey(tsf, Seq(valueCol), "per-series forecasting", Seq(
       StructField("step", LongType, nullable = false),
       StructField("forecast", DoubleType),
       StructField("ci_low", DoubleType),
-      StructField("ci_high", DoubleType)))
-    val layout = g.layout
-    val outRdd = SeriesGather.rows(g, heavyPerSeries).flatMap { row =>
-      // a null value fails the read: that series is skipped like a failed fit
-      try {
-        val series = SeriesGather.values(row, layout)
-        if (series.length < minRows) Iterator.empty
-        else {
-          val keyVals = SeriesGather.keyVals(row, layout)
-          val (fo, lo, hi) = predictOf(series)
-          (0 until steps).iterator.map(h =>
-            // Seq[Any]: a plain Seq(...) would numeric-widen the Long step
-            // to Double via LUB inference and break the row layout
-            InternalRow.fromSeq(keyVals ++ Seq[Any](h + 1L, fo(h), lo(h), hi(h))))
-        }
+      StructField("ci_high", DoubleType))) { cols =>
+      val series = cols(0)
+      if (series.length < minRows) Iterator.empty
+      else try {
+        val (fo, lo, hi) = predictOf(series)
+        // Seq[Any]: a plain Seq(...) would numeric-widen the Long step
+        // to Double via LUB inference and break the row layout
+        (0 until steps).iterator.map(h => Seq[Any](h + 1L, fo(h), lo(h), hi(h)))
       } catch { case _: Exception => Iterator.empty }
     }
-    Bridge.fromCatalystRows(spark, outRdd, outSchema)
-  }
 
   /** Fit ARIMA(p,d,q) per series and forecast `steps` ahead.
     * Output: (seriesKeys..., step, forecast, ci_low, ci_high). Series
@@ -87,12 +71,7 @@ object PerSeries {
       steps: Int,
       alpha: Double = 0.05,
       minRows: Int = 8): DataFrame =
-    // heavyPerSeries=false: one linear Kalman pass per series — CPU
-    // proportional to the gathered bytes, the class SeriesGather.rows
-    // documents as already balanced by AQE's byte sizing; the guard
-    // stage would be pure overhead here (unlike the iterative-MLE fit
-    // above, which keeps it).
-    forecastByKey(tsf, valueCol, steps, minRows, heavyPerSeries = false) { y =>
+    forecastByKey(tsf, valueCol, steps, minRows) { y =>
       val n = y.length
       val exog = Array.tabulate(n)(i => Array(i.toDouble))
       new Arimax(1, 0, 0)
@@ -120,37 +99,25 @@ object PerSeries {
       minRows: Int = 8): DataFrame = {
     require(valueCols.size == a1.rows && valueCols.size == trendConst.length,
       "valueCols, A1 and trendConst dimensions must agree")
-    val spark = tsf.df.sparkSession
-    val g = SeriesGather.gather(tsf, valueCols,
-      "varForecastFixedByKey")
-    val outSchema = StructType(g.keySchema.fields ++
-      (StructField("step", LongType, nullable = false) +:
+    val nv = valueCols.size
+    SeriesGather.byKey(tsf, valueCols, "varForecastFixedByKey",
+      StructField("step", LongType, nullable = false) +:
         valueCols.flatMap(c => Seq(
           StructField(s"${c}_forecast", DoubleType),
           StructField(s"${c}_lo", DoubleType),
-          StructField(s"${c}_hi", DoubleType)))))
-    val layout = g.layout
-    val nv = valueCols.size
-    // heavyPerSeries=false: fixed-parameter VAR predict is one linear
-    // pass per series (bytes-proportional — see arimaxTimeRegForecast
-    // FixedByKey's note).
-    val outRdd = SeriesGather.rows(g, heavyPerSeries = false).flatMap { row =>
-      try {
-        val series = SeriesGather.valueRows(row, layout)
-        if (series.length < minRows) Iterator.empty
-        else {
-          val keyVals = SeriesGather.keyVals(row, layout)
-          val fit = new Var().fitFixed(series, Array(a1), trendConst)
-          val (fo, lo, hi) = fit.predict(steps, alpha)
-          (0 until steps).iterator.map { h =>
-            val vals = (0 until nv).flatMap(j =>
-              Seq[Any](fo(h)(j), lo(h)(j), hi(h)(j)))
-            InternalRow.fromSeq(keyVals ++ (Seq[Any]((h + 1).toLong) ++ vals))
-          }
+          StructField(s"${c}_hi", DoubleType)))) { cols =>
+      val n = cols(0).length
+      if (n < minRows) Iterator.empty
+      else try {
+        val series = Array.tabulate(n, nv)((i, j) => cols(j)(i))
+        val fit = new Var().fitFixed(series, Array(a1), trendConst)
+        val (fo, lo, hi) = fit.predict(steps, alpha)
+        (0 until steps).iterator.map { h =>
+          (h + 1).toLong +: (0 until nv).flatMap(j =>
+            Seq[Any](fo(h)(j), lo(h)(j), hi(h)(j)))
         }
       } catch { case _: Exception => Iterator.empty }
     }
-    Bridge.fromCatalystRows(spark, outRdd, outSchema)
   }
 
   /** Per-series ARMA forecast at FIXED (φ, θ, μ) — the fan-out path at
@@ -166,9 +133,7 @@ object PerSeries {
       steps: Int,
       alpha: Double = 0.05,
       minRows: Int = 8): DataFrame =
-    // heavyPerSeries=false: fixed-parameter scalar Kalman — bytes-
-    // proportional (see arimaxTimeRegForecastFixedByKey's note).
-    forecastByKey(tsf, valueCol, steps, minRows, heavyPerSeries = false)(
+    forecastByKey(tsf, valueCol, steps, minRows)(
       series => new Arima(phi.length, 0, theta.length)
         .fitFixed(series, phi, theta, mu).predict(steps, alpha))
 }

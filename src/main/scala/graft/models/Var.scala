@@ -139,7 +139,7 @@ final class Var(
     * for bounded series ([[PerSeries]] fans it out across many series);
     * here the order is caller-fixed. Default 'c' trend only. */
   def fitDistributed(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
-      orderCol: String, lags: Int, numPartitions: Int = 32): Var = {
+      orderCol: String, lags: Int): Var = {
     import org.apache.spark.sql.functions._
     require(trend == "c", "fitDistributed supports the default 'c' trend")
     require(lags >= 1, "need at least one lag")
@@ -152,7 +152,7 @@ final class Var(
     // task, exactly the bottleneck this path exists to avoid
     val regNames = for (l <- 1 to lags; v <- cols) yield s"__l${l}_$v"
     val (laggedRaw, releaseLagCache) = graft.ops.RangeWindow.lagColumnsManaged(
-      base, Seq(col("__ord")), cols, lags, numPartitions)
+      base, Seq(col("__ord")), cols, lags)
     val lagged = laggedRaw.na.drop(cols ++ regNames)
 
     val fits = cols.map(y => DistributedOls.fit(lagged, y, regNames))

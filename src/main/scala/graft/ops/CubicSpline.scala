@@ -88,9 +88,9 @@ object CubicSpline {
   /** Per-series executor fan-out of [[interpolate]] for grouped corpora
     * (VERDICT r6 task 7; reference anchor `functions.py:319-345` — the
     * reference is single-table, so this is the scale extension): each
-    * series' full rows are gathered into ONE grouped row
-    * (`sort_array(collect_list)` — map-side partials, ONE shuffle, one
-    * input scan), the not-a-knot solve AND the evaluation run inside the
+    * series' full rows arrive in time order from the
+    * [[graft.core.SeriesGather]] sorted stream (ONE exchange, one input
+    * scan), the not-a-knot solve AND the evaluation run inside the
     * executor task, and the filled rows are emitted directly
     * ([[graft.core.SeriesGather.fillSeries]] — no join-back, no second
     * scan, no driver involvement per series). Series with fewer than 4

@@ -144,10 +144,9 @@ object Interpolate {
     * many-series scale path: the driver variants above collect EVERY
     * series' cells and triangulate serially (the reference's
     * single-table semantics, measured ~5s at 5k cells — a wall at 10k
-    * series), while this one gathers each series' full rows into one
-    * grouped row (`sort_array(collect_list(...))` — map-side partials,
-    * ONE shuffle, one input scan) and triangulates/fills on the
-    * executors, emitting the filled rows directly
+    * series), while this one streams each series' full rows in time
+    * order through the [[graft.core.SeriesGather]] sorted stream (ONE
+    * exchange, one input scan) and triangulates/fills on the executors, emitting the filled rows directly
     * ([[graft.core.SeriesGather.fillSeries]] — no join-back, no second
     * scan). Per-series matrices must fit an executor task
     * (`maxCellsPerSeries`), the same bound every keyed gather in this

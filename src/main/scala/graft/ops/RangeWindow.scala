@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
   * A global `Window.orderBy(t)` plans a single-partition sort: correct at
   * any size but sequential — the 10⁷-row wall. This operator instead:
   *
-  *  1. `repartitionByRange(t, tieBreak)` — each of P partitions holds a
-  *     contiguous time slice, sorted within (`sortWithinPartitions`);
+  *  1. [[graft.core.RangeScan.sorted]] by (t, tieBreak) — each partition
+  *     holds a contiguous time slice, in order (one partition sorted in
+  *     place below `RangeScan.SmallInputBytes`, a range sort above it);
   *  2. collects each partition's LAST `width−1` rows (the boundary carry —
   *     P·(w−1) rows total, tiny by construction) in one narrow job;
   *  3. computes the trailing-window aggregates with the previous
@@ -197,7 +198,7 @@ object RangeWindow {
     * `__l{l}_{col}` for every (l ≤ lags, col), equal to
     * `lag(col, l).over(Window.orderBy(orderCols))` but without the
     * single-partition WindowExec a global window plans. Same recipe as
-    * [[slidingWindow]]: range repartition, one narrow job for the
+    * [[slidingWindow]]: `RangeScan.sorted`, one narrow job for the
     * per-partition tail carry (P·lags·|cols| values), then an
     * embarrassingly parallel mapPartitions with a ring of the previous
     * `lags` row-vectors. Rows with fewer than `l` global predecessors get
@@ -219,12 +220,9 @@ object RangeWindow {
       df: DataFrame,
       orderCols: Seq[org.apache.spark.sql.Column],
       valueCols: Seq[String],
-      lags: Int,
-      numPartitions: Int): (DataFrame, () => Unit) = {
+      lags: Int): (DataFrame, () => Unit) = {
     require(lags >= 1, s"lags must be positive: $lags")
-    val ranged = df
-      .repartitionByRange(numPartitions, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
+    val ranged = RangeScan.sorted(df, orderCols: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spark = df.sparkSession
     val schema = ranged.schema
@@ -269,8 +267,7 @@ object RangeWindow {
       tsf: TimeseriesFrame,
       valueCol: String,
       aggs: Seq[String],
-      width: Int,
-      numPartitions: Int): DataFrame = {
+      width: Int): DataFrame = {
     require(aggs.forall(SupportedAggs), s"supported: $SupportedAggs")
     require(width >= 1, s"width must be positive: $width")
     val df = tsf.df
@@ -287,9 +284,7 @@ object RangeWindow {
     // operator's callers (tieBreak is part of orderCols). Reverted per
     // the measured-A/B discipline; re-visit only with cluster evidence
     // that a re-sort of a multi-TB exchange dominates the block I/O.
-    val ranged = df
-      .repartitionByRange(numPartitions, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
+    val ranged = RangeScan.sorted(df, orderCols: _*)
 
     val schema = ranged.schema
     val valueIdx = schema.fieldIndex(valueCol)

@@ -2,7 +2,6 @@ package graft.spectral
 
 import graft.core.{RangeScan, TimeseriesFrame}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -267,8 +266,8 @@ object Correlation {
     * for bounded correlogram lag counts, quadratic at the reference's
     * DEFAULT `nlags = 0.9·len(x)` (`functions.py:215-216` — which also
     * passes `fft=True` to statsmodels, so FFT is the reference's own
-    * semantics, not an approximation). This form gathers each series in
-    * time order (`sort_array collect_list`, the
+    * semantics, not an approximation). This form reads each series in
+    * time order from the [[graft.core.SeriesGather]] sorted stream (the
     * [[graft.models.PerSeries]] recipe) and computes every lag's product
     * sum at once via [[acovSumsFft]]. Estimator identical to
     * [[acfByKey]]: per-series demean, denominator s0 = Σxc² (computed
@@ -318,25 +317,18 @@ object Correlation {
       (acf, _) => pacfVector(acf).map(v => Seq[Any](v)))
 
   /** Shared gather → per-series (FFT) ACF shell for the grouped
-    * correlation family: sorts each series by (timeCol, tieBreak) into one
-    * grouped row (map-side-combined shuffle), demeans, computes the
-    * lag-product sums via [[acovSumsFft]], and hands the normalized ACF
+    * correlation family: reads each series in (timeCol, tieBreak) order
+    * from the [[graft.core.SeriesGather]] sorted stream, demeans, computes
+    * the lag-product sums via [[acovSumsFft]], and hands the normalized ACF
     * vector (index 0 = 1.0) to `transform` for the final per-lag values.
     * Constant and sub-2-row series are dropped, as in [[acfByKey]]. */
   private def gatherAcf(tsf: TimeseriesFrame, xCol: String, opName: String,
       outFields: Seq[StructField], lagDepth: Int => Int)(
-      transform: (Array[Double], Int) => Array[Seq[Any]]): DataFrame = {
-    val spark = tsf.df.sparkSession
-    val g = graft.core.SeriesGather.gather(tsf, Seq(xCol), opName,
-      dropNulls = true)
-    val outSchema = StructType(g.keySchema.fields ++
-      (StructField("lag", LongType, nullable = false) +: outFields))
-    val layout = g.layout
-    // heavyPerSeries = false: ACF/PACF via FFT is CPU ∝ gathered bytes —
-    // AQE's byte sizing already balances it; see SeriesGather.rows
-    val outRdd = graft.core.SeriesGather.rows(g, heavyPerSeries = false)
-      .flatMap { row =>
-      val x = graft.core.SeriesGather.values(row, layout)
+      transform: (Array[Double], Int) => Array[Seq[Any]]): DataFrame =
+    graft.core.SeriesGather.byKey(tsf, Seq(xCol), opName,
+      StructField("lag", LongType, nullable = false) +: outFields,
+      dropNulls = true) { cols =>
+      val x = cols(0)
       val m = x.length
       if (m < 2) Iterator.empty
       else {
@@ -349,14 +341,10 @@ object Correlation {
           val r = acovSumsFft(xc, nl)
           val acf = Array.tabulate(nl + 1)(k => if (k == 0) 1.0 else r(k) / s0)
           val out = transform(acf, m)
-          val keyVals = graft.core.SeriesGather.keyVals(row, layout)
-          (1 to nl).iterator.map(k =>
-            InternalRow.fromSeq(keyVals ++ (k.toLong +: out(k))))
+          (1 to nl).iterator.map(k => k.toLong +: out(k))
         }
       }
     }
-    Bridge.fromCatalystRows(spark, outRdd, outSchema)
-  }
 
   /** Local maxima of |values| with `order`-neighborhood strict dominance —
     * scipy `argrelextrema(np.greater, order)` with clipped borders

@@ -327,10 +327,11 @@ object Periodogram {
     * path. The explode-DFT form is shuffle-parallel in rows and
     * frequencies but inherently O(m²) work per series (m/2 grid points ×
     * m rows each); past a few thousand rows per series the asymptotic,
-    * not the parallelism, is the bill. Here each series is gathered in
-    * time order (`sort_array` of (time, tiebreak..., x) structs — one
-    * map-side-combined shuffle, the [[graft.models.PerSeries]] recipe: at
-    * 100 TB each series is small even when the table is not) and
+    * not the parallelism, is the bill. Here each series is read in time
+    * order from the [[graft.core.SeriesGather]] sorted stream (one
+    * exchange and a sort by (key, time, tiebreak..., x), the
+    * [[graft.models.PerSeries]] recipe: at 100 TB each series is small
+    * even when the table is not) and
     * transformed with a mixed-radix real FFT (JTransforms, shipped with
     * Spark MLlib) in O(m log m), emitting the identical
     * (keys..., period, power) surface: same per-series grid
@@ -339,29 +340,19 @@ object Periodogram {
     * it against the DuckDB DFT oracle — cross-engine AND cross-algorithm. */
   def spectrumByKeyFft(tsf: TimeseriesFrame, xCol: String,
       detrend: String = "diff"): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val spark = tsf.df.sparkSession
+    import org.apache.spark.sql.types.{DoubleType, StructField}
     // null x rows are dropped BEFORE the gather (a gap series belongs to
     // the interpolation family first; the explode form's null-skipping
     // sums index across gaps, which is not a spectrum either)
-    val g = graft.core.SeriesGather.gather(tsf, Seq(xCol), "spectrumByKeyFft",
-      dropNulls = true)
-    val outSchema = StructType(g.keySchema.fields ++ Seq(
-      StructField("period", DoubleType), StructField("power", DoubleType)))
-    val layout = g.layout
-    // heavyPerSeries = false: the FFT spectrum is a streaming O(n log n)
-    // pass, CPU ∝ gathered bytes — AQE's byte sizing is the right
-    // balancer and the guard stage would be pure gate-scale overhead
-    val outRdd = graft.core.SeriesGather.rows(g, heavyPerSeries = false)
-      .flatMap { row =>
-      val raw = graft.core.SeriesGather.values(row, layout)
-      val xd = detrendLocal(raw, detrend)
+    graft.core.SeriesGather.byKey(tsf, Seq(xCol), "spectrumByKeyFft",
+      Seq(StructField("period", DoubleType), StructField("power", DoubleType)),
+      dropNulls = true) { cols =>
+      val xd = detrendLocal(cols(0), detrend)
       val m = xd.length
       val lo = math.max(m / 1000, 1)
       val hi = m / 2
       if (hi < lo) Iterator.empty
       else {
-        val keyVals = graft.core.SeriesGather.keyVals(row, layout)
         // realForwardFull: full complex spectrum in-place over 2m slots —
         // Re[k] = buf(2k), Im[k] = buf(2k+1); power uses Re²+Im², so
         // JTransforms' e^{-iθ} sign convention is immaterial
@@ -370,12 +361,10 @@ object Periodogram {
         (lo to hi).iterator.map { k =>
           val re = buf(2 * k); val im = buf(2 * k + 1)
           val dbl = if (m % 2 == 0 && k == hi) 1.0 else 2.0
-          InternalRow.fromSeq(keyVals ++ Seq[Any](m.toDouble / k,
-            (re * re + im * im) / m * dbl))
+          Seq[Any](m.toDouble / k, (re * re + im * im) / m * dbl)
         }
       }
     }
-    Bridge.fromCatalystRows(spark, outRdd, outSchema)
   }
 
   /** Single-series FFT spectrum — [[spectrumByKeyFft]] under a constant

@@ -21,19 +21,9 @@ class RangeScanSpec extends SparkSpec {
     * so `orderBy` and the keyless TimeDelta path range-sort into `p`. At
     * p >= 2 the small-input rule is off, so these small fixtures take the
     * range path and not `RangeScan.sorted`'s one-partition sort. */
-  private def atP[A](p: Int)(body: => A): A = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val old = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), p.toString)
-    spark.conf.set(keys(1), "false")
-    try RangeScan.smallInputBound.withValue(
-      if (p == 1) RangeScan.SmallInputBytes else 0L)(body)
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def atP[A](p: Int)(body: => A): A =
+    atShufflePartitions(p)(RangeScan.smallInputBound.withValue(
+      if (p == 1) RangeScan.SmallInputBytes else 0L)(body))
 
   /** (t, k, x): time `t` repeats three times and `k` orders each tie
     * AGAINST the generating index; `x` is cents-like (exact sums) with
@@ -66,7 +56,7 @@ class RangeScanSpec extends SparkSpec {
       val tsf = series(n, 5 + n)
       val twin = MovingTransform.slidingWindow(tsf, aggs.map("x" -> _), w,
         MovingTransform.KeepComplete)
-      val got = byKey(RangeWindow.slidingWindow(tsf, "x", aggs, w, p), aggs.map("x_" + _))
+      val got = atP(p)(byKey(RangeWindow.slidingWindow(tsf, "x", aggs, w), aggs.map("x_" + _)))
       val want = byKey(twin, aggs.map("x_" + _))
       assert(got.size == n && want.size == math.max(0, n - w + 1), s"n=$n P=$p w=$w")
       want.foreach { case (k, vs) =>
@@ -82,8 +72,8 @@ class RangeScanSpec extends SparkSpec {
       val tsf = series(n, 7 + n)
       val twin = (1 to lags).foldLeft(tsf.df) { (d, l) =>
         d.withColumn(s"g$l", lag(col("x"), l).over(tsf.window)) }
-      val (lagged, release) = RangeWindow.lagColumnsManaged(tsf.df, tsf.orderCols,
-        Seq("x"), lags, p)
+      val (lagged, release) = atP(p)(RangeWindow.lagColumnsManaged(tsf.df, tsf.orderCols,
+        Seq("x"), lags))
       try {
         val got = byKey(lagged, (1 to lags).map(l => s"__l${l}_x"))
         val want = byKey(twin, (1 to lags).map(l => s"g$l"))

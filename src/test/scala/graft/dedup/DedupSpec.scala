@@ -808,19 +808,29 @@ class DedupSpec extends SparkSpec {
     assert(collectSorted(sliced) == oneShot)
   }
 
-  test("q134 screens in one pass on the gate's sf0.01 tables: no more jobs than q116") {
-    // perfbench/gate_sf0.01 is the byte copy of the gate's sf0.01 tables;
-    // the table is read once first, so the schema catalog's inference job
-    // is not counted. q134's 500-doc batch is far under the screen's
-    // scratch bound, so it runs q116's one-pass screen, not slices.
+  /** q116's and q134's rows and build + action job counts on the gate's
+    * sf0.01 tables (perfbench/gate_sf0.01 is their byte copy); each table
+    * is read once first, so the schema catalog's inference job is not
+    * counted. */
+  private def gateRun(q: String): (Seq[String], Int) = {
     val gateDir = "perfbench/gate_sf0.01"
     graft.SparkEntry.tbl(spark, gateDir, "documents")
-    def run(q: String) = jobsLaunchedBy(
+    jobsLaunchedBy(
       graft.SparkEntry.queries(q)(spark, gateDir).collect().map(_.toString).sorted.toSeq)
-    val (q116, jobs116) = run("q116_minhash_index_search")
-    val (q134, jobs134) = run("q134_minhash_index_search_chunked")
-    assert(q134.nonEmpty && q134 == q116)
-    assert(jobs134 <= jobs116, s"q134 launched $jobs134 jobs, q116 $jobs116")
+  }
+
+  test("q134 screens the gate's sf0.01 batch in slices: its job count is pinned") {
+    // 500 batch docs against q134's 2 MiB bound: 2 slices, each a band
+    // join, a rescore and a checkpoint, plus the whole-batch flood cap
+    val (rows, jobs) = gateRun("q134_minhash_index_search_chunked")
+    assert(rows.nonEmpty)
+    assert(jobs == 25, s"q134 launched $jobs jobs")
+  }
+
+  test("q134's sliced screen returns q116's one-pass rows on the gate's sf0.01 tables") {
+    val (q116, _) = gateRun("q116_minhash_index_search")
+    val (q134, _) = gateRun("q134_minhash_index_search_chunked")
+    assert(q116.nonEmpty && q134 == q116)
   }
 
   test("MinhashIndex.append ≡ rebuild over the union, incl. cap crossing") {

@@ -1,12 +1,17 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.core.TimeseriesFrame
+import graft.core.{RangeScan, TimeseriesFrame}
 import org.apache.spark.sql.functions._
 
 /** Differential test: the range-partitioned sliding-window runner must
   * reproduce the single-partition global-Window plan exactly. */
 class RangeWindowSpec extends SparkSpec {
+
+  /** `p` shuffle partitions and no small-input rule, so these small
+    * fixtures take the range sort of `RangeScan.sorted` into `p`. */
+  private def atP[A](p: Int)(body: => A): A =
+    atShufflePartitions(p)(RangeScan.smallInputBound.withValue(0L)(body))
 
   test("range-partitioned sliding window == global window (with NaN gaps)") {
     val rnd = new scala.util.Random(11)
@@ -21,8 +26,8 @@ class RangeWindowSpec extends SparkSpec {
       .withColumn("g_min", min(col("x")).over(tsf.trailing(w)))
       .withColumn("g_max", max(col("x")).over(tsf.trailing(w)))
 
-    val ranged = RangeWindow.slidingWindow(tsf, "x",
-      Seq("mean", "sum", "min", "max"), w, numPartitions = 7)
+    val ranged = atP(7)(RangeWindow.slidingWindow(tsf, "x",
+      Seq("mean", "sum", "min", "max"), w))
 
     val joined = global.alias("g").join(ranged.alias("r"), "i")
     for ((g, r) <- Seq("g_mean" -> "x_mean", "g_sum" -> "x_sum",
@@ -36,7 +41,7 @@ class RangeWindowSpec extends SparkSpec {
   test("empty-ish partitions: correctness with more partitions than rows") {
     val xs = d(1, 2, 3, 4, 5)
     val tsf = TimeseriesFrame(seriesDF(xs), None, Seq("i"))
-    val out = RangeWindow.slidingWindow(tsf, "x", Seq("sum"), 3, numPartitions = 12)
+    val out = atP(12)(RangeWindow.slidingWindow(tsf, "x", Seq("sum"), 3))
     assertSeqAlmost(col1(out, "x_sum"), d(1, 3, 6, 9, 12))
   }
 
@@ -44,7 +49,7 @@ class RangeWindowSpec extends SparkSpec {
     val tsf = TimeseriesFrame(seriesDF(d(1, 2, 3)), None, Seq("i"))
     for (w <- Seq(0, -2)) {
       val e = intercept[IllegalArgumentException](
-        RangeWindow.slidingWindow(tsf, "x", Seq("sum"), w, numPartitions = 2))
+        atP(2)(RangeWindow.slidingWindow(tsf, "x", Seq("sum"), w)))
       assert(e.getMessage.contains(s"width must be positive: $w"))
     }
   }
@@ -66,7 +71,7 @@ class RangeWindowSpec extends SparkSpec {
       df.withColumn(s"g_$a",
         graft.agg.AggRegistry.windowed(a, col("x"), tsf.window, w).cast("double"))
     }
-    val ranged = RangeWindow.slidingWindow(tsf, "x", aggs, w, numPartitions = 9)
+    val ranged = atP(9)(RangeWindow.slidingWindow(tsf, "x", aggs, w))
     val joined = declarative.join(ranged.select(
       col("i") +: aggs.map(a => col(s"x_$a")): _*), "i")
     aggs.foreach { a =>
@@ -87,8 +92,8 @@ class RangeWindowSpec extends SparkSpec {
     val global = (for (l <- 1 to 3; c <- Seq("a", "b")) yield (l, c))
       .foldLeft(df) { case (d, (l, c)) =>
         d.withColumn(s"g_l${l}_$c", lag(col(c), l).over(w)) }
-    val (ranged, relRanged) = RangeWindow.lagColumnsManaged(df, Seq(col("t")),
-      Seq("a", "b"), lags = 3, numPartitions = 7)
+    val (ranged, relRanged) = atP(7)(RangeWindow.lagColumnsManaged(df, Seq(col("t")),
+      Seq("a", "b"), lags = 3))
     val joined = global.join(ranged.select(
       col("t") +: (for (l <- 1 to 3; c <- Seq("a", "b"))
         yield col(s"__l${l}_$c")): _*), "t").orderBy("t").collect()
@@ -101,9 +106,9 @@ class RangeWindowSpec extends SparkSpec {
       }
     }
     // more partitions than rows: the carry chain still lines up
-    val (lagged, relTiny) = RangeWindow.lagColumnsManaged(
+    val (lagged, relTiny) = atP(12)(RangeWindow.lagColumnsManaged(
       Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("t", "a"),
-      Seq(col("t")), Seq("a"), 2, 12)
+      Seq(col("t")), Seq("a"), 2))
     val out = lagged.orderBy("t").collect()
     relTiny()
     assert(out.map(r => Option(r.getAs[Any]("__l1_a"))).toSeq ==
@@ -114,8 +119,8 @@ class RangeWindowSpec extends SparkSpec {
 
   test("typed getters: integer and decimal value columns work without string decode") {
     val df = spark.createDataFrame(Seq((1L, 10), (2L, 20), (3L, 30))).toDF("i", "x")
-    val out = RangeWindow.slidingWindow(
-      TimeseriesFrame(df, None, Seq("i")), "x", Seq("sum", "max"), 2, 3)
+    val out = atP(3)(RangeWindow.slidingWindow(
+      TimeseriesFrame(df, None, Seq("i")), "x", Seq("sum", "max"), 2))
     assertSeqAlmost(col1(out, "x_sum"), d(10, 30, 50))
     assertSeqAlmost(col1(out, "x_max"), d(10, 20, 30))
   }

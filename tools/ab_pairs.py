@@ -21,7 +21,10 @@ parent's own spread (IQR / median) is inside that bound. A metric named by
 --claim is checked against the two claim rules: the change is better in at
 least 9 of 10 pairs, and the median gap is larger than the parent's IQR.
 The control gets the same check, so drift between two copies of one tree
-shows next to the claim.
+shows next to the claim. Last, it splits peak_mem_gb into its parts, read
+from each run's .bench_build/perfbench/out/<workload>-seed<N>-trace0/
+harness.json, and prints every tree's medians: the heap-after-GC peak, the
+native part (peak_rss_kb less the committed heap) and the GC count.
 """
 import argparse
 import json
@@ -33,6 +36,9 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TREES = ("parent", "change", "control")
+# the parts of peak_mem_gb (perfbench/run.py's peak_mem_bytes), per run
+MEM_PARTS = (("heap_after_gc_gb", "heap-after-GC peak GB"), ("native_gb", "native GB"),
+             ("collections", "GC collections"))
 
 
 def git(*args, **kw):
@@ -55,7 +61,8 @@ def export(rev, dest):
 
 
 def run(tree, workload, seed, seconds):
-    """One perfbench run; returns its last-line JSON, or None if it failed."""
+    """One perfbench run: its last-line JSON plus the parts of peak_mem_gb from
+    its harness.json (`mem_parts`), or None if it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True, timeout=1200)
@@ -63,7 +70,16 @@ def run(tree, workload, seed, seconds):
     if p.returncode != 0 or not lines:
         print(f"  run failed (exit {p.returncode}): {p.stderr.strip()[-300:]}", file=sys.stderr)
         return None
-    return json.loads(lines[-1])
+    res = json.loads(lines[-1])
+    harness = os.path.join(tree, ".bench_build", "perfbench", "out",
+                           f"{workload}-seed{seed}-trace0", "harness.json")
+    with open(harness) as f:
+        h = json.load(f)
+    res["mem_parts"] = {
+        "heap_after_gc_gb": float(h["heap_after_gc_peak_bytes"]) / 1e9,
+        "native_gb": (float(h["peak_rss_kb"]) * 1024 - float(h["heap_committed_bytes"])) / 1e9,
+        "collections": float(h["collections"])}
+    return res
 
 
 def quartiles(xs):
@@ -114,6 +130,13 @@ def summarize(workload, rounds, end_to_end, claim):
                          f"gap > parent IQR {'met' if c['claim_gap'] else 'NOT met'}")
             print(line)
         out[name] = res
+    if ok:
+        print("  peak_mem_gb parts (medians)")
+        out["mem_parts"] = {}
+        for t in TREES:
+            med = {k: statistics.median(r[t]["mem_parts"][k] for r in ok) for k, _ in MEM_PARTS}
+            print(f"    {t:<8} " + "  ".join(f"{label} {med[k]:.4g}" for k, label in MEM_PARTS))
+            out["mem_parts"][t] = med
     return out
 
 
