@@ -3524,14 +3524,15 @@ object SparkEntry {
         |  ELSE 'test' END AS split
         |FROM v WHERE keep""".stripMargin),
     GateQuery("q116_minhash_index_search", minhashIndexScreen, minhashAcrossSql),
-    // q116's build, batch and screen through the SLICED screen: a 2 MiB
-    // scratch bound (256 batch docs at `Dedup.ScreenScratchBytesPerDoc`)
-    // carves the batch into 2 id-hash slices at sf0.001 and sf0.01 (500
-    // docs) and 20 at sf0.1 (5,000), so the sliced path answers to
-    // q116's oracle at every gate SF.
+    // q116's build, batch and screen through the SLICED screen: a scratch
+    // bound of 400 batch docs carves the batch into 2 id-hash slices at
+    // sf0.001 and sf0.01 (500 docs) and 13 at sf0.1 (5,000), so the
+    // sliced path answers to q116's oracle at every gate SF. Each slice
+    // runs its own band join and rescore, so the query costs several
+    // times q116's at sf0.1.
     GateQuery("q134_minhash_index_search_chunked", (s, dir) =>
-      Dedup.screenBounds.withValue(Dedup.ScreenBounds(scratchBytes = 2L << 20))(
-        minhashIndexScreen(s, dir)),
+      Dedup.screenBounds.withValue(Dedup.ScreenBounds(
+        scratchBytes = 400 * Dedup.ScreenScratchBytesPerDoc))(minhashIndexScreen(s, dir)),
       minhashAcrossSql),
     GateQuery("q117_split_by_cluster", (s, dir) => {
       // leakage-safe train/val/test: the split key is the near-dup

@@ -820,7 +820,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q134 screens the gate's sf0.01 batch in slices: its job count is pinned") {
-    // 500 batch docs against q134's 2 MiB bound: 2 slices, each a band
+    // 500 batch docs against q134's 400-doc bound: 2 slices, each a band
     // join, a rescore and a checkpoint, plus the whole-batch flood cap
     val (rows, jobs) = gateRun("q134_minhash_index_search_chunked")
     assert(rows.nonEmpty)
