@@ -2430,9 +2430,9 @@ object SparkEntry {
          |FROM events
          |${winSql("6 PRECEDING")}""".stripMargin),
     GateQuery("q44_seq_blocks_rangepart", (s, dir) => {
-      // sequential blocks WITHOUT the global row_number WindowExec: sorted
-      // zipWithIndex block ids + the same hash aggregate; must reproduce
-      // q05's declarative semantics exactly (same oracle)
+      // sequential blocks WITHOUT the global row_number WindowExec: block
+      // ids from a RangeScan row index + the same hash aggregate; must
+      // reproduce q05's declarative semantics exactly (same oracle)
       val t = ev(s, dir)
       MovingTransform.sequentialBlocksRangePart(t,
           Seq("value_cents" -> "sum", "value" -> "min",
@@ -4017,8 +4017,8 @@ object SparkEntry {
       // budgeted best-first selection: rank docs by (n_chars DESC, id) —
       // an integral, engine-portable quality proxy — and keep while the
       // exclusive running token sum stays under the budget (the crossing
-      // doc is kept). The operator computes ranks/prefix sums via the
-      // zipWithIndex recipe; the oracle replays them as one window.
+      // doc is kept). The operator computes ranks/prefix sums with a
+      // RangeScan; the oracle replays them as one window.
       val d = tbl(s, dir, "documents").filter(col("text").isNotNull)
       val toks = d.select(col("doc_id"), col("n_chars"),
         TextFunctions.tokenCount(col("text")).as("tok"))
@@ -4505,8 +4505,8 @@ object SparkEntry {
       // sx = c·w div 9 — the resizePpmNearest index map), gray = channel
       // sum, 64 gradient bits.
       // Bit 63 cannot be `1::BIGINT << 63` (DuckDB raises on the overflow;
-      // the q19 sig replay never hits this because widenHash62 sigs are
-      // 62-bit) — it is added as the explicit two's-complement min-long
+      // the q19 sig replay never hits this because widenHash62All sigs
+      // are 62-bit) — it is added as the explicit two's-complement min-long
       // term, so the sum reproduces Spark's long bit pattern exactly.
       // pHash DCT replay: the cos table is the only non-integer input
       // (margin-checked, see the query comment); DCT runs as two staged

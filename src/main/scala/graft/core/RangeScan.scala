@@ -57,7 +57,10 @@ object RangeScan {
     * at 154 KB and slower from 231 KB on. The other callers cross later:
     * q120's budgeted selection between 555 KB and 1.4 MB, q26's ACF
     * between 2.8 and 5.7 MB, and keyless `TimeDelta.infer` on events and
-    * q118's shard shuffle still favour one partition at 2.8 and 11 MB. */
+    * q118's shard shuffle still favour one partition at 2.8 and 11 MB, as
+    * do q44's and q80's row index (`MovingTransform`) at ten copies,
+    * 1.1 MB and 884 KB (one partition / range, min of 14 runs: 157 / 192
+    * and 207 / 255 ms at one copy, 172 / 227 and 262 / 314 ms at ten). */
   final val SmallInputBytes: Long = 192L << 10
 
   /** The bound [[sorted]] applies; specs lower it to 0 to run the range

@@ -37,10 +37,6 @@ object Dedup {
   def normalizedKey(textCol: Column, nTokens: Int): Column =
     concat_ws(" ", slice(TextFunctions.tokensLower(textCol), 1, nTokens))
 
-  /** Universe prime for the affine minhash permutations: 2³¹−1. Also the
-    * "infinity" sentinel of an empty shingle set (all slot values < P). */
-  val MinhashPrime = 2147483647L
-
   /** Seeded affine-permutation params (a_j, b_j) — generated once on the
     * driver so BOTH engines (Spark expressions and the SQL oracle) use the
     * identical constants. */
@@ -50,10 +46,15 @@ object Dedup {
       rnd.nextInt(Int.MaxValue).toLong))
   }
 
-  /** MinHash signature: slot j = min over the document's shingle-hash set
-    * of `(a_j·h + b_j) mod P` — classic affine universal hashing over the
-    * [[graft.text.TextFunctions.shingleHashes]] base hashes. Pure integer
-    * expressions (cross-engine deterministic), evaluated in the scan stage.
+  /** MinHash signature, `array<int>`: slot j = min over the document's
+    * shingle-hash set of `(a_j·h + b_j) mod P` — classic affine universal
+    * hashing over the [[graft.text.TextFunctions.shingleHashes]] base
+    * hashes. Pure integer expressions (cross-engine deterministic),
+    * evaluated in the scan stage. The one signature format: each slot is
+    * computed in long and lies in (−2³¹, 2³¹−1] (the sentinel P is
+    * `Int.MaxValue`), so the int store is exact, and the band keys, the
+    * index store, the rescore exchanges and the streaming pair joins all
+    * read it directly, at 4 B per slot.
     *
     * Single fold over the shingles: the shingle subtree is evaluated ONCE
     * per row. The dual formulation — per-slot `array_min(transform(...))` —
@@ -63,18 +64,6 @@ object Dedup {
     * tokenizer pipeline run `numHashes` times per row: ~70× slower. */
   def minhashSignature(shingleHashes: Column, params: Seq[(Long, Long)]): Column =
     graft.functions.TextHash.minhashSig(shingleHashes, params)
-
-  /** [[minhashSignature]] narrowed to `array<int>` — the STORED signature
-    * form. Every slot lies in (−2³¹, 2³¹−1] (see
-    * [[graft.functions.TextHash.sigToInts]]), so the narrowing is
-    * lossless: slot equality, band keys and Jaccard estimates are
-    * bit-identical to the long form, at half the bytes per signature —
-    * in index RAM (the measured single-node ceiling driver at 100M docs:
-    * the signature store), on disk, and across every rescore exchange.
-    * Both expressions are codegen'd and fuse in the same scan-stage
-    * projection. */
-  def minhashSignatureInt(shingleHashes: Column, params: Seq[(Long, Long)]): Column =
-    graft.functions.TextHash.sigToInts(minhashSignature(shingleHashes, params))
 
   /** LSH band keys: the signature split into `bands` bands of `rowsPerBand`
     * slots, each band folded to one bucket key
@@ -90,13 +79,6 @@ object Dedup {
     * a null signature (spec-pinned). */
   def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
     graft.functions.TextHash.bandKeys(signature, bands, rowsPerBand)
-
-  /** The HOF twin of [[lshBandKeys]], kept for differential testing
-    * (interprets the fold lambda per band per slot). */
-  def lshBandKeysHof(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => aggregate(slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)),
-        b.cast("long"), (acc, s) => (acc * 31L + s) % MinhashPrime))
 
   /** MinHash+LSH candidate pairs: explode band keys, self-join per bucket.
     * Returns (id_a, id_b, est_jaccard) with id_a < id_b; `est_jaccard` is
@@ -291,7 +273,7 @@ object Dedup {
     def append(batch: DataFrame, idCol: String, textCol: String): MinhashIndex = {
       val params = minhashParams(numHashes)
       val newSigs = batch.select(col(idCol).as("id"),
-        minhashSignatureInt(shingleHashesOf(col(textCol)), params).as("sig"))
+        minhashSignature(shingleHashesOf(col(textCol)), params).as("sig"))
         .localCheckpoint(true)
       val newBandedRaw = newSigs.select(col("id"),
         explode(lshBandKeys(col("sig"), bands, numHashes / bands)).as("bucket"))
@@ -404,9 +386,9 @@ object Dedup {
       banded.write.mode("overwrite").parquet(s"$path/banded")
       counts.write.mode("overwrite").parquet(s"$path/counts")
       import spark.implicits._
-      // sig_format 2 = array<int> signatures (r13). Informational — load
-      // detects the actual on-disk element type from the sigs schema, so
-      // v1 saves (array<long>, no sig_format column) reload fine.
+      // sig_format 2 = array<int> signatures. Informational — load casts
+      // the sigs column to array<int>, so v1 saves (array<long>, no
+      // sig_format column) reload fine.
       Seq((numHashes, bands, maxBucket, 2)).toDF(
         "num_hashes", "bands", "max_bucket", "sig_format")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -417,29 +399,21 @@ object Dedup {
     * function the index was built with. The reloaded frames are plain
     * parquet scans — [[MinhashIndex.persist]] pins them as before.
     *
-    * Format upgrade: a v1 save stored signatures as `array<long>`; since
-    * r13 the live store is `array<int>` ([[minhashSignatureInt]]). The
-    * on-disk element type is detected from the sigs schema (not the meta
-    * row, so v1 saves without a `sig_format` column load unchanged) and
-    * v1 signatures are narrowed scan-stage on read — lossless, so the
-    * upgraded index screens/appends/saves exactly like a fresh build;
+    * Format upgrade: a v1 save stored signatures as `array<long>`; the
+    * live store is `array<int>` ([[minhashSignature]]). The scan
+    * projection casts the sigs column to `array<int>` — a no-op on a v2
+    * save, and exact on a v1 one, whose slots all lie in int range — so
+    * the upgraded index screens/appends/saves exactly like a fresh build;
     * re-[[MinhashIndex.save]] to persist it in v2 form. */
   def minhashIndexLoad(spark: org.apache.spark.sql.SparkSession, path: String,
       shingleHashesOf: Column => Column = TextFunctions.shingleHashes(_, 3))
       : MinhashIndex = {
     val meta = spark.read.parquet(s"$path/meta").head()
-    val rawSigs = spark.read.parquet(s"$path/sigs")
-    val sigsDf = rawSigs.schema("sig").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, _) =>
-        rawSigs.select(col("id"),
-          graft.functions.TextHash.sigToInts(col("sig")).as("sig"))
-      case _ => rawSigs
-    }
     MinhashIndex(
       meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"),
       meta.getAs[Long]("max_bucket"), shingleHashesOf,
-      sigsDf,
+      spark.read.parquet(s"$path/sigs")
+        .select(col("id"), col("sig").cast("array<int>").as("sig")),
       spark.read.parquet(s"$path/banded"),
       spark.read.parquet(s"$path/counts"))
   }
@@ -462,11 +436,10 @@ object Dedup {
     // table (measured: 947 MB/screen at 2M docs). Checkpoint blocks are
     // immune to that: the signature scan runs exactly once, at build.
     // Same non-resilience trade as minhashCandidates' sig checkpoint.
-    // STORED as array<int> (r13): signatures dominate index RAM (~26 GB
-    // at 100M docs measured), and sigToInts is lossless over the full
-    // slot domain — band keys and est_jaccard stay bit-identical while
-    // the store (and everything derived from it: save/load parquet,
-    // append/remove deltas, rescore payloads) halves.
+    // STORED as array<int>, the one signature format (4 B per slot):
+    // signatures dominate index RAM (~26 GB at 100M docs measured), and
+    // everything derived from the store — save/load parquet,
+    // append/remove deltas, rescore payloads — carries the same ints.
     // STORED SERIALIZED (r14, VERDICT task 4): the r13 50M probe
     // measured 376 B/doc against a 256 B signature payload — the gap is
     // per-row JVM object structure (UnsafeRow wrapper + byte-array
@@ -476,7 +449,7 @@ object Dedup {
     // pass, a scan-stage cost the rescore joins dominate anyway. Values
     // byte-identical either way — storage level only.
     val sigs = ref.select(col(idCol).as("id"),
-      minhashSignatureInt(shingleHashesOf(col(textCol)), params).as("sig"))
+      minhashSignature(shingleHashesOf(col(textCol)), params).as("sig"))
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val bandedRaw = sigs.select(col("id"),
@@ -538,14 +511,13 @@ object Dedup {
     val params = minhashParams(index.numHashes)
     // eager localCheckpoint: consumed twice (banding + the scoring join);
     // see the deadlock note in minhashCandidates for why eager.
-    // array<int> end-to-end: the index stores int signatures, and the
-    // batch side is narrowed in the same scan-stage projection, so the
-    // rescore compares int slots directly (bit-identical est_jaccard).
-    // The batch count rides the checkpoint's materializing job (RDD
-    // count — no aggregate, no shuffle).
+    // the batch signs into the index's one format (array<int>), so the
+    // rescore compares the stored slots directly. The batch count rides
+    // the checkpoint's materializing job (RDD count — no aggregate, no
+    // shuffle).
     val (bSigs, n) = Bridge.localCheckpointWithCount(
       batch.select(col(idCol).as("id"),
-        minhashSignatureInt(index.shingleHashesOf(col(textCol)), params)
+        minhashSignature(index.shingleHashesOf(col(textCol)), params)
           .as("sig")))
     val bandKeysOf = (sigs: DataFrame) => sigs.select(col("id"),
       explode(lshBandKeys(col("sig"), index.bands,
@@ -663,10 +635,8 @@ object Dedup {
     // Rescore payload (r12): the two attach-joins drag ONE signature per
     // CANDIDATE row through their exchanges — the dominant screen
     // shuffle (measured at 20M/2M-batch: ~4.5 of 5.4 GB; the band join
-    // itself is exchange-free on the index side). Signatures are
-    // array<int> end-to-end since r13 (stored int, batch narrowed at
-    // scan), halving the per-candidate payload; slotMatchCount compares
-    // int slots bit-exactly, so est_jaccard is unchanged.
+    // itself is exchange-free on the index side). Both sides carry the
+    // one signature format, array<int>: 4 B per slot per candidate row.
     //
     // Size-conditional broadcast (r13): when the pruned ref-sig slice is
     // small enough — nRefs·(id + numHashes ints + row overhead) under
@@ -712,15 +682,11 @@ object Dedup {
   def simhash(features: Column, bits: Int = 64): Column =
     simhashFromHashes(transform(features, f => xxhash64(f)), bits)
 
-  /** Widen a ~30-bit [[graft.text.TextFunctions.polyHash]]-derived value to
-    * 62 well-mixed bits with one Lehmer step — `h62 = ((h·48271) mod 2³¹−1)
-    * · 2³¹ + h`. Pure integer ops, reproducible in any SQL engine. */
-  def widenHash62(h: Column): Column =
-    ((h * 48271L) % MinhashPrime) * 2147483648L + h
-
-  /** [[widenHash62]] over every element of a hash array — native
-    * single-loop expression rather than a `transform` lambda
-    * ([[graft.functions.WidenHashes62Expr]]). */
+  /** Widen each ~30-bit [[graft.text.TextFunctions.polyHash]]-derived
+    * value of a hash array to 62 well-mixed bits with one Lehmer step —
+    * `h62 = ((h·48271) mod 2³¹−1)·2³¹ + h`. Pure integer ops, reproducible
+    * in any SQL engine; a native single-loop expression rather than a
+    * `transform` lambda ([[graft.functions.WidenHashes62Expr]]). */
   def widenHash62All(hashes: Column): Column =
     graft.functions.TextHash.widenHashes62(hashes)
 

@@ -28,7 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // simhash(hashes[, bits]) → BIGINT
     reg("graft_simhash", classOf[SimhashBitsExpr],
       exprs => SimhashBitsExpr(exprs.head, intArg(exprs, 1, 64)))
-    // minhash_sig(hashes[, numHashes]) → ARRAY<BIGINT>  (seeded params)
+    // minhash_sig(hashes[, numHashes]) → ARRAY<INT>  (seeded params)
     reg("graft_minhash_sig", classOf[MinhashSigExpr], { exprs =>
       val params = graft.dedup.Dedup.minhashParams(intArg(exprs, 1, 64))
       MinhashSigExpr(exprs.head, params.map(_._1), params.map(_._2))

@@ -30,6 +30,8 @@ object TextHash {
 
   val Mod: Long = 1000000007L
   val TokenCombine: Long = 1000003L
+  /** Universe prime of the affine MinHash permutations, 2³¹−1 — also the
+    * empty-set sentinel slot, `Int.MaxValue`. */
   val MinhashP: Long = 2147483647L
   // second, independent chain for the WIDE positional hashes (span
   // removal): ~10⁹ values saturate at ~10⁸ shingles (birthday), and a
@@ -99,25 +101,6 @@ object TextHash {
 
   def slotMatchCount(a: Column, b: Column): Column =
     Bridge.column(SlotMatchCountExpr(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Lossless `array<long>` → `array<int>` for minhash signatures: every
-    * slot is `min((a·h+b) mod p)` with p = 2³¹−1. The Java `%` takes the
-    * dividend's sign, and `a·h+b` can overflow Long for wide (62-bit)
-    * base hashes, so the slot domain is the FULL (−2³¹, 2³¹−1] — i.e.
-    * (−(p−1), p], with p = 2³¹−1 doubling as the empty-set sentinel.
-    * Every value in that range round-trips `toInt`/`toLong` exactly, so
-    * the narrowing is lossless and slot equality is preserved
-    * bit-for-bit (spec-pinned across the range ends in CodegenPathSpec).
-    * Halves the per-row signature payload (~568 B → ~300 B) both in the
-    * STORED index frames ([[graft.dedup.Dedup.minhashIndex]]) and on the
-    * candidate-bound rescore exchanges of
-    * [[graft.dedup.Dedup.minhashSearch]] — a native expression rather
-    * than a `transform(_, _.cast("int"))` HOF because the result feeds a
-    * join CONDITION, where alias substitution of a HOF column drops it
-    * to interpreted per-row eval (the documented Catalyst trap, see the
-    * r9 probe note). */
-  def sigToInts(sig: Column): Column =
-    Bridge.column(LongsToIntsExpr(Bridge.expression(sig)))
 
   def nfkc(c: Column): Column =
     Bridge.column(NfkcExpr(Bridge.expression(c)))
@@ -274,10 +257,14 @@ object TextHash {
   }
 
   /** [[MinhashSigExpr]] kernel: slot j = min over shingle hashes of
-    * `(a_j·h + b_j) mod 2³¹−1`; empty set → all-sentinel. */
+    * `(a_j·h + b_j) mod 2³¹−1`, computed in long and stored as int;
+    * empty set → all-sentinel. The store is exact: Java's `%` takes the
+    * dividend's sign and `a·h+b` can overflow Long for wide (62-bit)
+    * base hashes, so every slot lies in (−2³¹, 2³¹−1] — the sentinel
+    * 2³¹−1 is `Int.MaxValue` — a range `toInt` holds losslessly. */
   def minhashSigRow(arr: ArrayData, aArr: Array[Long], bArr: Array[Long]): ArrayData = {
     val k = aArr.length
-    val slots = Array.fill(k)(MinhashP)
+    val slots = Array.fill(k)(Int.MaxValue)
     var i = 0
     val nEl = arr.numElements()
     while (i < nEl) {
@@ -285,43 +272,20 @@ object TextHash {
       var j = 0
       while (j < k) {
         val v = (aArr(j) * h + bArr(j)) % MinhashP
-        if (v < slots(j)) slots(j) = v
+        if (v < slots(j)) slots(j) = v.toInt
         j += 1
       }
       i += 1
     }
-    new GenericArrayData(slots)
+    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(slots)
   }
 
   /** [[BandKeysExpr]] kernel: band b of the signature folded to one
     * bucket key, `key = fold(acc·31 + slot) mod P` seeded with the band
-    * index. Mirrors the HOF `transform(sequence, aggregate(slice ...))`
-    * exactly, including slices truncated by a short signature. */
-  def bandKeysRow(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
-    val nEl = sig.numElements()
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var acc = b.toLong
-      var j = b * rowsPerBand
-      val end = math.min(j + rowsPerBand, nEl)
-      while (j < end) {
-        acc = (acc * 31L + sig.getLong(j)) % MinhashP
-        j += 1
-      }
-      out(b) = acc
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** [[BandKeysExpr]] kernel for int-element signatures (the STORED
-    * index form since the `array<int>` migration). The fold promotes
-    * each slot back to its exact long value ([[sigToInts]] is lossless
-    * over the full slot domain), so band keys are BIT-IDENTICAL to the
-    * long-signature fold — an index built on int signatures bands its
-    * documents into exactly the buckets a long-signature build (and the
-    * SQL oracle's replay) produces. */
+    * index, each slot read as its exact long value. Mirrors the HOF
+    * `transform(sequence, aggregate(slice ...))` exactly, including
+    * slices truncated by a short signature, and the SQL oracle's replay
+    * of the same fold. */
   def bandKeysIntRow(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val nEl = sig.numElements()
     val out = new Array[Long](bands)
@@ -341,22 +305,9 @@ object TextHash {
   }
 
   /** [[SlotMatchCountExpr]] kernel: number of positions where the two
-    * long arrays agree. Counted over the shorter length — identical to
+    * signatures agree. Counted over the shorter length — identical to
     * the HOF `size(filter(zip_with(a, b, ==), eq => eq))`, whose
     * null-padded tail slots never satisfy the filter. */
-  def slotMatchCountRow(a: ArrayData, b: ArrayData): Int = {
-    val n = math.min(a.numElements(), b.numElements())
-    var c = 0
-    var i = 0
-    while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) c += 1
-      i += 1
-    }
-    c
-  }
-
-  /** [[SlotMatchCountExpr]] kernel for int-element signatures (the
-    * [[sigToInts]]-slimmed rescore path). */
   def slotMatchCountIntRow(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0
@@ -368,22 +319,9 @@ object TextHash {
     c
   }
 
-  /** [[LongsToIntsExpr]] kernel. Truncating `toInt` is exact here — every
-    * minhash slot lies in (−2³¹, 2³¹−1] (`%` takes the dividend's sign
-    * and `a·h+b` can overflow Long; 2³¹−1 is the empty-set sentinel), a
-    * range `toInt` round-trips losslessly. */
-  def longsToIntsRow(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) { out(i) = arr.getLong(i).toInt; i += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
-
   /** [[WidenHashes62Expr]] kernel: each ~30-bit hash widened to 62
     * well-mixed bits with one Lehmer step,
-    * `h62 = ((h·48271) mod 2³¹−1)·2³¹ + h` — the per-element op of
-    * [[graft.dedup.Dedup.widenHash62]]. */
+    * `h62 = ((h·48271) mod 2³¹−1)·2³¹ + h`. */
   def widenHashes62Row(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     val out = new Array[Long](n)
@@ -504,11 +442,13 @@ case class ShingleSpanHashesExpr(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-/** MinHash signature: slot j = min over shingle hashes of
-  * `(a_j·h + b_j) mod 2³¹−1`; empty set → all-sentinel (2³¹−1). */
+/** MinHash signature, `array<int>`: slot j = min over shingle hashes of
+  * `(a_j·h + b_j) mod 2³¹−1`; empty set → all-sentinel (2³¹−1). The one
+  * signature format of every consumer — band keys, slot matching, the
+  * index store and the streaming joins. */
 case class MinhashSigExpr(child: Expression, as: Seq[Long], bs: Seq[Long])
     extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   @transient private lazy val aArr = as.toArray
   @transient private lazy val bArr = bs.toArray
   override protected def nullSafeEval(input: Any): Any =
@@ -527,35 +467,22 @@ case class MinhashSigExpr(child: Expression, as: Seq[Long], bs: Seq[Long])
   * `rowsPerBand` slots, each folded to one bucket key (seeded with the
   * band index so identical folds in different bands land in different
   * key spaces). One loop per row instead of a `transform(sequence,
-  * aggregate(slice ...))` HOF tree interpreted per band per slot.
-  * Accepts both signature storage forms — `array<long>` (the
-  * computed-signature form) and `array<int>` (the STORED index form,
-  * [[TextHash.sigToInts]]-narrowed) — producing bit-identical bucket
-  * keys for both (the int kernel promotes each slot back to its exact
-  * long value before the fold). Any other child type fails analysis. */
+  * aggregate(slice ...))` HOF tree interpreted per band per slot. The
+  * child is an `array<int>` signature ([[MinhashSigExpr]]); any other
+  * type fails analysis. */
 case class BandKeysExpr(child: Expression, bands: Int, rowsPerBand: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  private def intElems: Boolean = child.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _ => false
-  }
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) | ArrayType(LongType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"BandKeysExpr requires array<int> or array<long> input, got $other")
+      s"BandKeysExpr requires array<int> input, got $other")
   }
   override protected def nullSafeEval(input: Any): Any =
-    if (intElems)
-      TextHash.bandKeysIntRow(input.asInstanceOf[ArrayData], bands, rowsPerBand)
-    else
-      TextHash.bandKeysRow(input.asInstanceOf[ArrayData], bands, rowsPerBand)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = if (intElems) "bandKeysIntRow" else "bandKeysRow"
+    TextHash.bandKeysIntRow(input.asInstanceOf[ArrayData], bands, rowsPerBand)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextHash.$kernel($c, $bands, $rowsPerBand)")
-  }
+      s"graft.functions.TextHash.bandKeysIntRow($c, $bands, $rowsPerBand)")
   override protected def withNewChildInternal(newChild: Expression): BandKeysExpr =
     copy(child = newChild)
 }
@@ -585,56 +512,29 @@ case class NfkcExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Number of agreeing slot positions between two signature arrays
-  * (minhash Jaccard estimate numerator). Both children must be arrays
-  * of the SAME element type — int (the STORED signature form since the
-  * `array<int>` migration) or long (the computed form) — enforced by
-  * [[checkInputDataTypes]]: a mixed int/long pair would otherwise read
-  * 4-byte halves of long slots via the int accessor and return wrong
-  * match counts silently. */
+/** Number of agreeing slot positions between two `array<int>`
+  * signatures (minhash Jaccard estimate numerator). Any other operand
+  * type fails analysis in [[checkInputDataTypes]] — an `array<long>`
+  * read through the int accessor would count 4-byte halves of its slots
+  * and return wrong match counts silently. */
 case class SlotMatchCountExpr(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = IntegerType
-  private def intElems: Boolean = left.dataType match {
-    case ArrayType(IntegerType, _) => true
-    case _ => false
-  }
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) |
-           (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        "SlotMatchCountExpr requires two arrays with the same element " +
-          s"type (both int or both long), got $l and $r")
+        s"SlotMatchCountExpr requires two array<int> signatures, got $l and $r")
     }
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    if (intElems)
-      TextHash.slotMatchCountIntRow(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    else
-      TextHash.slotMatchCountRow(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = if (intElems) "slotMatchCountIntRow" else "slotMatchCountRow"
+    TextHash.slotMatchCountIntRow(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.TextHash.$kernel($a, $b)")
-  }
+      s"graft.functions.TextHash.slotMatchCountIntRow($a, $b)")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SlotMatchCountExpr =
     copy(left = newLeft, right = newRight)
-}
-
-/** Lossless long→int per-element narrowing for minhash signatures — see
-  * [[TextHash.sigToInts]] for the contract and why this is a native
-  * expression rather than a `transform` HOF. */
-case class LongsToIntsExpr(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.longsToIntsRow(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.longsToIntsRow($c)")
-  override protected def withNewChildInternal(newChild: Expression): LongsToIntsExpr =
-    copy(child = newChild)
 }
 
 /** SimHash bit voting over precomputed feature hashes: bit k of the

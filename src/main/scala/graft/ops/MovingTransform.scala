@@ -158,25 +158,15 @@ object MovingTransform {
     }
   }
 
-  /** Range-partitioned sequential blocks — the single-series SCALE path.
-    *
-    * [[sequentialBlocks]] derives block ids from `row_number()` over an
-    * unpartitioned window, which at cluster scale funnels the whole series
-    * through one `WindowExec` partition. Block membership is just
-    * `floor(globalIndex / width)`, and a global index does not need a
-    * global window: a parallel range-partitioned sort (`orderBy`) followed
-    * by `zipWithIndex` (per-partition offsets from one lightweight count
-    * job) yields the same ids with every stage partition-parallel — the
-    * same escape hatch [[graft.spectral.Correlation.acfVectorDistributed]]
-    * and `RangeWindow` use for their families. Downstream is the identical
-    * hash aggregate (map-side partial) as the declarative form, so results
-    * match [[sequentialBlocks]] exactly (same oracle, gate q44).
-    */
-  /** Global row index without a global sort bottleneck: a parallel
-    * range-partitioned sort (`orderBy` plans a range exchange + per-
-    * partition sorts) followed by `zipWithIndex`, whose extra count job
-    * REUSES the exchange's shuffle files — the data is scanned and
-    * shuffled once, and every stage is partition-parallel.
+  /** Global row index `__gidx` in `orderCols` order, without a global
+    * sort bottleneck — a [[graft.core.RangeScan]]: `RangeScan.sorted`
+    * (one partition sorted in place below `SmallInputBytes`, otherwise a
+    * parallel range sort), per-partition row counts through
+    * `carriesLeft` (no job at one partition; otherwise one job that
+    * re-reads the sort's shuffle files), and a `withCarry` pass that
+    * numbers each partition's rows from its exclusive offset. Every stage
+    * is partition-parallel, and the pass appends `__gidx` to the sort's
+    * own Catalyst rows with a `JoinedRow`, so no row is decoded.
     *
     * Measured alternative (rejected): a pure-DataFrame two-branch plan —
     * `monotonically_increasing_id` for local positions plus a count-by-
@@ -184,30 +174,44 @@ object MovingTransform {
     * codegen but cannot share the exchange (the branches legitimately
     * prune to different scan schemas, so `ReuseExchange` never fires) and
     * scans + shuffles twice: 4.3s vs 2.7s here at 20M rows, and slower at
-    * 100k too. The index pass reads the sort's own Catalyst rows and
-    * appends `__gidx` with a `JoinedRow`, so no row is decoded. */
+    * 100k too.
+    *
+    * NO checkpoint on the sorted frame: a K=10 bench A/B measured a lazy
+    * localCheckpoint's block write+read costing more wall than the saved
+    * reduce-side re-sort at every measurable scale (q80 1.50 s without vs
+    * 1.66/1.87 s with, deser/ser; artifacts_r16/bench_scale10_ab_*.json).
+    * Consumers needing one consistent tie order across passes pin the
+    * INDEXED frame instead (stridedRangePartManaged's persist). */
   private def globallyIndexed(df: DataFrame, orderCols: Seq[Column]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{JoinedRow, SpecificInternalRow}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // NO checkpoint on the sorted frame (r16, VERDICT r15 task 7): the
-    // r15 lazy localCheckpoint was reverted after a K=10 bench A/B
-    // measured its block write+read costing more wall than the saved
-    // reduce-side re-sort at every measurable scale (q80 1.50 s without
-    // vs 1.66/1.87 s with, deser/ser; q42 0.87 vs 1.19/1.01 —
-    // artifacts_r16/bench_scale10_ab_*.json). Consumers needing one
-    // consistent tie order across passes pin the ZIPPED frame instead
-    // (stridedRangePartManaged's persist below) — the pre-r15 shape.
-    val sorted = df.orderBy(orderCols: _*)
-    val schema = StructType(sorted.schema.fields :+
-      StructField("__gidx", LongType, nullable = false))
-    val rdd = Bridge.catalystRows(sorted).zipWithIndex().mapPartitions { it =>
+    val sorted = RangeScan.sorted(df, orderCols: _*)
+    val rdd = Bridge.catalystRows(sorted)
+    val offsets = RangeScan.carriesLeft(rdd, 0L)(_.size.toLong)(_ + _)
+    val rows = RangeScan.withCarry(rdd, offsets) { (offset, it) =>
+      var i = offset
       val idx = new SpecificInternalRow(Seq(LongType))
       val out = new JoinedRow(null, idx)
-      it.map { case (r, i) => idx.setLong(0, i); out.withLeft(r) }
+      it.map { r => idx.setLong(0, i); i += 1; out.withLeft(r) }
     }
-    Bridge.fromCatalystRows(df.sparkSession, rdd, schema)
+    val schema = StructType(sorted.schema.fields :+
+      StructField("__gidx", LongType, nullable = false))
+    Bridge.fromCatalystRows(df.sparkSession, rows, schema)
   }
 
+  /** Range-partitioned sequential blocks — the single-series SCALE path.
+    *
+    * [[sequentialBlocks]] derives block ids from `row_number()` over an
+    * unpartitioned window, which at cluster scale funnels the whole series
+    * through one `WindowExec` partition. Block membership is just
+    * `floor(globalIndex / width)`, and a global index does not need a
+    * global window: [[globallyIndexed]] numbers the rows through a
+    * [[graft.core.RangeScan]] with every stage partition-parallel — the
+    * same escape hatch [[graft.spectral.Correlation.acfVectorDistributed]]
+    * and `RangeWindow` use for their families. Downstream is the identical
+    * hash aggregate (map-side partial) as the declarative form, so results
+    * match [[sequentialBlocks]] exactly (same oracle, gate q44).
+    */
   def sequentialBlocksRangePart(
       tsf: TimeseriesFrame,
       specs: Seq[(String, String)],
@@ -289,7 +293,7 @@ object MovingTransform {
     val orderNames = tsf.timeCol.toSeq ++ tsf.tieBreak
     val kept = (orderNames ++ specs.map(_._1)).distinct
     // restored with the r16 checkpoint revert: cumulative specs read the
-    // indexed frame TWICE (carry pass + fold pass), so the zipped rows
+    // indexed frame TWICE (carry pass + fold pass), so the indexed rows
     // are persisted to pin ONE consistent sort across both (the
     // lagColumnsManaged discipline); the caller's release handle unpins
     val indexed0 = globallyIndexed(tsf.df.select(kept.map(col): _*), tsf.orderCols)

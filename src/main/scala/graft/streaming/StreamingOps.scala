@@ -190,12 +190,10 @@ object StreamingOps {
         " — silent truncation would drop signature slots")
     val rowsPerBand = numHashes / bands
     val params = Dedup.minhashParams(numHashes)
-    // array<int> signatures (r13): halves the stream-stream join's state
-    // rows (each side's signature rides in the join state for the full
-    // watermark horizon); lossless, so band keys and est_jaccard are
-    // bit-identical to the long form
+    // the one signature format, array<int> (4 B per slot): each side's
+    // signature rides in the join state for the full watermark horizon
     def side(sfx: String): DataFrame = stream
-      .withColumn("__sig", Dedup.minhashSignatureInt(
+      .withColumn("__sig", Dedup.minhashSignature(
         TextFunctions.shingleHashes(col(textCol), 3), params))
       .select(explode(Dedup.lshBandKeys(col("__sig"), bands, rowsPerBand))
           .as(s"bucket$sfx"),
@@ -246,11 +244,10 @@ object StreamingOps {
       watermark: String = "1 hour"): DataFrame = {
     import graft.dedup.Dedup
     val params = Dedup.minhashParams(index.numHashes)
-    // array<int> stream-side signature, matching the index's stored form
-    // (SlotMatchCountExpr requires both rescore operands to share an
-    // element type — a long/int mismatch fails analysis loudly)
+    // the stream side signs into the index's one format, array<int>
+    // (SlotMatchCountExpr rejects any other operand type at analysis)
     val banded = stream
-      .withColumn("__sig", Dedup.minhashSignatureInt(
+      .withColumn("__sig", Dedup.minhashSignature(
         index.shingleHashesOf(col(textCol)), params))
       .select(
         explode(Dedup.lshBandKeys(col("__sig"), index.bands,

@@ -554,24 +554,6 @@ object TextFunctions {
   def shingleHashes(text: Column, n: Int): Column =
     graft.functions.TextHash.shingleHashes(text, n)
 
-  /** The composed higher-order-function formulation of [[shingleHashes]] —
-    * kept as the differential-test twin of the native expression (HOF
-    * lambdas interpret per element: ~20× slower on a corpus scan). */
-  def shingleHashesHof(text: Column, n: Int): Column = {
-    def polyHashHof(s: Column): Column =
-      aggregate(
-        transform(filter(split(s, ""), c => c =!= ""), c => ascii(c).cast("long")),
-        lit(0L),
-        (acc, c) => (acc * 31L + c) % 1000000007L)
-    val th = transform(tokensLower(text), polyHashHof(_))
-    val combined = (2 to n).foldLeft(th) { (acc, i) =>
-      zip_with(acc, slice(th, lit(i), greatest(size(th) - (i - 1), lit(1))),
-        (a, b) => (a * 1000003L + b) % 1000000007L)
-    }
-    // trailing n−1 slots zip against missing elements → null; drop them
-    array_distinct(filter(combined, h => h.isNotNull))
-  }
-
   /** Repetition signals for training-data quality filtering (the
     * word-level family of the Gopher/MassiveText repetition filters,
     * Rae et al. 2021 §A1.1): per document,

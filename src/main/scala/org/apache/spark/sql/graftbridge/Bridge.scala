@@ -79,12 +79,6 @@ object Bridge {
       .queryExecution.executedPlan)
       .collect { case s: ShuffleExchangeLike => s.shuffleId }.toSet
 
-  /** Registered shuffle ids (the map-output tracker's live set). */
-  def shuffleIds(sc: org.apache.spark.SparkContext): Set[Int] =
-    org.apache.spark.SparkEnv.get.mapOutputTracker
-      .asInstanceOf[org.apache.spark.MapOutputTrackerMaster]
-      .shuffleStatuses.keySet.toSet
-
   /** Eagerly unregister + delete the given shuffles' map outputs and
     * files — the disk-reclaim lever for BLOCK-MATERIALIZED frames whose
     * plan lineage pins their build shuffles' `ShuffleDependency`s
@@ -94,10 +88,10 @@ object Bridge {
     * later recompute (cache-block loss) hits `FetchFailed` and Spark
     * resubmits the parent map stages from the surviving lineage — the
     * cost is re-execution, never wrong data. Pass only shuffles your own
-    * plans wrote ([[shuffleIdsOf]]): a diff of [[shuffleIds]] around a
-    * materialization also takes the shuffles a concurrent query of the
-    * same context registered meanwhile, and that query then fails to
-    * fetch them. */
+    * plans wrote ([[shuffleIdsOf]]): a diff of the map-output tracker's
+    * registered ids around a materialization also takes the shuffles a
+    * concurrent query of the same context registered meanwhile, and that
+    * query then fails to fetch them. */
   def cleanupShuffles(sc: org.apache.spark.SparkContext,
       ids: Set[Int]): Unit =
     sc.cleaner.foreach(cl => ids.foreach(cl.doCleanupShuffle(_, blocking = true)))

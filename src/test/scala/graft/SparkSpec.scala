@@ -64,6 +64,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** [[atShufflePartitions]] for a `RangeScan` caller: at `p` >= 2 the
+    * small-input rule is off, so a small fixture takes the range sort of
+    * `RangeScan.sorted` into `p` and not its one-partition sort. */
+  def atRangePartitions[A](p: Int)(body: => A): A =
+    atShufflePartitions(p)(graft.core.RangeScan.smallInputBound.withValue(
+      if (p == 1) graft.core.RangeScan.SmallInputBytes else 0L)(body))
+
   def d(xs: Double*): Seq[Option[Double]] = xs.map(x => Some(x))
   val NA: Option[Double] = None
 

@@ -17,14 +17,6 @@ class RangeScanSpec extends SparkSpec {
 
   private val Ps = Seq(1, 2, 7, 32)
 
-  /** Run `body` with `p` shuffle partitions that AQE may not coalesce,
-    * so `orderBy` and the keyless TimeDelta path range-sort into `p`. At
-    * p >= 2 the small-input rule is off, so these small fixtures take the
-    * range path and not `RangeScan.sorted`'s one-partition sort. */
-  private def atP[A](p: Int)(body: => A): A =
-    atShufflePartitions(p)(RangeScan.smallInputBound.withValue(
-      if (p == 1) RangeScan.SmallInputBytes else 0L)(body))
-
   /** (t, k, x): time `t` repeats three times and `k` orders each tie
     * AGAINST the generating index; `x` is cents-like (exact sums) with
     * nulls. Rows arrive shuffled. */
@@ -56,7 +48,7 @@ class RangeScanSpec extends SparkSpec {
       val tsf = series(n, 5 + n)
       val twin = MovingTransform.slidingWindow(tsf, aggs.map("x" -> _), w,
         MovingTransform.KeepComplete)
-      val got = atP(p)(byKey(RangeWindow.slidingWindow(tsf, "x", aggs, w), aggs.map("x_" + _)))
+      val got = atRangePartitions(p)(byKey(RangeWindow.slidingWindow(tsf, "x", aggs, w), aggs.map("x_" + _)))
       val want = byKey(twin, aggs.map("x_" + _))
       assert(got.size == n && want.size == math.max(0, n - w + 1), s"n=$n P=$p w=$w")
       want.foreach { case (k, vs) =>
@@ -72,7 +64,7 @@ class RangeScanSpec extends SparkSpec {
       val tsf = series(n, 7 + n)
       val twin = (1 to lags).foldLeft(tsf.df) { (d, l) =>
         d.withColumn(s"g$l", lag(col("x"), l).over(tsf.window)) }
-      val (lagged, release) = atP(p)(RangeWindow.lagColumnsManaged(tsf.df, tsf.orderCols,
+      val (lagged, release) = atRangePartitions(p)(RangeWindow.lagColumnsManaged(tsf.df, tsf.orderCols,
         Seq("x"), lags))
       try {
         val got = byKey(lagged, (1 to lags).map(l => s"__l${l}_x"))
@@ -87,7 +79,7 @@ class RangeScanSpec extends SparkSpec {
     for (n <- Seq(20, 301); p <- Ps; (w, shift) <- Seq((4, 3), (9, 1))) {
       // values near 1 keep long products finite
       val tsf = series(n, 11 + n, r => 0.9 + r.nextInt(200) / 1000.0)
-      atP(p) {
+      atRangePartitions(p) {
         val (got, release) = MovingTransform.stridedRangePartManaged(tsf, specs, w, shift)
         try {
           val want = MovingTransform.strided(tsf, specs, w, shift)
@@ -114,7 +106,7 @@ class RangeScanSpec extends SparkSpec {
         .toDF("doc_id", "tok")
       def canon(d: DataFrame) =
         d.collect().map(r => (0 to 4).map(r.getLong).mkString(",")).sorted.toSeq
-      atP(p) {
+      atRangePartitions(p) {
         assert(canon(Packing.packSequences(docs, "doc_id", "tok", 256)) ==
           canon(Packing.packSequencesWindow(docs, "doc_id", "tok", 256)), s"n=$n P=$p")
       }
@@ -124,7 +116,7 @@ class RangeScanSpec extends SparkSpec {
   test("Correlation.acfVectorDistributed == acfVector, nulls included") {
     for (n <- Seq(20, 301); p <- Ps; maxLag <- Seq(0, 3, 12)) {
       val tsf = series(n, 13 + n)
-      atP(p) {
+      atRangePartitions(p) {
         val got = Correlation.acfVectorDistributed(tsf, "x", maxLag)
         val want = Correlation.acfVector(tsf, "x", maxLag)
         assert(got.length == want.length)
@@ -143,7 +135,7 @@ class RangeScanSpec extends SparkSpec {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(
         rnd.shuffle(ts.toList).map(t => Row(t, 0)), 3),
         StructType(Seq(StructField("t", LongType), StructField("g", IntegerType))))
-      atP(p) {
+      atRangePartitions(p) {
         assert(TimeDelta.infer(df, "t", Nil, cap) == TimeDelta.infer(df, "t", Seq("g"), cap),
           s"n=$n P=$p cap=$cap")
       }
@@ -175,7 +167,7 @@ class RangeScanSpec extends SparkSpec {
           .filter(col("cum_before") < budget)
         def canon(d: DataFrame) = d.select("doc_id", "payload", "rank", "cum_before")
           .collect().map(_.toSeq.mkString(",")).sorted.toSeq
-        atP(p) {
+        atRangePartitions(p) {
           val got = Sampling.selectByBudget(docs, "doc_id", "tok", "score", budget)
           assert(canon(got) == canon(want), s"n=$n P=$p budget=$budget")
         }
@@ -191,7 +183,7 @@ class RangeScanSpec extends SparkSpec {
         .withColumn("shard", col("__r") % 6).withColumn("pos", floor(col("__r") / 6))
       def canon(d: DataFrame) = d.select("doc_id", "payload", "shard", "pos")
         .collect().map(_.toSeq.mkString(",")).sorted.toSeq
-      atP(p) {
+      atRangePartitions(p) {
         assert(canon(Sampling.shuffleShards(docs, "doc_id", 6)) == canon(want), s"n=$n P=$p")
       }
     }

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.functions.HashTwins
 import graft.text.TextFunctions
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
@@ -63,11 +64,53 @@ class DedupSpec extends SparkSpec {
     assert(rows.get((1L, 3L)).forall(_ < 0.2))
   }
 
+  test("minhashSignature is array<int>; minhashCandidates ≡ a driver long-arithmetic replay") {
+    import spark.implicits._
+    // seeded corpus: random docs, each third one followed by a copy with
+    // one word changed, plus two empty-shingle docs (all-sentinel sigs)
+    val rnd = new scala.util.Random(20261020L)
+    val vocab = Array("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta",
+      "theta", "iota", "kappa", "lambda", "mu")
+    val base = (0L until 90L).flatMap { i =>
+      val words = Array.fill(12 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.length)))
+      val doc = (2 * i, words.mkString(" "))
+      if (i % 3 == 0) {
+        words(rnd.nextInt(words.length)) = "changed"
+        Seq(doc, (2 * i + 1, words.mkString(" ")))
+      } else Seq(doc)
+    } ++ Seq((1000L, "x y"), (1001L, "short"))
+    val corpus = base.toDF("doc_id", "text")
+    val params = Dedup.minhashParams(64)
+    assert(corpus.select(Dedup.minhashSignature(
+      TextFunctions.shingleHashes(col("text"), 3), params)).schema.head.dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.IntegerType, containsNull = false))
+    val got = Dedup.minhashCandidates(corpus, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // the replay: long slots, long band folds, candidate pairs per bucket
+    val p = graft.functions.TextHash.MinhashP
+    val sigs = corpus.select(col("doc_id"),
+      TextFunctions.shingleHashes(col("text"), 3)).collect()
+      .map(r => r.getLong(0) -> params.map { case (a, b) =>
+        r.getSeq[Long](1).foldLeft(p)((m, h) => math.min(m, (a * h + b) % p))
+      }).toMap
+    val buckets = sigs.toSeq.flatMap { case (id, sig) =>
+      (0 until 8).map(b => sig.slice(b * 8, b * 8 + 8)
+        .foldLeft(b.toLong)((acc, x) => (acc * 31L + x) % p) -> id)
+    }.groupBy(_._1).values.map(_.map(_._2).distinct)
+    val want = buckets.flatMap(ids => for (x <- ids; y <- ids if x < y) yield (x, y))
+      .toSet.map { (ab: (Long, Long)) =>
+        ab -> sigs(ab._1).zip(sigs(ab._2)).count(t => t._1 == t._2) / 64.0
+      }.toMap
+    assert(want.size >= 5 && want.get((1000L, 1001L)).contains(1.0), want.size.toString)
+    assert(got == want)
+  }
+
   test("simhash: near-duplicates within small Hamming distance, distinct texts far") {
     val sigs = docs.select(col("doc_id"),
       Dedup.simhashFromHashes(
         transform(TextFunctions.shingleHashes(col("text"), 2),
-          Dedup.widenHash62(_))).as("sig"))
+          HashTwins.widenHash62(_))).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(sigs(1L), sigs(2L)) <= 12,
@@ -111,7 +154,7 @@ class DedupSpec extends SparkSpec {
     val sigs = all.select(col("doc_id"),
       Dedup.simhashFromHashes(
         transform(TextFunctions.shingleHashes(col("text"), 2),
-          Dedup.widenHash62(_))).as("sig"))
+          HashTwins.widenHash62(_))).as("sig"))
     val got = Dedup.simhashCandidates(sigs, "doc_id", "sig",
         bandBits = 16, maxHamming = 63)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
@@ -354,7 +397,7 @@ class DedupSpec extends SparkSpec {
     val sigs = all.select(col("doc_id"),
       Dedup.simhashFromHashes(
         transform(TextFunctions.shingleHashes(col("text"), 2),
-          Dedup.widenHash62(_))).as("sig"))
+          HashTwins.widenHash62(_))).as("sig"))
     val capped = Dedup.simhashCandidates(sigs, "doc_id", "sig",
         maxHamming = 8, maxBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -366,7 +409,7 @@ class DedupSpec extends SparkSpec {
   test("native ShingleHashes expression ≡ the higher-order-function formulation") {
     val n = docs.select(
       TextFunctions.shingleHashes(col("text"), 3).as("a"),
-      TextFunctions.shingleHashesHof(col("text"), 3).as("b")).collect()
+      HashTwins.shingleHashesHof(col("text"), 3).as("b")).collect()
     n.foreach { r =>
       assert(r.getSeq[Long](0).sorted == r.getSeq[Long](1).sorted, r.toString)
     }
@@ -724,7 +767,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhashSearch chunked barrier mode: slice shuffles reclaimed, result identical") {
     import spark.implicits._
-    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.graftbridge.ShuffleRegistry
     // the sliced screen reclaims the shuffles each slice's own plans
     // wrote. Forced here at gate scale by a
     // 7-doc bound (30 docs → 5 slices); the invariant is total — the
@@ -746,9 +789,9 @@ class DedupSpec extends SparkSpec {
     val oneShot = collectSorted(
       Dedup.minhashSearch(idx, batch, "doc_id", "text"))
     assert(oneShot.nonEmpty)
-    val before = Bridge.shuffleIds(sc)
+    val before = ShuffleRegistry.shuffleIds(sc)
     val chunkedDf = slicedAt(7L)(Dedup.minhashSearch(idx, batch, "doc_id", "text"))
-    val leftover = Bridge.shuffleIds(sc) -- before
+    val leftover = ShuffleRegistry.shuffleIds(sc) -- before
     assert(leftover.isEmpty,
       s"barrier-mode chunked screen left registered shuffles: $leftover")
     assert(collectSorted(chunkedDf) == oneShot,
@@ -758,7 +801,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhashSearch sliced screen leaves a concurrent query's shuffle registered") {
     import spark.implicits._
-    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.graftbridge.ShuffleRegistry
     // another query of the same context registers a shuffle WHILE the
     // sliced screen runs. The index's banded side holds its first reader
     // (a task of slice 0's band join) until that shuffle is registered,
@@ -801,7 +844,7 @@ class DedupSpec extends SparkSpec {
     assert(other.get != null, "the other query never ran inside the screen")
     val otherId = other.get.dependencies.head
       .asInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]].shuffleId
-    assert(Bridge.shuffleIds(sc).contains(otherId),
+    assert(ShuffleRegistry.shuffleIds(sc).contains(otherId),
       s"the sliced screen deleted shuffle $otherId of another query")
     assert(other.get.collect().toMap == (1 to 20).groupBy(_ % 3)
       .map { case (k, v) => k -> v.sum })

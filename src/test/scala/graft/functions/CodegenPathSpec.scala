@@ -90,82 +90,57 @@ class CodegenPathSpec extends SparkSpec {
   test("band keys / slot match / l2sq / arrayDiv: native ≡ HOF twin, codegen ≡ interpreted") {
     import graft.dedup.Dedup
     import spark.implicits._
-    // signatures incl. a short one (truncated last band) and equal arrays
+    // array<int> signatures over the FULL slot domain (−2³¹, 2³¹−1]:
+    // negative slots arise when a·h+b overflows Long for wide base hashes
+    // ("%" takes the dividend's sign), and 2³¹−1 (= MinhashP =
+    // Int.MaxValue) is the empty-set sentinel. Rows: distinct and equal
+    // arrays, a short left side (truncated last band), the range ends,
+    // and rows mixing them.
+    val sentinel = Int.MaxValue
+    assert(sentinel.toLong == TextHash.MinhashP)
+    val negMin = -(sentinel - 1) // the most negative slot, −(2³¹−2)
     val sigs = Seq(
-      (1L, (1L to 64L).toArray, (1L to 64L).map(x => if (x % 3 == 0) x else x + 1).toArray),
-      (2L, Array.fill(64L.toInt)(7L), Array.fill(64)(7L)),
-      (3L, (1L to 60L).toArray, (1L to 64L).toArray) // short left side
+      (1L, (1 to 64).toArray, (1 to 64).map(x => if (x % 3 == 0) x else x + 1).toArray),
+      (2L, Array.fill(64)(7), Array.fill(64)(7)),
+      (3L, (1 to 60).toArray, (1 to 64).toArray), // short left side
+      (4L, Array.fill(64)(sentinel), Array.fill(64)(sentinel)),
+      (5L, Array.fill(64)(sentinel - 1), Array.fill(64)(sentinel - 1)),
+      (6L, Array.fill(64)(negMin), Array.fill(64)(negMin)),
+      (7L, Array.tabulate(64)(i => if (i % 2 == 0) negMin else sentinel),
+        Array.tabulate(64)(i => if (i % 3 == 0) negMin else sentinel)),
+      (8L, Array.tabulate(64)(i => Seq(negMin, -1, 0, 1, sentinel)(i % 5)),
+        Array.tabulate(64)(i => Seq(negMin, 0, sentinel)(i % 3)))
     ).toDF("id", "sig_a", "sig_b")
     def native = sigs.select(col("id"),
       Dedup.lshBandKeys(col("sig_a"), 8, 8).as("bk"),
       graft.functions.TextHash.slotMatchCount(col("sig_a"), col("sig_b")).as("mc"))
     val hof = sigs.select(col("id"),
-      Dedup.lshBandKeysHof(col("sig_a"), 8, 8).as("bk"),
+      HashTwins.lshBandKeysHof(col("sig_a"), 8, 8).as("bk"),
       (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
         eq => eq))).as("mc"))
     assert(native.collect().map(_.toString).toSeq ==
       hof.collect().map(_.toString).toSeq)
+    assert(native.schema("mc").dataType.typeName == "integer")
     bothPaths(native)
 
-    // int-stored signature path (r12 rescore, r13 full store): sigToInts
-    // is lossless over the FULL slot domain (−2³¹, 2³¹−1] — negative
-    // slots arise when a·h+b overflows Long for wide base hashes ("%"
-    // takes the dividend's sign), and 2³¹−1 (= MinhashPrime) is the
-    // empty-set sentinel — and slotMatchCount over the narrowed arrays
-    // counts the SAME matches as over the original longs. The stored
-    // index and the minhashSearch scoring exchanges rely on this exactly.
-    val sentinel = graft.dedup.Dedup.MinhashPrime // 2³¹−1, = Int.MaxValue
-    val negMin = -(graft.dedup.Dedup.MinhashPrime - 1) // most negative slot
-    val wide = Seq(
-      (1L, (1L to 64L).toArray, (1L to 64L).map(x => if (x % 3 == 0) x else x + 1).toArray),
-      (2L, Array.fill(64)(sentinel - 1), Array.fill(64)(sentinel - 1)),
-      (3L, (1L to 60L).toArray, (1L to 64L).toArray),
-      // range ends: empty-set sentinel slots and the most negative slot
-      (4L, Array.fill(64)(sentinel), Array.fill(64)(sentinel)),
-      (5L, Array.tabulate(64)(i => if (i % 2 == 0) negMin else sentinel),
-        Array.tabulate(64)(i => if (i % 3 == 0) negMin else sentinel)),
-      (6L, Array.fill(64)(negMin), Array.fill(64)(negMin))
-    ).toDF("id", "sig_a", "sig_b")
-    def intPath = wide.select(col("id"),
-      graft.functions.TextHash.slotMatchCount(
-        graft.functions.TextHash.sigToInts(col("sig_a")),
-        graft.functions.TextHash.sigToInts(col("sig_b"))).as("mc"))
-    val longPath = wide.select(col("id"),
-      graft.functions.TextHash.slotMatchCount(col("sig_a"), col("sig_b")).as("mc"))
-    assert(intPath.collect().map(_.toString).toSeq ==
-      longPath.collect().map(_.toString).toSeq)
-    assert(intPath.schema("mc").dataType.typeName == "integer")
-    bothPaths(intPath)
-
-    // band keys over the int-stored form ≡ over the long form, across the
-    // same full slot domain (the index's banded store is derived from int
-    // signatures since r13 — bucket keys must be bit-identical)
-    def bkInt = wide.select(col("id"),
-      Dedup.lshBandKeys(
-        graft.functions.TextHash.sigToInts(col("sig_a")), 8, 8).as("bk"))
-    val bkLong = wide.select(col("id"),
-      Dedup.lshBandKeys(col("sig_a"), 8, 8).as("bk"))
-    assert(bkInt.collect().map(_.toString).toSeq ==
-      bkLong.collect().map(_.toString).toSeq)
-    bothPaths(bkInt)
-
-    // mixed int/long operands fail ANALYSIS (not silent 4-byte misreads):
-    // SlotMatchCountExpr.checkInputDataTypes rejects the pair
-    val mixed = intercept[org.apache.spark.sql.AnalysisException] {
-      wide.select(graft.functions.TextHash.slotMatchCount(
-        graft.functions.TextHash.sigToInts(col("sig_a")), col("sig_b")))
-        .collect()
-    }
-    assert(mixed.getMessage.toLowerCase.contains("slotmatchcount") ||
-      mixed.getMessage.toLowerCase.contains("same element"),
-      mixed.getMessage)
-    // and BandKeysExpr rejects non-int/long element types
-    val badBk = intercept[org.apache.spark.sql.AnalysisException] {
-      Seq((1L, Array("a", "b"))).toDF("id", "s")
-        .select(Dedup.lshBandKeys(col("s"), 1, 2)).collect()
-    }
-    assert(badBk.getMessage.toLowerCase.contains("bandkeys") ||
-      badBk.getMessage.toLowerCase.contains("array<int>"), badBk.getMessage)
+    // any other operand type fails ANALYSIS by name (not a silent
+    // 4-byte misread of long slots): long, mixed int/long, string
+    val wide = sigs.select(col("id"), col("sig_a"),
+      col("sig_b").cast("array<bigint>").as("sig_l"))
+    def analysisError(q: => org.apache.spark.sql.DataFrame): String =
+      intercept[org.apache.spark.sql.AnalysisException](q.collect()).getMessage
+        .toLowerCase
+    val mixed = analysisError(wide.select(
+      graft.functions.TextHash.slotMatchCount(col("sig_a"), col("sig_l"))))
+    assert(mixed.contains("slotmatchcountexpr"), mixed)
+    val longPair = analysisError(wide.select(
+      graft.functions.TextHash.slotMatchCount(col("sig_l"), col("sig_l"))))
+    assert(longPair.contains("slotmatchcountexpr"), longPair)
+    val longBk = analysisError(wide.select(Dedup.lshBandKeys(col("sig_l"), 8, 8)))
+    assert(longBk.contains("bandkeysexpr"), longBk)
+    val badBk = analysisError(Seq((1L, Array("a", "b"))).toDF("id", "s")
+      .select(Dedup.lshBandKeys(col("s"), 1, 2)))
+    assert(badBk.contains("bandkeysexpr"), badBk)
 
     val vecs = Seq(
       (1L, Array(1.0, 2.0, 3.0), Array(0.5, -1.5, 2.0), 2.0),
@@ -182,10 +157,12 @@ class CodegenPathSpec extends SparkSpec {
       vHof.collect().map(_.toString).toSeq)
     bothPaths(vNative)
 
-    def wNative = sigs.select(col("id"),
-      Dedup.widenHash62All(col("sig_a")).as("w"))
-    val wHof = sigs.select(col("id"),
-      transform(col("sig_a"), Dedup.widenHash62(_)).as("w"))
+    val hashes = Seq((1L, (1L to 64L).toArray), (2L, Array.fill(64)(7L)),
+      (3L, Array(0L, 999999999L, 1000000006L))).toDF("id", "h")
+    def wNative = hashes.select(col("id"),
+      Dedup.widenHash62All(col("h")).as("w"))
+    val wHof = hashes.select(col("id"),
+      transform(col("h"), HashTwins.widenHash62(_)).as("w"))
     assert(wNative.collect().map(_.toString).toSeq ==
       wHof.collect().map(_.toString).toSeq)
     bothPaths(wNative)
@@ -289,12 +266,12 @@ class CodegenPathSpec extends SparkSpec {
         4, 4).as("bk"))
     val hof = docs.select(col("id"),
       filter(split(col("text"), "\\s+"), t => t =!= "").as("toks"),
-      TextFunctions.shingleHashesHof(col("text"), 2).as("sh"),
-      transform(TextFunctions.shingleHashesHof(col("text"), 2),
-        Dedup.widenHash62(_)).as("wide"),
-      Dedup.minhashSignature(TextFunctions.shingleHashesHof(col("text"), 2), params).as("sig"),
-      Dedup.lshBandKeysHof(
-        Dedup.minhashSignature(TextFunctions.shingleHashesHof(col("text"), 2), params),
+      HashTwins.shingleHashesHof(col("text"), 2).as("sh"),
+      transform(HashTwins.shingleHashesHof(col("text"), 2),
+        HashTwins.widenHash62(_)).as("wide"),
+      Dedup.minhashSignature(HashTwins.shingleHashesHof(col("text"), 2), params).as("sig"),
+      HashTwins.lshBandKeysHof(
+        Dedup.minhashSignature(HashTwins.shingleHashesHof(col("text"), 2), params),
         4, 4).as("bk"))
     // null text: the bk column DIVERGES by representation — native is
     // null (null-intolerant), the HOF twin is an array of nulls (its
